@@ -9,6 +9,8 @@ streaming variants) and writers with batch semantics.
 
 from __future__ import annotations
 
+import datetime as _dt
+import time as _time
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -173,6 +175,129 @@ def zorder_key(cols: list[Column], bits: int = 12) -> Column:
     return key
 
 
+_ZORDER_INTS = frozenset({"bigint", "int", "smallint", "tinyint"})
+_EPOCH = _dt.datetime(1970, 1, 1)
+
+
+def _zorder_num(c: str, dtype: str | None) -> Column:
+    """Order-preserving double surrogate of column ``c``: Morton
+    interleave needs ranks, not raw values. Numerics cast, dates
+    become ``unix_date`` day counts, timestamps ``unix_micros``."""
+    if dtype is None:
+        raise ValueError(f"zorder column {c!r} not in schema")
+    if dtype.startswith("timestamp"):
+        return F.unix_micros(F.col(c).cast("timestamp")).cast("double")
+    if dtype == "date":
+        return F.unix_date(F.col(c)).cast("double")
+    if dtype in ("string", "binary", "boolean") or dtype.startswith(
+        ("array", "map", "struct")
+    ):
+        raise ValueError(
+            f"zorder column {c!r}: non-orderable-numeric type {dtype}; "
+            "derive a numeric rank column upstream (e.g. a dictionary "
+            "code) and cluster on that"
+        )
+    return F.col(c).cast("double")
+
+
+def zorder_sort_key(
+    df: DataFrame,
+    cols: list[str],
+    dtypes: dict[str, str],
+    bounds: dict[str, tuple] | None,
+    bits: int = 12,
+) -> Column:
+    """The z-order sort key of every layout writer (``write_zordered``,
+    MTable's ``optimize_zorder[_incremental]``, ``optimize_delta``):
+    each column's surrogate (:func:`_zorder_num`) is min/max-scaled
+    to ``bits``-bit rank space, clamped, and Morton-interleaved by
+    :func:`zorder_key`. ``bounds`` maps each column to its surrogate
+    ``(min, max)`` — from :func:`fold_zorder_bounds` or a caller's
+    own estimate (values outside clamp, a ``None`` side means
+    unknown); ``None`` runs one min/max aggregate over ``df``
+    instead. Nulls sort with the minimum."""
+    nums = {c: _zorder_num(c, dtypes.get(c)) for c in cols}
+    if bounds is None:
+        row = df.agg(
+            *[F.min(nums[c]).alias(f"mn_{c}") for c in cols],
+            *[F.max(nums[c]).alias(f"mx_{c}") for c in cols],
+        ).first()
+        bounds = {c: (row[f"mn_{c}"], row[f"mx_{c}"]) for c in cols}
+    top = (1 << bits) - 1
+    norm = []
+    for c in cols:
+        lo, hi = bounds[c]
+        lo = 0.0 if lo is None else lo
+        span = (hi - lo) if hi is not None and hi > lo else 1.0
+        scaled = F.floor(
+            (F.coalesce(nums[c], F.lit(lo)) - F.lit(lo)) * (top / span)
+        )
+        norm.append(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)))
+    return zorder_key(norm, bits)
+
+
+def zorder_stat_num(v, dtype: str | None) -> float | None:
+    """One metadata stat value as its :func:`_zorder_num` surrogate,
+    or None when it does not convert exactly: integers pass through,
+    ISO dates become day counts, naive ISO timestamps become micros
+    read as UTC (an offset-aware string refuses: subtracting it from
+    the naive epoch raises TypeError), other numbers become floats."""
+    try:
+        if dtype == "date":
+            return float((_dt.date.fromisoformat(v) - _EPOCH.date()).days)
+        if dtype in ("timestamp", "timestamp_ntz"):
+            td = _dt.datetime.fromisoformat(v) - _EPOCH
+            return float(td // _dt.timedelta(microseconds=1))
+        if dtype in _ZORDER_INTS:
+            return float(v) if type(v) is int else None
+        return None if isinstance(v, bool) else float(v)
+    except (TypeError, ValueError, OverflowError):
+        return None
+
+
+def fold_zorder_bounds(
+    spark: SparkSession,
+    cols: list[str],
+    dtypes: dict[str, str],
+    files: Iterable[dict | None],
+) -> dict[str, tuple[float, float]] | None:
+    """Global surrogate ``(min, max)`` per column for
+    :func:`zorder_sort_key`, folded on the driver from per-file
+    metadata instead of a full-table aggregate. ``files`` yields each
+    file's ``{col: (min, max)}`` as its format recorded them, or None
+    for a file whose metadata cannot vouch for its live rows (a
+    format's extractor decides: deletes not reflected in the stats,
+    lossy stats).
+
+    Returns None — caller scans — unless the fold provably equals the
+    scan: every column an integer (JSON round-trips exactly; the
+    min of casts is the cast of the min), a date, or a timestamp
+    whose naive stat strings were rendered in UTC (UTC session and
+    UTC driver clock — collected Rows render in the OS zone); every
+    file vouched for; every stat present and exactly convertible.
+    Floats refuse: their rendered form is not provably exact."""
+    exact = set(_ZORDER_INTS) | {"date"}
+    if spark.conf.get("spark.sql.session.timeZone", "") == "UTC" and (
+        _time.timezone == 0 and not _time.daylight
+    ):
+        exact |= {"timestamp", "timestamp_ntz"}
+    if any(dtypes.get(c) not in exact for c in cols):
+        return None
+    out: dict[str, tuple[float, float]] = {}
+    for f in files:
+        if f is None:
+            return None
+        for c in cols:
+            mn, mx = (
+                zorder_stat_num(v, dtypes[c]) for v in f.get(c, (None, None))
+            )
+            if mn is None or mx is None:
+                return None
+            lo, hi = out.get(c, (mn, mx))
+            out[c] = (min(lo, mn), max(hi, mx))
+    return out or None
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -181,29 +306,18 @@ def write_zordered(
     n_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Multi-dimensional data clustering: normalize each cluster
-    column to ``bits``-bit rank space (min/max scaling — one tiny agg
-    to the driver), Morton-interleave into a Z-order key, then
-    range-partition + sort by it. Unlike :func:`write_sorted` (tight
-    stats on ONE leading column), every clustered column gets
-    selective parquet min/max stats, so scans filtered on ANY of them
-    skip files/row groups. This is the layout side of
-    Delta/Iceberg-style OPTIMIZE ZORDER BY, done with plain exprs."""
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
-    ).first()
-    top = (1 << bits) - 1
-    norm = []
-    for c in cols:
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        span = (mx - mn) if (mn is not None and mx is not None and mx > mn) else 1.0
-        scaled = F.floor(
-            (F.coalesce(F.col(c).cast("double"), F.lit(mn or 0.0)) - F.lit(mn or 0.0))
-            * (top / span)
-        )
-        norm.append(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)))
-    keyed = df.withColumn("_zkey", zorder_key(norm, bits))
+    """Multi-dimensional data clustering: range-partition + sort by
+    the Z-order key of :func:`zorder_sort_key` (each column
+    rank-normalized from one tiny min/max agg to the driver; dates
+    rank by ``unix_date``, timestamps by ``unix_micros`` — the units
+    every z-order writer shares). Unlike
+    :func:`write_sorted` (tight stats on ONE leading column), every
+    clustered column gets selective parquet min/max stats, so scans
+    filtered on ANY of them skip files/row groups. This is the
+    layout side of Delta/Iceberg-style OPTIMIZE ZORDER BY, done with
+    plain exprs."""
+    zk = zorder_sort_key(df, cols, dict(df.dtypes), None, bits)
+    keyed = df.withColumn("_zkey", zk)
     parted = (
         keyed.repartitionByRange(n_files, "_zkey")
         if n_files is not None

@@ -4374,54 +4374,30 @@ def _snapshot_schema_mapping(
     return types, list(meta.get("partitionColumns") or []), phys, mode
 
 
-def _zorder_stats_from_log(
+def _zorder_log_bounds(
     chosen: dict,
-    zorder_by: list[str],
+    cols: list[str],
     dtypes: dict[str, str],
-    phys_by_logical: dict[str, str],
-) -> dict | None:
-    """Global min/max for the z-order normalization, folded from the
-    chosen files' own ``add.stats`` — the log already carries exact
-    per-file min/max, so the dedicated stats scan is pure re-reading
-    (guide §1.2). Only taken when it is provably identical to the
-    scan: integer columns (JSON numbers round-trip exactly; the
-    cast-to-double of the global min equals the min of casts by
-    monotonicity) and no deletion vectors on any chosen file (DV'd
-    rows are dropped by the rewrite scan but INCLUDED in file stats,
-    which could widen the span). Anything else → None → scan."""
-    ints = {"bigint", "int", "smallint", "tinyint"}
-    if any(dtypes.get(c) not in ints for c in zorder_by):
-        return None
-    out: dict[str, float] = {}
-    phys = {c: phys_by_logical.get(c, c) for c in zorder_by}
+    phys: dict[str, str],
+):
+    """Per-file stats of the chosen adds for
+    :func:`sources.fold_zorder_bounds`, read from each ``add.stats``
+    (keyed by physical name). None for a file the log cannot vouch
+    for: a deletion vector (stats still count the dead rows), missing
+    stats, and any file when a column is a timestamp
+    (log stats are millisecond-truncated, the sort key uses micros)."""
+    lossy = any(dtypes.get(c, "").startswith("timestamp") for c in cols)
     for a in chosen.values():
-        if a.get("deletionVector"):
-            return None
         raw = a.get("stats")
-        if not raw:
-            return None
         try:
             st = json.loads(raw) if isinstance(raw, str) else dict(raw)
         except (TypeError, ValueError):
-            return None
-        for c in zorder_by:
-            mn = (st.get("minValues") or {}).get(phys[c])
-            mx = (st.get("maxValues") or {}).get(phys[c])
-            if (
-                not isinstance(mn, int)
-                or not isinstance(mx, int)
-                or isinstance(mn, bool)
-                or isinstance(mx, bool)
-            ):
-                return None
-            k_mn, k_mx = f"mn_{c}", f"mx_{c}"
-            if k_mn not in out or mn < out[k_mn]:
-                out[k_mn] = mn
-            if k_mx not in out or mx > out[k_mx]:
-                out[k_mx] = mx
-    if not out:
-        return None
-    return {k: float(v) for k, v in out.items()}
+            st = None
+        if lossy or a.get("deletionVector") or not st:
+            yield None
+            continue
+        lo, hi = st.get("minValues") or {}, st.get("maxValues") or {}
+        yield {c: (lo.get(phys[c]), hi.get(phys[c])) for c in cols}
 
 
 def optimize_delta(
@@ -4440,8 +4416,10 @@ def optimize_delta(
       scan-cost killer at 100 TB (file count drives task count and
       footer overhead);
     - **ZORDER BY** (``zorder_by=[cols]``): rewrites ALL live files
-      clustered on the Morton interleave of the given columns
-      (rank-normalized to 12-bit space, pure bitwise Column exprs) —
+      clustered on :func:`sources.zorder_sort_key` of the given
+      columns (bounds folded from the chosen files' ``add.stats`` by
+      :func:`sources.fold_zorder_bounds` when they provably equal
+      the scan, else one min/max agg) —
       every clustered column's per-file [min,max] becomes a tight
       hypercube face, so ``skip_where``-style stats pruning answers
       conjunctions on ANY clustered column, not just the write
@@ -4455,7 +4433,7 @@ def optimize_delta(
     ``(version, {"files_removed": r, "files_added": a})``; nothing
     to do → no commit. ``n_files`` overrides the size-derived file
     count (explicit layout control; tests pin skipping with it)."""
-    from dataflowex_spark.sources import zorder_key
+    from dataflowex_spark.sources import fold_zorder_bounds, zorder_sort_key
 
     while True:
         meta, adds = _snapshot(spark, dest, None)
@@ -4539,83 +4517,25 @@ def optimize_delta(
         total = sum(int(a.get("size") or 0) for a in chosen.values())
         if n_files is None:
             n_files = max(1, -(-total // target))
+        phys_by_logical = {
+            f.name: (_physical_name(f) if mode == "name" else f.name)
+            for f in schema.fields
+        }
         if zorder_by:
-            for c in zorder_by:
-                if c not in dtypes:
-                    raise ValueError(f"zorder column {c!r} not in schema")
-                if dtypes[c] not in (
-                    "bigint", "int", "smallint", "tinyint",
-                    "double", "float", "date", "timestamp",
-                    "timestamp_ntz",
-                ):
-                    raise ValueError(
-                        f"zorder column {c!r}: non-orderable-numeric "
-                        f"type {dtypes[c]}; derive a numeric rank "
-                        "upstream"
-                    )
-
-            def as_num(c):
-                dt = dtypes[c]
-                if dt.startswith("timestamp"):
-                    return F.unix_micros(
-                        F.col(c).cast("timestamp")
-                    ).cast("double")
-                if dt == "date":
-                    return F.unix_date(F.col(c)).cast("double")
-                return F.col(c).cast("double")
-
-            bits = 12
-            stats = _zorder_stats_from_log(
-                chosen,
+            bounds = fold_zorder_bounds(
+                spark,
                 zorder_by,
                 dtypes,
-                {
-                    f.name: (
-                        _physical_name(f) if mode == "name" else f.name
-                    )
-                    for f in schema.fields
-                },
+                _zorder_log_bounds(
+                    chosen, zorder_by, dtypes, phys_by_logical
+                ),
             )
-            if stats is None:
-                stats = rows.agg(
-                    *[
-                        F.min(as_num(c)).alias(f"mn_{c}")
-                        for c in zorder_by
-                    ],
-                    *[
-                        F.max(as_num(c)).alias(f"mx_{c}")
-                        for c in zorder_by
-                    ],
-                ).first()
-            top = (1 << bits) - 1
-            norm = []
-            for c in zorder_by:
-                mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-                span = (
-                    (mx - mn)
-                    if (mn is not None and mx is not None and mx > mn)
-                    else 1.0
-                )
-                scaled = F.floor(
-                    (
-                        F.coalesce(as_num(c), F.lit(mn or 0.0))
-                        - F.lit(mn or 0.0)
-                    )
-                    * (top / span)
-                )
-                norm.append(
-                    F.least(F.greatest(scaled, F.lit(0)), F.lit(top))
-                )
-            zk = zorder_key(norm, bits)
+            zk = zorder_sort_key(rows, zorder_by, dtypes, bounds)
             rows = rows.repartitionByRange(
                 n_files, zk
             ).sortWithinPartitions(zk)
         else:
             rows = rows.coalesce(n_files)
-        phys_by_logical = {
-            f.name: (_physical_name(f) if mode == "name" else f.name)
-            for f in schema.fields
-        }
         new_adds = _stage_data_files(
             spark,
             dest,

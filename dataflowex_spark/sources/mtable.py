@@ -145,6 +145,32 @@ def _prune_pair(stat, bound):
     return _jsonable(stat), _jsonable(bound)
 
 
+def _zorder_pairs(e: dict, key_col: str, cols: list[str]) -> dict:
+    """One manifest entry's recorded ``{col: (min, max)}`` (the key's
+    from ``min_key``/``max_key``, the rest from ``col_stats``;
+    ``(None, None)`` where the entry records none)."""
+    st = e.get("col_stats") or {}
+    return {
+        c: (e["min_key"], e["max_key"])
+        if c == key_col
+        else tuple(st.get(c, (None, None)))
+        for c in cols
+    }
+
+
+def _zorder_file_bounds(m: dict, cols: list[str]):
+    """Per-file stats of manifest ``m`` for
+    :func:`sources.fold_zorder_bounds`: None for an entry carrying a
+    deletion vector or equality deletes, whose stats still count the
+    deleted rows the scan drops."""
+    for e in m["files"]:
+        yield (
+            None
+            if e.get("dv") or e.get("eq")
+            else _zorder_pairs(e, m["key_col"], cols)
+        )
+
+
 def _atomic_write(path: str, content: str) -> None:
     d = os.path.dirname(path) or "."
     fd, tmp = tempfile.mkstemp(dir=d, prefix=".mtable_")
@@ -1550,11 +1576,16 @@ class MTable:
         range-clustered. ``cols`` must already be declared (or become
         declared) stats columns — the commit records them.
 
-        One driver-side min/max agg normalizes each dimension to
-        ``bits``-bit rank space (same shape as
-        ``sources.write_zordered``); the rewrite is a single
-        distributed pass."""
-        from dataflowex_spark.sources import zorder_key
+        The sort key is :func:`sources.zorder_sort_key`; its bounds
+        fold from the manifest's per-file stats
+        (:func:`sources.fold_zorder_bounds` over
+        :func:`_zorder_file_bounds`) when they provably equal the
+        scan, else one driver-side min/max agg. The rewrite is a
+        single distributed pass."""
+        from dataflowex_spark.sources import (
+            fold_zorder_bounds,
+            zorder_sort_key,
+        )
 
         m = self.manifest()
         key_col = m["key_col"]
@@ -1564,137 +1595,20 @@ class MTable:
         )
         df = self.read()
         dtypes = dict(df.dtypes)
-
-        def as_num(c: str):
-            # order-preserving numeric surrogate per type: Morton
-            # interleave needs ranks, not the raw values
-            dt = dtypes[c]
-            if dt.startswith("timestamp"):
-                return F.unix_micros(F.col(c).cast("timestamp")).cast(
-                    "double"
-                )
-            if dt == "date":
-                return F.unix_date(F.col(c)).cast("double")
-            if dt in ("string", "binary", "boolean") or dt.startswith(
-                ("array", "map", "struct")
-            ):
-                raise ValueError(
-                    f"optimize_zorder: column {c!r} has non-orderable-"
-                    f"numeric type {dt}; derive a numeric rank column "
-                    "upstream (e.g. a dictionary code) and cluster on that"
-                )
-            return F.col(c).cast("double")
-
-        # the manifest already carries exact per-file min/max for the
-        # key and every declared stats column — fold the global
-        # bounds on the driver instead of a dedicated full-table agg
-        # (guide §1.2; the discipline optimize_zorder_incremental
-        # already applies). Only when provably identical to the scan;
-        # otherwise fall back.
-        stats = self._zorder_stats_from_manifest(m, zcols, dtypes)
-        if stats is None:
-            stats = df.agg(
-                *[F.min(as_num(c)).alias(f"mn_{c}") for c in zcols],
-                *[F.max(as_num(c)).alias(f"mx_{c}") for c in zcols],
-            ).first()
-        top = (1 << bits) - 1
-        norm = []
-        for c in zcols:
-            mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-            span = (
-                (mx - mn)
-                if (mn is not None and mx is not None and mx > mn)
-                else 1.0
-            )
-            scaled = F.floor(
-                (
-                    F.coalesce(as_num(c), F.lit(mn or 0.0))
-                    - F.lit(mn or 0.0)
-                )
-                * (top / span)
-            )
-            norm.append(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)))
+        bounds = fold_zorder_bounds(
+            self.spark, zcols, dtypes, _zorder_file_bounds(m, zcols)
+        )
         entries = self._write_data_files(
             df,
             key_col,
             n_files=n_files or len(m["files"]),
             stats_cols=stats_cols,
-            sort_expr=zorder_key(norm, bits),
+            sort_expr=zorder_sort_key(df, zcols, dtypes, bounds, bits),
             bloom_cols=m.get("bloom_cols"),
         )
         return self._commit(
             entries, key_col, parent=m["version"], stats_cols=stats_cols
         )
-
-    def _zorder_stats_from_manifest(
-        self, m: dict, zcols: list[str], dtypes: dict[str, str]
-    ) -> dict | None:
-        """Global min/max for the z-order normalization folded from
-        the manifest's per-file stats, or None when the scan result
-        could differ. MTable files have no deletion side-channel
-        (every manifest row is live), so stats exactly cover the
-        data; the remaining exactness question is the numeric
-        SURROGATE: integers round-trip through the JSON manifest
-        exactly; dates reconstruct `unix_date` as exact day counts
-        from their ISO strings; timestamps reconstruct `unix_micros`
-        from their rendered string ONLY under a UTC session (the
-        string was rendered in the writing session's zone). Anything
-        else — floats (repr trips), strings, or missing per-file
-        stats — falls back to the aggregate scan."""
-        import datetime as _dt
-
-        ints = {"bigint", "int", "smallint", "tinyint"}
-        utc = (
-            self.spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
-        )
-        for c in zcols:
-            t = dtypes.get(c)
-            if t in ints or t == "date" or (
-                t in ("timestamp", "timestamp_ntz") and utc
-            ):
-                continue
-            return None
-
-        def to_num(v, t):
-            if t in ints:
-                if isinstance(v, bool) or not isinstance(v, int):
-                    return None
-                return float(v)
-            if not isinstance(v, str):
-                return None
-            try:
-                if t == "date":
-                    d = _dt.date.fromisoformat(v)
-                    return float((d - _dt.date(1970, 1, 1)).days)
-                td = _dt.datetime.fromisoformat(v) - _dt.datetime(
-                    1970, 1, 1
-                )
-                return float(
-                    (td.days * 86_400 + td.seconds) * 1_000_000
-                    + td.microseconds
-                )
-            except ValueError:
-                return None
-
-        key_col = m["key_col"]
-        out: dict[str, float] = {}
-        for e in m["files"]:
-            for c in zcols:
-                if c == key_col:
-                    raw = (e.get("min_key"), e.get("max_key"))
-                else:
-                    raw = tuple(
-                        (e.get("col_stats") or {}).get(c, (None, None))
-                    )
-                mn, mx = (to_num(raw[0], dtypes[c]), to_num(raw[1], dtypes[c]))
-                if mn is None or mx is None:
-                    return None
-                k_mn, k_mx = f"mn_{c}", f"mx_{c}"
-                if k_mn not in out or mn < out[k_mn]:
-                    out[k_mn] = mn
-                if k_mx not in out or mx > out[k_mx]:
-                    out[k_mx] = mx
-        return out or None
 
     def optimize_zorder_incremental(
         self,
@@ -1734,8 +1648,10 @@ class MTable:
         qualifies (repeated calls converge to a no-op).
 
         DV-aware like merge: a rewritten file contributes only its
-        live rows and sheds its deletion vector."""
-        from dataflowex_spark.sources import zorder_key
+        live rows and sheds its deletion vector. The sort key is
+        :func:`sources.zorder_sort_key` under the table-wide scoring
+        bounds (approximate is fine there: values outside clamp)."""
+        from dataflowex_spark.sources import zorder_sort_key, zorder_stat_num
 
         m = self.manifest()
         key_col = m["key_col"]
@@ -1743,38 +1659,31 @@ class MTable:
         files = m["files"]
         if not files:
             return None, 0
+        # committed schema, no scan: types pick each stat's conversion
+        dtypes = dict(self._read_paths([files[0]["path"]]).dtypes)
+        nums = [
+            {
+                c: tuple(zorder_stat_num(v, dtypes.get(c)) for v in p)
+                for c, p in _zorder_pairs(e, key_col, zcols).items()
+            }
+            for e in files
+        ]
+        bounds = {}
+        for c in zcols:
+            known = [n[c] for n in nums if None not in n[c]]
+            bounds[c] = (
+                (min(lo for lo, _ in known), max(hi for _, hi in known))
+                if known
+                else (None, None)
+            )
 
-        def dim_bounds(c: str):
-            if c == key_col:
-                vals = [(e["min_key"], e["max_key"]) for e in files]
-            else:
-                vals = [
-                    tuple(e.get("col_stats", {}).get(c, (None, None)))
-                    for e in files
-                ]
-            known = [v for v in vals if v[0] is not None]
-            if not known:
-                return None, None
-            return min(v[0] for v in known), max(v[1] for v in known)
-
-        bounds = {c: dim_bounds(c) for c in zcols}
-
-        def score(e: dict) -> float:
+        def score(n: dict) -> float:
             s = 1.0
-            for c in zcols:
-                lo, hi = bounds[c]
-                if lo is None or hi is None or hi <= lo:
-                    continue
-                if c == key_col:
-                    fmn, fmx = e["min_key"], e["max_key"]
-                else:
-                    fmn, fmx = e.get("col_stats", {}).get(c, (None, None))
-                if fmn is None:
+            for c, (lo, hi) in bounds.items():
+                fmn, fmx = n[c]
+                if lo is None or hi <= lo or fmn is None or fmx is None:
                     continue  # unknown dim: span fraction 1 (worst)
-                try:
-                    s *= max(0.0, min(1.0, (fmx - fmn) / (hi - lo)))
-                except TypeError:
-                    continue  # non-numeric stats: skip dimension
+                s *= max(0.0, min(1.0, (fmx - fmn) / (hi - lo)))
             return s
 
         # Convergence is STRUCTURAL, not score-threshold-based: files
@@ -1785,9 +1694,12 @@ class MTable:
         # file can score above any absolute threshold and would be
         # re-rewritten forever.
         zspec = list(zcols)
-        candidates = [e for e in files if e.get("zorder") != zspec]
         scored = sorted(
-            ((score(e), e) for e in candidates),
+            (
+                (score(n), e)
+                for n, e in zip(nums, files)
+                if e.get("zorder") != zspec
+            ),
             key=lambda t: (-t[0], t[1]["path"]),
         )
         todo = [e for s, e in scored[:max_files] if s > min_score]
@@ -1800,36 +1712,12 @@ class MTable:
             set(m.get("stats_cols", [])) | {c for c in zcols if c != key_col}
         )
         df = self._read_entries(todo)
-        dtypes = dict(df.dtypes)
-
-        def as_num(c: str):
-            dt = dtypes[c]
-            if dt.startswith("timestamp"):
-                return F.unix_micros(F.col(c).cast("timestamp")).cast(
-                    "double"
-                )
-            if dt == "date":
-                return F.unix_date(F.col(c)).cast("double")
-            return F.col(c).cast("double")
-
-        top = (1 << bits) - 1
-        norm = []
-        for c in zcols:
-            lo, hi = bounds[c]
-            lo = float(lo) if lo is not None else 0.0
-            hi = float(hi) if hi is not None else 1.0
-            span = (hi - lo) if hi > lo else 1.0
-            scaled = F.floor(
-                (F.coalesce(as_num(c), F.lit(lo)) - F.lit(lo))
-                * (top / span)
-            )
-            norm.append(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)))
         entries = self._write_data_files(
             df,
             key_col,
             n_files=len(todo),
             stats_cols=stats_cols,
-            sort_expr=zorder_key(norm, bits),
+            sort_expr=zorder_sort_key(df, zcols, dtypes, bounds, bits),
             bloom_cols=m.get("bloom_cols"),
         )
         self._validate_new_files(entries)

@@ -38,18 +38,28 @@ def _bounded_state_scope(spark: SparkSession):
     ``SPARK_GRAFT_STREAM_STATE_PARTS`` (its keys dwarf any constant;
     state-partition count is a per-deployment capacity decision
     exactly like ``shuffle.partitions`` itself). ``-1`` opts out
-    entirely (keep the session value). Batch jobs planned inside the
-    scope (foreachBatch handlers) stay AQE-coalesced, so their
-    results are partition-count-invariant."""
+    entirely (keep the session value); any other non-integer value
+    raises a ``ValueError`` that names the variable. Batch jobs
+    planned inside the scope (foreachBatch handlers) stay
+    AQE-coalesced, so their results are partition-count-invariant.
+
+    The conf change is SESSION-GLOBAL for the whole drain: any other
+    query planned on the same session meanwhile (another thread)
+    sees the scoped partition count too."""
     raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "").strip()
     if raw == "-1":
         yield
         return
-    n = (
-        max(1, int(raw))
-        if raw
-        else min(8, spark.sparkContext.defaultParallelism)
-    )
+    if raw:
+        try:
+            n = max(1, int(raw))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_STATE_PARTS={raw!r} is not an "
+                "integer (a state-store partition count, or -1)"
+            ) from None
+    else:
+        n = min(8, spark.sparkContext.defaultParallelism)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

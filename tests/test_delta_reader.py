@@ -3054,44 +3054,3 @@ def test_sync_delta_uniform(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="not.*written by this sync"):
         sync_delta_uniform(spark, root3)
-
-
-def test_zorder_stats_from_log_matches_scan(spark, tmp_path):
-    """The z-order normalization min/max folded from add.stats must
-    equal the scan aggregate exactly for integer columns, and must
-    refuse (None -> scan fallback) for float columns and DV'd files,
-    where metadata could diverge from the live rows."""
-    from pyspark.sql import functions as F
-
-    import dataflowex_spark.sources.delta_reader as dr
-
-    dest = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(i * 7 - 1000, i % 89, float(i)) for i in range(5000)],
-        "k long, a long, x double",
-    )
-    dr.write_delta(spark, df.repartition(6), dest)
-    meta, adds = dr._snapshot(spark, dest, None)
-    schema = df.schema
-    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-    phys = {f.name: f.name for f in schema.fields}
-    got = dr._zorder_stats_from_log(adds, ["k", "a"], dtypes, phys)
-    scan = dr.read_delta(spark, dest).agg(
-        F.min(F.col("k").cast("double")).alias("mn_k"),
-        F.max(F.col("k").cast("double")).alias("mx_k"),
-        F.min(F.col("a").cast("double")).alias("mn_a"),
-        F.max(F.col("a").cast("double")).alias("mx_a"),
-    ).first()
-    assert got == {
-        "mn_k": scan["mn_k"], "mx_k": scan["mx_k"],
-        "mn_a": scan["mn_a"], "mx_a": scan["mx_a"],
-    }
-    # float column: refuse
-    assert dr._zorder_stats_from_log(adds, ["x"], dtypes, phys) is None
-    # DV on any chosen file: refuse (stats include dead rows)
-    dr.delete_from_delta(spark, dest, "k = -1000")
-    _m, adds2 = dr._snapshot(spark, dest, None)
-    assert any(a.get("deletionVector") for a in adds2.values())
-    assert (
-        dr._zorder_stats_from_log(adds2, ["k"], dtypes, phys) is None
-    )

@@ -2227,54 +2227,3 @@ def test_for_portion_of_update_boundaries(spark):
     }.items():
         orig = next((e - s) for kk, s, e, _ in rows if kk == k)
         assert sum(e - s for s, e in spans) == orig, k
-
-
-def test_mtable_zorder_stats_from_manifest_matches_scan(spark, tmp_path):
-    """optimize_zorder's normalization bounds folded from manifest
-    stats must equal the scan aggregate exactly for integer and
-    (UTC-session) timestamp columns, and refuse for float columns."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from dataflowex_spark.sources.mtable import MTable
-
-    df = spark.createDataFrame(
-        [
-            (
-                i * 3 - 500,
-                i % 97,
-                dt.datetime(1995, 1, 1) + dt.timedelta(hours=i, microseconds=i),
-                float(i) / 7.0,
-            )
-            for i in range(4000)
-        ],
-        "k long, a long, ts timestamp_ntz, x double",
-    )
-    t = MTable.create(
-        spark,
-        str(tmp_path / "t"),
-        df.repartition(5),
-        "k",
-        stats_cols=["a", "ts", "x"],
-    )
-    m = t.manifest()
-    dtypes = dict(t.read().dtypes)
-    got = t._zorder_stats_from_manifest(m, ["k", "a", "ts"], dtypes)
-    scan = t.read().agg(
-        F.min(F.col("k").cast("double")).alias("mn_k"),
-        F.max(F.col("k").cast("double")).alias("mx_k"),
-        F.min(F.col("a").cast("double")).alias("mn_a"),
-        F.max(F.col("a").cast("double")).alias("mx_a"),
-        F.min(
-            F.unix_micros(F.col("ts").cast("timestamp")).cast("double")
-        ).alias("mn_ts"),
-        F.max(
-            F.unix_micros(F.col("ts").cast("timestamp")).cast("double")
-        ).alias("mx_ts"),
-    ).first()
-    assert got == {k: scan[k] for k in got} and len(got) == 6
-    # float column refuses (repr round-trip is not provably exact)
-    assert t._zorder_stats_from_manifest(m, ["k", "x"], dtypes) is None
-    # undeclared stats column refuses (no per-file stats to fold)
-    assert t._zorder_stats_from_manifest(m, ["k", "zz"], dtypes) is None

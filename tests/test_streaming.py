@@ -1771,3 +1771,8 @@ def test_bounded_state_scope_restores_conf(spark, events_stream, monkeypatch):
     out_off, _ = run_to_memory(agg, output_mode="complete")
     assert sorted(map(tuple, out_off.collect())) == rows3
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # a non-integer value fails up front, naming the variable
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "eight")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTS"):
+        run_to_memory(agg, output_mode="complete")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

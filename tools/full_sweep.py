@@ -1,13 +1,14 @@
-"""Round-8 full-registry timed sweep (VERDICT r7 item 6).
+"""Full-registry timed sweep (the standing round-close step; run by
+``tools/round_close.py``).
 
-The headline bench covers 56 of the 405 registered queries; this
+The headline bench covers 58 of the 450 registered queries; this
 tool times EVERY registry entry at sf0.1 (single shot, post-warmup)
 and writes a JSON artifact sorted slowest-first, so the bench tail —
 queries that never appear in BENCH_rN.json — gets the same scrutiny.
 Any non-headline query beyond the 5 s per-query ceiling gets the
 q147 treatment (isolate, plan-stat, fix) or a headline seat.
 
-Usage: python tools/full_sweep_r8.py [sf_dir] [--json OUT]
+Usage: python tools/full_sweep.py [sf_dir] [--json OUT]
 """
 
 from __future__ import annotations
@@ -17,7 +18,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from dataflowex_spark.session import get_spark  # noqa: E402
 from dataflowex_spark import queries as _q  # noqa: E402
@@ -48,6 +51,14 @@ def main() -> None:
             errs[name] = f"{type(ex).__name__}: {ex}"[:300]
         if i % 25 == 0:
             print(f"[{i}/{len(registry)}] ...", file=sys.stderr)
+            # drop dead localCheckpoint blocks between queries (the
+            # ContextCleaner frees them only after a JVM GC) so a
+            # late query is never timed under the block-manager
+            # pressure of 400 earlier ones — untimed, outside t0
+            import gc as _gc
+
+            _gc.collect()
+            spark.sparkContext._jvm.System.gc()
     ranked = sorted(times.items(), key=lambda kv: -kv[1])
     doc = {
         "sf_dir": sf_dir,

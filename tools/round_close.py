@@ -64,7 +64,7 @@ def main() -> None:
     if not skip_sweep:
         sh(
             [
-                sys.executable, "tools/full_sweep_r10.py",
+                sys.executable, "tools/full_sweep.py",
                 "/root/testdata/sf0.1", "--json", sweep_path,
             ]
         )
