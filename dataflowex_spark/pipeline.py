@@ -283,29 +283,37 @@ class Pipeline:
         :meth:`run_report` (single pass, observe metrics)."""
         import time as _time
 
-        from pyspark.sql import Observation
-
         out: dict[str, dict[str, float]] = {}
         df = self._source() if callable(self._source) else self._source
         prev = 0.0
         t0 = _time.perf_counter()
+        for name, rows in self._run_prefixes(df, observe=True):
+            cum = _time.perf_counter() - t0
+            out[name] = {"rows": float(rows), "ms": (cum - prev) * 1000.0}
+            prev = cum
+        return out
+
+    def _run_prefixes(self, df: DataFrame, observe: bool = False):
+        """Run each node prefix over ``df`` through a ``noop`` sink
+        (count() would let Catalyst prune a node's work — or its
+        failing expression — away) and yield ``(node, rows)``, the
+        rows observed in the same pass when ``observe`` (else None).
+        A failing prefix raises :class:`PipelineError` naming its
+        node."""
+        from pyspark.sql import Observation
+
         for node in self._nodes:
             try:
                 df = node.fn(df)
-                # noop sink: full evaluation of every column (count()
-                # would let Catalyst prune the node's work away) with
-                # observe carrying the row count out of the same pass
-                obs = Observation()
-                df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                rows = int(obs.get["rows"])
+                run = df
+                if observe:
+                    obs = Observation()
+                    run = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+                run.write.format("noop").mode("overwrite").save()
+                rows = int(obs.get["rows"]) if observe else None
             except Exception as e:
                 raise PipelineError(node.name, e) from e
-            cum = _time.perf_counter() - t0
-            out[node.name] = {"rows": float(rows), "ms": (cum - prev) * 1000.0}
-            prev = cum
-        return out
+            yield node.name, rows
 
     def _locate_failing_node(self) -> str | None:
         """Post-mortem for a runtime action failure: re-execute node
@@ -316,14 +324,10 @@ class Pipeline:
         reproduce node-locally."""
         try:
             df = self._source() if callable(self._source) else self._source
-            for node in self._nodes:
-                try:
-                    df = node.fn(df)
-                    # noop sink evaluates ALL columns — count() would
-                    # prune exactly the failing expression away
-                    df.write.format("noop").mode("overwrite").save()
-                except Exception:
-                    return node.name
+            for _ in self._run_prefixes(df):
+                pass
+        except PipelineError as e:
+            return e.node
         except Exception:
             pass
         return None

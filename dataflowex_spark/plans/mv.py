@@ -45,6 +45,7 @@ recomputed.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -116,8 +117,10 @@ class MVCatalog:
         and decimal sums widen the result type), the summary is built
         from that MV's stored rows instead of re-scanning the fact
         table. Measures are matched by (fn, base-column-name) — the
-        same subsumption contract :meth:`answer` already relies on."""
-        mv_df = self._rollup_frame(base, keys, aggs, base_df)
+        same subsumption contract :meth:`answer` already relies on.
+        The view being (re)defined is never its own source: a view of
+        the same name or path would be read while it is overwritten."""
+        mv_df = self._rollup_frame(base, keys, aggs, base_df, name, path)
         if mv_df is None:
             mv_df = (
                 with_hll_inputs(base_df, aggs)
@@ -144,9 +147,13 @@ class MVCatalog:
         keys: list[str],
         aggs: dict[str, tuple[str, str | None]],
         base_df: DataFrame,
+        name: str | None = None,
+        path: str | None = None,
     ) -> DataFrame | None:
         """The new summary re-aggregated from the coarsest registered
         MV that subsumes it exactly, or None (build from the base).
+        Views named ``name`` or stored at ``path`` — the target being
+        defined — are no candidates.
 
         Exactness per measure: count → SUM(cnt) (long, exact);
         min/max → MIN/MAX (same value, same type); hll → element-wise
@@ -158,8 +165,11 @@ class MVCatalog:
         integral = {"tinyint", "smallint", "int", "bigint"}
         dtypes = dict(base_df.dtypes)
         matches = []
+        target = path and os.path.normpath(path)
         for mv in self._views.values():
             if mv.base != base or not set(keys) <= set(mv.keys):
+                continue
+            if mv.name == name or os.path.normpath(mv.path) == target:
                 continue
             by_def = {v: k for k, v in mv.aggs.items()}
             exprs: list[Column] | None = []

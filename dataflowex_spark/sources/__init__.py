@@ -10,6 +10,8 @@ streaming variants) and writers with batch semantics.
 from __future__ import annotations
 
 import datetime as _dt
+import operator
+import re
 import time as _time
 from collections.abc import Iterable, Sequence
 
@@ -176,6 +178,7 @@ def zorder_key(cols: list[Column], bits: int = 12) -> Column:
 
 
 _ZORDER_INTS = frozenset({"bigint", "int", "smallint", "tinyint"})
+_TEMPORAL = frozenset({"date", "timestamp", "timestamp_ntz"})
 _EPOCH = _dt.datetime(1970, 1, 1)
 
 
@@ -236,23 +239,43 @@ def zorder_sort_key(
     return zorder_key(norm, bits)
 
 
+def _temporal_num(v, dtype: str) -> int:
+    """An ISO date or timestamp as an exact int: a date's day count,
+    a naive timestamp's micros read as UTC. Raises on anything else
+    (an offset-aware string cannot subtract from the naive epoch)."""
+    if dtype == "date":
+        return (_dt.date.fromisoformat(v) - _EPOCH.date()).days
+    return (_dt.datetime.fromisoformat(v) - _EPOCH) // _dt.timedelta(
+        microseconds=1
+    )
+
+
 def zorder_stat_num(v, dtype: str | None) -> float | None:
     """One metadata stat value as its :func:`_zorder_num` surrogate,
     or None when it does not convert exactly: integers pass through,
     ISO dates become day counts, naive ISO timestamps become micros
-    read as UTC (an offset-aware string refuses: subtracting it from
-    the naive epoch raises TypeError), other numbers become floats."""
+    read as UTC (an offset-aware string refuses), other numbers
+    become floats."""
     try:
-        if dtype == "date":
-            return float((_dt.date.fromisoformat(v) - _EPOCH.date()).days)
-        if dtype in ("timestamp", "timestamp_ntz"):
-            td = _dt.datetime.fromisoformat(v) - _EPOCH
-            return float(td // _dt.timedelta(microseconds=1))
+        if dtype in _TEMPORAL:
+            return float(_temporal_num(v, dtype))
         if dtype in _ZORDER_INTS:
             return float(v) if type(v) is int else None
         return None if isinstance(v, bool) else float(v)
     except (TypeError, ValueError, OverflowError):
         return None
+
+
+def utc_clock(spark: SparkSession) -> bool:
+    """Whether naive timestamps mean the same instant everywhere they
+    meet: a UTC session zone (Spark's casts and renderings) and a UTC
+    driver clock (collected Rows and PySpark's naive datetime
+    literals use the OS zone)."""
+    return (
+        spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
+        and _time.timezone == 0
+        and not _time.daylight
+    )
 
 
 def fold_zorder_bounds(
@@ -272,14 +295,12 @@ def fold_zorder_bounds(
     Returns None — caller scans — unless the fold provably equals the
     scan: every column an integer (JSON round-trips exactly; the
     min of casts is the cast of the min), a date, or a timestamp
-    whose naive stat strings were rendered in UTC (UTC session and
-    UTC driver clock — collected Rows render in the OS zone); every
-    file vouched for; every stat present and exactly convertible.
-    Floats refuse: their rendered form is not provably exact."""
+    whose naive stat strings were rendered in UTC
+    (:func:`utc_clock`); every file vouched for; every stat present
+    and exactly convertible. Floats refuse: their rendered form is
+    not provably exact."""
     exact = set(_ZORDER_INTS) | {"date"}
-    if spark.conf.get("spark.sql.session.timeZone", "") == "UTC" and (
-        _time.timezone == 0 and not _time.daylight
-    ):
+    if utc_clock(spark):
         exact |= {"timestamp", "timestamp_ntz"}
     if any(dtypes.get(c) not in exact for c in cols):
         return None
@@ -296,6 +317,129 @@ def fold_zorder_bounds(
             lo, hi = out.get(c, (mn, mx))
             out[c] = (min(lo, mn), max(hi, mx))
     return out or None
+
+
+# ---- Skip pruning: one rule for every table format's file metadata ----
+
+SKIP_OPS = {
+    "=": operator.eq,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+}
+_DAY_US = 86_400_000_000
+_FLOATS = frozenset({"double", "float"})
+# the literal strings whose Spark cast Python reproduces exactly (Spark
+# casts '1995-01-03 12:00:00' on a date column to 1995-01-03)
+_ISO_DATE = r"\d{4}-\d{2}-\d{2}"
+_ISO_TS = re.compile(_ISO_DATE + r"([ T]\d{2}:\d{2}:\d{2}(\.\d{1,6})?)?")
+_ISO_LITERAL = {
+    "date": re.compile(_ISO_DATE),
+    "timestamp": _ISO_TS,
+    "timestamp_ntz": _ISO_TS,
+}
+
+
+def check_skip_specs(specs, columns) -> list[tuple]:
+    """``skip_where`` as a list, once every ``(column, op, literal)``
+    names one of ``columns`` and an op in ``= < <= > >=``."""
+    specs = list(specs or [])
+    for col, op, _v in specs:
+        if op not in SKIP_OPS:
+            raise ValueError(
+                f"skip_where op {op!r} unsupported (one of "
+                f"{' '.join(SKIP_OPS)})"
+            )
+        if col not in columns:
+            raise ValueError(f"skip_where column {col!r} not in schema")
+    return specs
+
+
+def apply_skip_filter(df: DataFrame, specs: list[tuple]) -> DataFrame:
+    """The skip conjunction as in-plan filters: pruning only picks the
+    files to open, these keep the rows exact."""
+    for col, op, v in specs:
+        df = df.filter(SKIP_OPS[op](F.col(col), F.lit(v)))
+    return df
+
+
+def _skip_key(v, dtype: str | None, utc: bool):
+    """A recorded stat value as an exactly comparable key for a column
+    of Spark type ``dtype`` (``simpleString``), or None: integers stay
+    ints (canonical integer strings parse), doubles become floats
+    (NaN refuses: Spark orders it above every number), strings stay,
+    dates and timestamps (ISO strings or objects) become micros —
+    dates at midnight, timestamps only under ``utc``
+    (:func:`utc_clock`)."""
+    try:
+        if isinstance(v, bool) or v is None:
+            return None
+        if dtype in _TEMPORAL:
+            if isinstance(v, _dt.date):
+                v = v.isoformat()
+            if dtype == "date":
+                return _temporal_num(v, dtype) * _DAY_US
+            return _temporal_num(v, dtype) if utc else None
+        if dtype in _ZORDER_INTS:
+            if isinstance(v, str) and re.fullmatch(r"-?\d+", v):
+                return int(v)
+            return v if type(v) is int else None
+        if dtype in _FLOATS:
+            x = float(v)
+            return None if x != x else x
+        return v if dtype == "string" and isinstance(v, str) else None
+    except (TypeError, ValueError, OverflowError):
+        return None
+
+
+def skip_literal_key(lit, dtype: str | None, utc: bool):
+    """The :func:`_skip_key` Spark's coercion of ``col OP lit`` compares
+    ``lit`` as, or None where it is not reproduced exactly: a string
+    is cast to the column type (only the :data:`_ISO_LITERAL` forms
+    of temporal columns are), a datetime makes a date column compare
+    as timestamps, a float literal or a double column compares as
+    doubles."""
+    if isinstance(lit, str) and dtype != "string":
+        form = _ISO_LITERAL.get(dtype)
+        ok = form is not None and form.fullmatch(lit)
+        return _skip_key(lit, dtype, utc) if ok else None
+    if isinstance(lit, _dt.datetime) and dtype in _TEMPORAL:
+        return _skip_key(lit, "timestamp", utc)
+    if isinstance(lit, float) or (type(lit) is int and dtype in _FLOATS):
+        numeric = dtype in _ZORDER_INTS or dtype in _FLOATS
+        return _skip_key(lit, "double", utc) if numeric else None
+    return _skip_key(lit, dtype, utc)
+
+
+def range_admits(lo, hi, op: str, t) -> bool:
+    """Can some ``x`` in ``[lo, hi]`` satisfy ``x OP t``? Incomparable
+    keys keep the file."""
+    try:
+        if op == "=":
+            return lo <= t <= hi
+        return SKIP_OPS[op](lo if op[0] == "<" else hi, t)
+    except TypeError:
+        return True
+
+
+def skip_admits(lo, hi, op: str, lit, dtype: str | None, utc: bool) -> bool:
+    """The skip-pruning rule of every table format (MTable manifests,
+    Delta stats and partition values, Iceberg bounds and partition
+    cells): False only when no value in ``[lo, hi]`` — a file's
+    recorded min and max, ``lo == hi`` for a point value — can satisfy
+    ``x OP lit`` the way Spark's residual filter evaluates it on a
+    ``dtype`` column. None bounds, unknown types, incomparable or
+    unconvertible values, and literals whose coercion
+    :func:`skip_literal_key` cannot reproduce keep the file. ``utc``
+    is :func:`utc_clock` of the reading session."""
+    t = skip_literal_key(lit, dtype, utc)
+    lo, hi = _skip_key(lo, dtype, utc), _skip_key(hi, dtype, utc)
+    if t is None or lo is None or hi is None:
+        return True
+    if isinstance(t, float):
+        lo, hi = float(lo), float(hi)
+    return range_admits(lo, hi, op, t)
 
 
 def write_zordered(

@@ -56,6 +56,7 @@ delta-spark's Snapshot holds.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import re
@@ -64,6 +65,12 @@ import urllib.parse as _uparse
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from dataflowex_spark.sources import (
+    apply_skip_filter,
+    check_skip_specs,
+    skip_admits,
+    utc_clock,
+)
 from dataflowex_spark.sources.commit_backend import get_commit_backend
 
 _SUPPORTED_READER_FEATURES = {
@@ -496,38 +503,51 @@ def _dead_positions(root: str, adds: dict[str, dict]) -> list[tuple]:
     return out
 
 
-_SKIP_OPS = {"=", "<", "<=", ">", ">="}
-
-
-def _stats_allows(add: dict, col_phys: str, op: str, value) -> bool:
-    """Can any row in this file match ``col OP value``? Decided from
-    the add's ``stats`` JSON (numRecords / minValues / maxValues);
-    missing or unparseable stats answer True (keep — skipping may
-    only ever PRUNE provably-dead files, never drop a maybe)."""
+def _add_stats(add: dict) -> dict:
+    """An add's ``stats`` JSON (numRecords / minValues / maxValues)
+    as a dict; ``{}`` when missing or unparseable."""
     raw = add.get("stats")
-    if not raw:
-        return True
     try:
-        st = json.loads(raw) if isinstance(raw, str) else dict(raw)
+        return (json.loads(raw) if isinstance(raw, str) else dict(raw)) or {}
     except (TypeError, ValueError):
-        return True
-    lo = (st.get("minValues") or {}).get(col_phys)
-    hi = (st.get("maxValues") or {}).get(col_phys)
-    if lo is None or hi is None:
-        return True
-    try:
-        if op == "=":
-            return lo <= value <= hi
-        if op == "<":
-            return lo < value
-        if op == "<=":
-            return lo <= value
-        if op == ">":
-            return hi > value
-        if op == ">=":
-            return hi >= value
-    except TypeError:
-        return True  # incomparable types: never prune on a guess
+        return {}
+
+
+def _add_admits(
+    add: dict,
+    specs: list[tuple],
+    phys: dict[str, str],
+    dtypes: dict[str, str],
+    part_cols: list[str],
+    utc: bool,
+) -> bool:
+    """Can any row of this add match every ``(col, op, literal)``?
+    Asked of :func:`sources.skip_admits` with the file's range per
+    column: a partition column's ``partitionValues`` string as a
+    point (a null value matches no comparison), any other column's
+    ``add.stats`` min/max keyed by physical name. The protocol
+    truncates timestamp stats to milliseconds, so a timestamp max
+    widens by 999 µs."""
+    pv = add.get("partitionValues") or {}
+    st = _add_stats(add)
+    for col, op, v in specs:
+        cp = phys[col]
+        if col in part_cols:
+            lo = hi = pv.get(cp)
+            if lo is None:
+                return False
+        else:
+            lo = (st.get("minValues") or {}).get(cp)
+            hi = (st.get("maxValues") or {}).get(cp)
+            if dtypes[col].startswith("timestamp") and isinstance(hi, str):
+                try:
+                    hi = _dt.datetime.fromisoformat(hi) + _dt.timedelta(
+                        microseconds=999
+                    )
+                except ValueError:
+                    hi = None
+        if not skip_admits(lo, hi, op, v, dtypes[col], utc):
+            return False
     return True
 
 
@@ -544,13 +564,16 @@ def read_delta(
 
     ``skip_where`` — a conjunction of ``(column, op, literal)``
     triples with op in ``= < <= > >=`` — enables DATA SKIPPING: files
-    whose ``add.stats`` min/max prove no row can match are never
-    opened (the protocol's per-file statistics, exactly what
-    delta-spark's data skipping reads), partition columns prune on
-    ``partitionValues``, and the SAME predicate is then applied
-    in-plan so results are exact even for files kept on missing
-    stats. At 100 TB this is the difference between opening every
-    file and opening the handful a point query touches."""
+    whose ``add.stats`` min/max (the protocol's per-file statistics,
+    exactly what delta-spark's data skipping reads) or
+    ``partitionValues`` prove no row can match are never opened, and
+    the SAME predicate is then applied in-plan so results stay
+    exact. The pruning rule is the shared
+    :func:`sources.skip_admits`: a file is dropped only when it
+    provably holds no match the way Spark evaluates the predicate;
+    missing stats, and literals whose Spark cast it cannot reproduce,
+    keep the file. At 100 TB this is the difference between opening
+    every file and opening the handful a point query touches."""
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
@@ -598,35 +621,15 @@ def read_delta(
                 for f in data_fields
             ]
         )
-    specs = list(skip_where or [])
-    for col, op, _v in specs:
-        if op not in _SKIP_OPS:
-            raise ValueError(f"skip_where op {op!r} not in {_SKIP_OPS}")
-        if col not in phys_by_logical:
-            raise ValueError(f"skip_where column {col!r} not in schema")
-    kept: dict[str, dict] = {}
-    for path, a in adds.items():
-        pv = a.get("partitionValues") or {}
-        ok = True
-        for col, op, v in specs:
-            cp = phys_by_logical[col]
-            if col in part_cols:
-                raw = pv.get(cp)
-                # partitionValues are canonical STRINGS; pruning is
-                # only sound where string equality implies value
-                # equality — '=' with the literal's canonical form.
-                # Ranges and typed-null semantics stay with the
-                # in-plan filter (still exact, just not pruned).
-                if op == "=" and raw is not None and str(v) != raw:
-                    ok = False
-                    break
-                continue
-            if not _stats_allows(a, cp, op, v):
-                ok = False
-                break
-        if ok:
-            kept[path] = a
-    adds = kept
+    specs = check_skip_specs(skip_where, phys_by_logical)
+    if specs:
+        utc = utc_clock(spark)
+        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+        adds = {
+            path: a
+            for path, a in adds.items()
+            if _add_admits(a, specs, phys_by_logical, dtypes, part_cols, utc)
+        }
     by_parts: dict[tuple, list[str]] = {}
     for a in adds.values():
         pv = a.get("partitionValues") or {}
@@ -648,7 +651,7 @@ def read_delta(
         )
     if not by_parts:
         out = spark.createDataFrame([], schema)
-        return _apply_skip_filter(out, specs)
+        return apply_skip_filter(out, specs)
     dead = _dead_positions(root, adds)
     pieces = []
     for (key, resolved), paths in sorted(
@@ -713,25 +716,7 @@ def read_delta(
         out = out.join(
             F.broadcast(dv_df), ["__fp", "__ri"], "left_anti"
         ).select(*[f.name for f in schema.fields])
-    return _apply_skip_filter(out, specs)
-
-
-def _apply_skip_filter(df: DataFrame, specs: list[tuple]) -> DataFrame:
-    """Apply the skip_where conjunction IN-PLAN — pruning reduces
-    I/O; this keeps semantics exact for files kept on missing
-    stats."""
-    for col, op, v in specs:
-        c = F.col(col)
-        df = df.filter(
-            {
-                "=": c == v,
-                "<": c < v,
-                "<=": c <= v,
-                ">": c > v,
-                ">=": c >= v,
-            }[op]
-        )
-    return df
+    return apply_skip_filter(out, specs)
 
 
 # ---------------------------------------------------------------------
@@ -2306,7 +2291,7 @@ def write_delta(
     if mode0 == "name":
         # stage under PHYSICAL names — data files, hive partition
         # dirs, partitionValues and stats all key physical on a
-        # mapped table, exactly what _dml_scan / _stats_allows /
+        # mapped table, exactly what _dml_scan / _add_admits /
         # read_delta's explicit-physical-schema scan resolve
         present = set(df.columns)
         sub = T.StructType(
@@ -2647,9 +2632,7 @@ def _row_id_high_water_mark(spark: SparkSession, root: str) -> int:
 
 
 def _add_num_records(a: dict) -> int:
-    raw = a.get("stats")
-    st = json.loads(raw) if isinstance(raw, str) else (raw or {})
-    n = st.get("numRecords")
+    n = _add_stats(a).get("numRecords")
     if n is None:
         raise DeltaProtocolError(
             f"add {a.get('path')!r} carries no numRecords stats — "
@@ -2900,8 +2883,8 @@ def _physical_frame(
     """LOGICAL rows → the PHYSICAL layout staging must write under
     columnMapping mode=name (data files and hive partition dirs
     carry physical names; stats and partitionValues key by them too,
-    which is exactly what the read path's ``_stats_allows`` and
-    partition pruning expect). mode=none is the identity."""
+    which is exactly what the read path's ``_add_admits``
+    expects). mode=none is the identity."""
     if mode == "none":
         return df
     cols = []
@@ -4189,17 +4172,7 @@ def compact_delta_dvs(
             if isinstance(dv, str):
                 dv = json.loads(dv)
             dead = dv.get("cardinality")
-            total = None
-            raw = a.get("stats")
-            if raw:
-                try:
-                    st = (
-                        json.loads(raw) if isinstance(raw, str)
-                        else dict(raw)
-                    )
-                    total = st.get("numRecords")
-                except (TypeError, ValueError):
-                    total = None
+            total = _add_stats(a).get("numRecords")
             if dead is None or not total:
                 continue  # unsized: stay conservative, keep the DV
             if dead / total >= min_dead_ratio:
@@ -4388,11 +4361,7 @@ def _zorder_log_bounds(
     (log stats are millisecond-truncated, the sort key uses micros)."""
     lossy = any(dtypes.get(c, "").startswith("timestamp") for c in cols)
     for a in chosen.values():
-        raw = a.get("stats")
-        try:
-            st = json.loads(raw) if isinstance(raw, str) else dict(raw)
-        except (TypeError, ValueError):
-            st = None
+        st = _add_stats(a)
         if lossy or a.get("deletionVector") or not st:
             yield None
             continue
@@ -4856,13 +4825,7 @@ def read_delta_meta(
 
         rows = []
         for rel, a in sorted(adds.items()):
-            stats = a.get("stats")
-            if isinstance(stats, str):
-                try:
-                    stats = _json.loads(stats)
-                except _json.JSONDecodeError:
-                    stats = None
-            nrec = (stats or {}).get("numRecords")
+            nrec = _add_stats(a).get("numRecords")
             dv = a.get("deletionVector")
             dead = 0
             if dv:

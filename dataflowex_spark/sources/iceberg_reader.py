@@ -68,6 +68,7 @@ parquet scans.
 
 from __future__ import annotations
 
+import datetime as _dt
 import functools
 import json
 import os
@@ -76,6 +77,16 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataflowex_spark.sources import (
+    _DAY_US,
+    _EPOCH,
+    apply_skip_filter,
+    check_skip_specs,
+    range_admits,
+    skip_admits,
+    skip_literal_key,
+    utc_clock,
+)
 from dataflowex_spark.sources.avro_io import read_container
 from dataflowex_spark.sources.commit_backend import get_commit_backend
 
@@ -515,7 +526,7 @@ def _live_files(
     root: str,
     meta: dict,
     snapshot_id: int | None,
-    prune: tuple[list[tuple], dict] | None = None,
+    prune: tuple[list[tuple], dict, bool] | None = None,
 ) -> tuple[
     dict[str, int],
     list[tuple[str, int]],
@@ -536,8 +547,9 @@ def _live_files(
     its SMALLEST seen sequence (the original add — re-listing must
     not shield rows from older equality deletes).
 
-    ``prune=(specs, fields)`` — skip-where conjunction + schema
-    fields: DATA manifests whose manifest-list partition summary
+    ``prune=(specs, fields, utc)`` — skip-where conjunction, schema
+    fields, :func:`sources.utc_clock` — DATA manifests whose
+    manifest-list partition summary
     proves no entry can match are NEVER OPENED (list-level pruning,
     one level above the per-entry tuple/bounds pruning; sound
     because a file surviving entry-level pruning always sits in a
@@ -572,8 +584,7 @@ def _live_files(
             and _summary_excludes(
                 m.get("partitions"),
                 m.get("partition_spec_id", 0),
-                prune[0],
-                prune[1],
+                *prune,
                 meta,
             )
         ):
@@ -1041,12 +1052,12 @@ def read_iceberg(
 
     ``skip_where`` — a conjunction of ``(column, op, literal)``
     triples, op in ``= < <= > >=`` — enables MANIFEST-LEVEL data
-    skipping: data files whose ``lower_bounds``/``upper_bounds``
-    (field-id→single-value-serialized bytes, spec Appendix D) prove
-    no row can match are never opened; files without bounds are
-    always kept, and the same predicate applies in-plan so results
-    stay exact either way — the planning economics that make a
-    100 TB point query open a handful of files."""
+    skipping: manifests whose partition summary, and data files whose
+    partition tuple or ``lower_bounds``/``upper_bounds`` (spec
+    Appendix D), prove no row can match through the shared
+    :func:`sources.skip_admits` (cells: :func:`_cell_allows`) are
+    never opened, and the same predicate applies in-plan so results
+    stay exact — a 100 TB point query opens a handful of files."""
     from pyspark.sql import functions as F
 
     meta = load_table_metadata(root)
@@ -1068,39 +1079,35 @@ def read_iceberg(
                 "pass snapshot_id OR timestamp_ms, not both"
             )
         snapshot_id = snapshot_at_timestamp(meta, timestamp_ms)
-    specs = list(skip_where or [])
-    fields = {}
-    if specs:
-        fields = {
-            f["name"]: f for f in _current_schema_fields(meta)
-        }
-        for col, op, _v in specs:
-            if op not in ("=", "<", "<=", ">", ">="):
-                raise ValueError(f"skip_where op {op!r} unsupported")
-            if col not in fields:
-                raise ValueError(
-                    f"skip_where column {col!r} not in schema"
-                )
+    fields = {f["name"]: f for f in _current_schema_fields(meta)}
+    specs = check_skip_specs(skip_where, fields)
+    utc = bool(specs) and utc_clock(spark)
     (
         live, pos_deletes, eq_deletes, bounds, partitions, formats,
     ) = _live_files(
         root,
         meta,
         snapshot_id,
-        prune=(specs, fields) if specs else None,
+        prune=(specs, fields, utc) if specs else None,
     )
     if specs:
         live = {
             path: seq
             for path, seq in live.items()
-            if _bounds_allow(bounds.get(path), specs, fields)
+            if all(
+                skip_admits(
+                    *_decoded_bounds(bounds.get(path), fields[c]), op, v,
+                    _skip_dtype(fields[c].get("type")), utc,
+                )
+                for c, op, v in specs
+            )
             and _partition_tuple_allows(
-                partitions.get(path), specs, fields, meta
+                partitions.get(path), specs, fields, utc, meta
             )
         }
     if not live:
         out = _empty_frame(spark, meta)
-        return _apply_iceberg_skip_filter(out, specs)
+        return apply_skip_filter(out, specs)
     # group data files by (sequence number, field-id rename map) —
     # equality deletes apply only to rows whose DATA sequence is
     # STRICTLY LOWER than the delete's (spec: a delete cannot remove
@@ -1285,67 +1292,28 @@ def read_iceberg(
                     F.col(f"__d.{c}")
                 )
             df = left.join(F.broadcast(dels), cond, "left_anti")
-    return _apply_iceberg_skip_filter(df.select(*cols), specs)
+    return apply_skip_filter(df.select(*cols), specs)
 
 
-def _bounds_allow(
-    file_bounds: tuple[dict, dict] | None,
-    specs: list[tuple],
-    fields: dict[str, dict],
-) -> bool:
-    """Can any row in a data file match the conjunction? Missing
-    bounds (whole file or per column) answer True — skipping may
-    only prune provably-dead files."""
-    if file_bounds is None:
-        return True
-    lower, upper = file_bounds
-    for col, op, v in specs:
-        f = fields[col]
-        fid = f.get("id")
-        t = f.get("type")
-        if fid is None or not isinstance(t, str):
-            continue
-        lo_raw, hi_raw = lower.get(fid), upper.get(fid)
-        if lo_raw is None or hi_raw is None:
-            continue
-        try:
-            lo = bound_decode(bytes(lo_raw), t)
-            hi = bound_decode(bytes(hi_raw), t)
-            if op == "=" and not (lo <= v <= hi):
-                return False
-            if op == "<" and not (lo < v):
-                return False
-            if op == "<=" and not (lo <= v):
-                return False
-            if op == ">" and not (hi > v):
-                return False
-            if op == ">=" and not (hi >= v):
-                return False
-        except (IcebergProtocolError, TypeError, ValueError):
-            continue  # undecodable/incomparable: keep the file
-    return True
-
-
-def _apply_iceberg_skip_filter(
-    df: DataFrame, specs: list[tuple]
-) -> DataFrame:
-    """Apply the skip_where conjunction IN-PLAN — pruning reduces
-    I/O; this keeps semantics exact for files kept on missing
-    bounds."""
-    from pyspark.sql import functions as F
-
-    for col, op, v in specs:
-        c = F.col(col)
-        df = df.filter(
-            {
-                "=": c == v,
-                "<": c < v,
-                "<=": c <= v,
-                ">": c > v,
-                ">=": c >= v,
-            }[op]
+def _decoded_bounds(file_bounds: tuple[dict, dict] | None, field: dict):
+    """A data file's decoded ``(lower, upper)`` bound for one schema
+    field; ``(None, None)`` — keep — when absent or undecodable."""
+    try:
+        return tuple(
+            bound_decode(bytes(b[field["id"]]), field["type"])
+            for b in file_bounds
         )
-    return df
+    except (IcebergProtocolError, TypeError, ValueError, KeyError):
+        return None, None
+
+
+def _skip_dtype(ice_type) -> str | None:
+    """An Iceberg primitive type as the Spark type name
+    :func:`sources.skip_admits` reads (None: nothing prunes)."""
+    try:
+        return _spark_type(ice_type).simpleString()
+    except IcebergProtocolError:
+        return None
 
 
 # ---------------------------------------------------------------------
@@ -1610,20 +1578,6 @@ def _truncate_of(value, ice_type: str, w: int):
     )
 
 
-def _day_of(value) -> int | None:
-    """date/datetime → days from 1970-01-01 (the spec's day
-    transform result, typed date = int days)."""
-    import datetime as _dt
-
-    if value is None:
-        return None
-    if isinstance(value, _dt.datetime):
-        value = value.date()
-    if isinstance(value, _dt.date):
-        return (value - _dt.date(1970, 1, 1)).days
-    return int(value)
-
-
 def parse_transform(t: str) -> tuple[str, int | None]:
     """'identity' | 'bucket[N]' | 'truncate[W]' | 'day' →
     (kind, param)."""
@@ -1735,88 +1689,104 @@ def transform_column(c, kind: str, param, ice_type: str):
     raise IcebergProtocolError(f"unsupported transform {kind!r}")
 
 
-def _partition_allows(
-    pvalue, kind: str, param, ice_type: str, op: str, lit
+def _ice_source(v, ice_type: str):
+    """An identity partition value in its source's recorded form (the
+    spec stores dates as day counts, timestamps as micros)."""
+    if type(v) is int and ice_type == "date":
+        return _EPOCH.date() + _dt.timedelta(days=v)
+    if type(v) is int and ice_type in ("timestamp", "timestamptz"):
+        return _EPOCH + _dt.timedelta(microseconds=v)
+    return v
+
+
+def _cell_allows(
+    lo, hi, kind: str, param, ice_type: str, op: str, lit, utc: bool
 ) -> bool:
-    """Can a file whose partition tuple holds ``pvalue`` for this
-    spec field contain rows matching ``source OP lit``? identity is
-    exact per op; day/truncate prune by monotonicity (coarser cell ⇒
-    inclusive day/prefix comparison); bucket prunes '=' only. A NULL
-    partition value means every row's source is NULL, which no
-    comparison matches."""
-    if pvalue is None:
+    """Can a partition cell range ``[lo, hi]`` (a file's tuple value
+    is ``lo == hi``; a manifest summary spans its files) hold a row
+    with ``source OP lit``? An all-null cell ``(None, None)`` matches
+    nothing; identity is :func:`sources.skip_admits` in the source
+    type; monotone day/truncate transform the coerced literal and
+    widen strict ops (the literal's own cell may match); unordered
+    bucket prunes ``=`` only."""
+    if lo is None and hi is None:
         return False
+    dtype = _skip_dtype(ice_type)
     if kind == "identity":
-        # date partition values store as int days (Appendix-B avro
-        # typing); align the literal
-        t = _day_of(lit) if ice_type == "date" else lit
-    elif kind == "day":
-        t = _day_of(lit)
-    elif kind == "truncate":
-        t = _truncate_of(lit, ice_type, param)
-    elif kind == "bucket":
-        if op != "=":
-            return True  # buckets carry no order
-        return pvalue == _bucket_of(lit, ice_type, param)
-    else:
+        return skip_admits(
+            _ice_source(lo, ice_type), _ice_source(hi, ice_type),
+            op, lit, dtype, utc,
+        )
+    t = skip_literal_key(lit, dtype, utc)
+    if type(t) not in (int, str) or (kind == "bucket" and op != "="):
         return True
     try:
-        if op == "=":
-            return pvalue == t
-        if kind == "identity":
-            return {
-                "<": pvalue < t,
-                "<=": pvalue <= t,
-                ">": pvalue > t,
-                ">=": pvalue >= t,
-            }[op]
-        # day/truncate cells are coarser than the literal: a file in
-        # the literal's own cell may still hold matching rows
-        return {
-            "<": pvalue <= t,
-            "<=": pvalue <= t,
-            ">": pvalue >= t,
-            ">=": pvalue >= t,
-        }[op]
-    except TypeError:
-        return True  # incomparable: never prune on a guess
-
-
-def _partition_tuple_allows(
-    partition: dict | None, specs: list[tuple], fields: dict, meta: dict
-) -> bool:
-    """File-level pruning on the manifest's PARTITION TUPLE (the
-    spec's primary pruning path — transform-aware, works even for
-    columns without bounds). Files without a tuple always keep."""
-    if not partition:
+        if kind == "day":
+            # date and timestamp keys are micros since the epoch
+            t = t // _DAY_US
+        elif kind == "truncate":
+            t = _truncate_of(t, ice_type, param)
+        elif kind == "bucket":
+            if dtype == "date":
+                t, rem = divmod(t, _DAY_US)
+                if rem:
+                    return True
+            t = _bucket_of(t, ice_type, param)
+        else:
+            return True
+    except (IcebergProtocolError, TypeError):
         return True
-    spec_fields = []
-    # prune under the spec that WROTE the tuple (carried via the
-    # reserved __spec_id key) — after partition spec evolution a
-    # same-named field may carry a different transform param in the
-    # old spec, and default-spec interpretation would prune wrongly
-    spec_id = partition.get(
-        "__spec_id", meta.get("default-spec-id", 0)
-    )
+    return range_admits(lo, hi, {"<": "<=", ">": ">="}.get(op, op), t)
+
+
+def _spec_fields(meta: dict, spec_id) -> list[tuple[str, str, str]]:
+    """(field name, source column, transform) per field of the spec
+    that WROTE a tuple or manifest — after spec evolution a same-named
+    field may carry another transform, and only its writer's spec
+    reads its values right."""
+    names = _field_names_by_id(meta)
     for ps in meta.get("partition-specs", []):
         if ps.get("spec-id") == spec_id:
-            spec_fields = ps.get("fields", [])
-    if not spec_fields:
-        return True
-    names_by_id = _field_names_by_id(meta)
+            return [
+                (f["name"], names.get(f.get("source-id")), f["transform"])
+                for f in ps.get("fields", [])
+            ]
+    return []
+
+
+def _cells_allow(spec: list[tuple], cell_of, specs, fields, utc) -> bool:
+    """Does every ``(col, op, literal)`` admit the cells of the spec
+    fields on its column? ``cell_of(name, kind, ice_type)`` gives a
+    field's ``(lo, hi)`` cell range, or None when unknown (kept)."""
     for col, op, lit in specs:
-        src_type = fields[col].get("type")
-        for pf in spec_fields:
-            if names_by_id.get(pf.get("source-id")) != col:
+        ice_type = fields[col].get("type")
+        for name, src, transform in spec:
+            if src != col:
                 continue
-            if pf["name"] not in partition:
-                continue
-            kind, param = parse_transform(pf["transform"])
-            if not _partition_allows(
-                partition[pf["name"]], kind, param, src_type, op, lit
+            kind, param = parse_transform(transform)
+            cell = cell_of(name, kind, ice_type)
+            if cell is not None and not _cell_allows(
+                *cell, kind, param, ice_type, op, lit, utc
             ):
                 return False
     return True
+
+
+def _partition_tuple_allows(
+    partition: dict | None, specs: list[tuple], fields: dict,
+    utc: bool, meta: dict,
+) -> bool:
+    """File-level pruning on the manifest's PARTITION TUPLE (the
+    spec's primary pruning path — transform-aware, works even for
+    columns without bounds), read under the spec that wrote it (the
+    reserved ``__spec_id`` key). Files without a tuple always keep."""
+    if not partition:
+        return True
+    spec = _spec_fields(
+        meta, partition.get("__spec_id", meta.get("default-spec-id", 0))
+    )
+    cell = lambda n, _k, _t: (partition[n],) * 2 if n in partition else None
+    return _cells_allow(spec, cell, specs, fields, utc)
 
 
 def _partitions_summary(
@@ -1888,77 +1858,21 @@ def _write_manifest_list(
     write_container(mlist, MANIFEST_LIST_SCHEMA, mrows)
 
 
-def _summary_decode(raw: str | None, kind: str, ice_type: str):
-    """String summary bound → the typed partition-tuple value space
-    (``None`` for undecodable — caller treats as unprunable)."""
-    if raw is None:
-        return None
+def _summary_cell(fs: dict, kind: str, ice_type: str):
+    """A manifest-list ``field_summary``'s string bounds as a
+    :func:`_cell_allows` range in the partition-tuple value space:
+    ``(None, None)`` when no tuple value in the manifest is non-null,
+    None when a bound does not decode."""
+    raw = fs.get("lower_bound"), fs.get("upper_bound")
+    if raw == (None, None):
+        return None, None
+    as_int = kind in ("day", "bucket") or ice_type in ("int", "long") or (
+        kind == "identity" and ice_type == "date"
+    )
     try:
-        if kind == "identity":
-            return (
-                int(raw)
-                if ice_type in ("int", "long", "date")
-                else raw
-            )
-        if kind in ("day", "bucket"):
-            return int(raw)
-        return int(raw) if ice_type in ("int", "long") else raw
-    except ValueError:
+        return tuple(int(r) if as_int else r for r in raw)
+    except (TypeError, ValueError):
         return None
-
-
-def _summary_allows(
-    fs: dict, kind: str, param, ice_type: str, op: str, lit
-) -> bool:
-    """Can ANY file in a manifest whose field_summary is ``fs``
-    contain rows matching ``source OP lit``? Range twin of
-    :func:`_partition_allows`: identity is exact per op, day/truncate
-    compare inclusively at the cell the literal falls in, bucket
-    prunes '=' only when the whole manifest sits in one bucket
-    range."""
-    lo = _summary_decode(fs.get("lower_bound"), kind, ice_type)
-    hi = _summary_decode(fs.get("upper_bound"), kind, ice_type)
-    if fs.get("lower_bound") is None and fs.get("upper_bound") is None:
-        # no non-null tuple value anywhere in the manifest: every
-        # row's source is NULL and no comparison matches
-        return False
-    if lo is None or hi is None:
-        return True  # undecodable bound: never prune on a guess
-    if kind == "identity":
-        t = _day_of(lit) if ice_type == "date" else lit
-    elif kind == "day":
-        t = _day_of(lit)
-    elif kind == "truncate":
-        t = _truncate_of(lit, ice_type, param)
-    elif kind == "bucket":
-        if op != "=":
-            return True
-        t = _bucket_of(lit, ice_type, param)
-        try:
-            return lo <= t <= hi
-        except TypeError:
-            return True
-    else:
-        return True
-    try:
-        if op == "=":
-            return lo <= t <= hi
-        if kind == "identity":
-            return {
-                "<": lo < t,
-                "<=": lo <= t,
-                ">": hi > t,
-                ">=": hi >= t,
-            }[op]
-        # coarse cells: the literal's own cell may still match
-        return {
-            "<": lo <= t,
-            "<=": lo <= t,
-            ">": hi >= t,
-            ">=": hi >= t,
-        }[op]
-    except TypeError:
-        return True
 
 
 def _summary_excludes(
@@ -1966,35 +1880,19 @@ def _summary_excludes(
     spec_id: int,
     specs: list[tuple],
     fields: dict,
+    utc: bool,
     meta: dict,
 ) -> bool:
     """True iff the manifest-list row's partition summary PROVES no
     entry in the manifest can match the conjunction ``specs`` —
     interpreted under the spec that wrote the manifest. Absent or
     shape-mismatched summaries never exclude."""
-    if not summary:
+    spec = _spec_fields(meta, spec_id)
+    if not summary or len(summary) != len(spec):
         return False
-    spec_fields = []
-    for ps in meta.get("partition-specs", []):
-        if ps.get("spec-id") == spec_id:
-            spec_fields = ps.get("fields", [])
-    if not spec_fields or len(summary) != len(spec_fields):
-        return False
-    names_by_id = _field_names_by_id(meta)
-    for col, op, lit in specs:
-        f = fields.get(col)
-        if f is None:
-            continue
-        src_type = f.get("type")
-        for i, pf in enumerate(spec_fields):
-            if names_by_id.get(pf.get("source-id")) != col:
-                continue
-            kind, param = parse_transform(pf["transform"])
-            if not _summary_allows(
-                summary[i], kind, param, src_type, op, lit
-            ):
-                return True
-    return False
+    by_name = {f[0]: fs for f, fs in zip(spec, summary)}
+    cell = lambda n, kind, t: _summary_cell(by_name[n], kind, t)
+    return not _cells_allow(spec, cell, specs, fields, utc)
 
 
 def stage_orc_file(df: DataFrame, root: str, name: str) -> None:
@@ -3010,7 +2908,7 @@ def _decode_part_value(raw: str | None, kind: str, ice_type: str):
         if ice_type in ("int", "long"):
             return int(raw)
         if ice_type == "date":
-            return _day_of(_dt.date.fromisoformat(raw))
+            return (_dt.date.fromisoformat(raw) - _EPOCH.date()).days
         return raw
     if kind in ("day", "bucket"):
         return int(raw)

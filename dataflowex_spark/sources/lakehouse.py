@@ -244,13 +244,7 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
     entries = []
     for rel in sorted(adds):
         a = adds[rel]
-        st = {}
-        raw = a.get("stats")
-        if raw:
-            try:
-                st = json.loads(raw) if isinstance(raw, str) else raw
-            except (TypeError, ValueError):
-                st = {}
+        st = dr._add_stats(a)
         lo, hi = [], []
         for c, mn in (st.get("minValues") or {}).items():
             fld = by_name.get(c)

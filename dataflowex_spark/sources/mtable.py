@@ -59,6 +59,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dataflowex_spark.sources import apply_skip_filter, skip_admits, utc_clock
+
 # Per-file Bloom index geometry (Parquet/Delta "bloom filter index"
 # shape, lifted to the MANIFEST so equality probes prune whole files
 # without opening any footer). 2048 bits / 5 hashes ≈ 1% FPR at ~200
@@ -102,50 +104,16 @@ def _local_path(uri: str) -> str:
 
 
 def _jsonable(v):
-    """Manifest stat values must round-trip through JSON and compare
-    correctly at prune time. Primitives pass through; date/datetime
-    become ISO strings (lexicographic == chronological, so range
-    pruning on the string form is exact); anything else goes through
-    str() with the same caveat left to the caller."""
+    """Manifest stat values must round-trip through JSON. Primitives
+    pass through; date/datetime become ISO strings, which
+    :func:`sources.skip_admits` and :func:`sources.zorder_stat_num`
+    parse by the column's type; anything else goes through str()."""
     if v is None or isinstance(v, (int, float, str, bool)):
         return v
     return str(v)
 
 
-def _as_temporal(v):
-    """Interpret a prune operand as a datetime when possible: native
-    date/datetime objects, and the ISO string forms ``str()`` gives
-    them at manifest-write time ('YYYY-MM-DD' vs
-    'YYYY-MM-DD HH:MM:SS[.ffffff]'). Returns None for anything else."""
-    import datetime as dt
-
-    if isinstance(v, dt.datetime):
-        return v
-    if isinstance(v, dt.date):
-        return dt.datetime(v.year, v.month, v.day)
-    if isinstance(v, str):
-        try:
-            return dt.datetime.fromisoformat(v)
-        except ValueError:
-            return None
-    return None
-
-
-def _prune_pair(stat, bound):
-    """Normalize a (file-stat, caller-bound) pair for ordering: when
-    BOTH sides are temporal they compare as datetimes — a DATE stat
-    ('2024-06-01') against a datetime bound ('2024-06-01 00:00:00')
-    would otherwise misorder lexicographically at the exact boundary
-    (the prefix sorts first) and silently prune a file whose rows the
-    residual predicate keeps. Mixed or non-temporal pairs fall back
-    to the JSON-normalized forms."""
-    ts, tb = _as_temporal(stat), _as_temporal(bound)
-    if ts is not None and tb is not None:
-        return ts, tb
-    return _jsonable(stat), _jsonable(bound)
-
-
-def _zorder_pairs(e: dict, key_col: str, cols: list[str]) -> dict:
+def _entry_stats(e: dict, key_col: str, cols: list[str]) -> dict:
     """One manifest entry's recorded ``{col: (min, max)}`` (the key's
     from ``min_key``/``max_key``, the rest from ``col_stats``;
     ``(None, None)`` where the entry records none)."""
@@ -167,7 +135,7 @@ def _zorder_file_bounds(m: dict, cols: list[str]):
         yield (
             None
             if e.get("dv") or e.get("eq")
-            else _zorder_pairs(e, m["key_col"], cols)
+            else _entry_stats(e, m["key_col"], cols)
         )
 
 
@@ -733,10 +701,12 @@ class MTable:
         Bloom pruning is sound (no false negatives), and the residual
         ``col == value`` predicate still applies row-wise and pushes
         into the pruned scans. Columns without a recorded bloom are
-        conservatively kept."""
-        conds = self._range_conds(lo, hi, version, where)
-        eq = dict(eq or {})
-        if not conds and not eq:
+        conservatively kept.
+
+        Range pruning is the rule every table format shares,
+        :func:`sources.skip_admits` (see :meth:`prune_files`)."""
+        specs = self._skip_specs(lo, hi, version, where, eq)
+        if not specs:
             return self.read(version)
         files = self.prune_files(
             lo, hi, version=version, where=where, eq=eq
@@ -748,41 +718,22 @@ class MTable:
             [e for e in self.manifest(version)["files"] if e["path"] in fset],
             version,
         )
-        for c, rlo, rhi, _get in conds:
-            if rlo is not None:
-                out = out.filter(F.col(c) >= F.lit(rlo))
-            if rhi is not None:
-                out = out.filter(F.col(c) <= F.lit(rhi))
-        for c, v in eq.items():
-            out = out.filter(F.col(c) == F.lit(v))
-        return out
+        return apply_skip_filter(out, specs)
 
-    def _range_conds(self, lo, hi, version, where):
+    def _skip_specs(self, lo, hi, version, where, eq) -> list[tuple]:
+        """``lo``/``hi`` (the merge key), ``where`` ranges and ``eq``
+        probes as one ``(col, op, value)`` conjunction: inclusive
+        bounds become ``>=``/``<=``, probes ``=``."""
         key_col = self.manifest(version)["key_col"]
-        conds = []  # (col, lo, hi, per-entry stats getter)
-        if lo is not None or hi is not None:
-            conds.append(
-                (key_col, lo, hi, lambda e: (e["min_key"], e["max_key"]))
-            )
-        for c, (clo, chi) in (where or {}).items():
-            if c == key_col:
-                # the merge key's stats live in the entry's
-                # min_key/max_key, not col_stats
-                conds.append(
-                    (c, clo, chi, lambda e: (e["min_key"], e["max_key"]))
-                )
-                continue
-            conds.append(
-                (
-                    c,
-                    clo,
-                    chi,
-                    lambda e, c=c: tuple(
-                        e.get("col_stats", {}).get(c, (None, None))
-                    ),
-                )
-            )
-        return conds
+        ranges = [(key_col, lo, hi)]
+        ranges += [(c, clo, chi) for c, (clo, chi) in (where or {}).items()]
+        specs = [
+            (c, op, v)
+            for c, clo, chi in ranges
+            for op, v in ((">=", clo), ("<=", chi))
+            if v is not None
+        ]
+        return specs + [(c, "=", v) for c, v in (eq or {}).items()]
 
     def _bloom_probe_positions(self, col: str, value, version=None):
         """The ``BLOOM_HASHES`` bit positions a literal probe value
@@ -817,15 +768,23 @@ class MTable:
         given conjunctive ranges — the observable the 2-D pruning
         tests and probes pin (``len(prune_files(...)) <
         len(manifest.files)`` is the win). ``eq`` values prune via
-        per-file Bloom bitmaps (and, when the column also has range
-        stats, via [min,max] containment)."""
-        # an equality probe is ALSO the degenerate range [v, v]: when
-        # the column happens to carry range stats (the key, or a
-        # declared stats col) min/max containment prunes too — the
-        # two mechanisms compose conjunctively
-        ranges = dict(where or {})
-        ranges.update({c: (v, v) for c, v in (eq or {}).items()})
-        conds = self._range_conds(lo, hi, version, ranges or None)
+        per-file Bloom bitmaps and, like the ``lo``/``hi``/``where``
+        bounds (as ``=``, ``>=`` and ``<=``), through
+        :func:`sources.skip_admits` on the entry's recorded
+        ``[min, max]``: a file drops only when no value in its range
+        can match the way Spark's residual filter compares it under
+        the table's column type. Missing stats, a manifest without a
+        schema, and bounds whose Spark cast the helper cannot
+        reproduce keep the file."""
+        m = self.manifest(version)
+        specs = self._skip_specs(lo, hi, version, where, eq)
+        schema = self.table_schema(version)
+        dtypes = {
+            f.name: f.dataType.simpleString()
+            for f in (schema.fields if schema is not None else [])
+        }
+        utc = utc_clock(self.spark)
+        cols = sorted({c for c, _op, _v in specs})
         eq_probes = [
             (c, self._bloom_probe_positions(c, v, version))
             for c, v in (eq or {}).items()
@@ -838,26 +797,13 @@ class MTable:
                     continue  # no bloom recorded -> cannot exclude
                 if not _bloom_member(words, positions):
                     return False
-            for _c, rlo, rhi, get in conds:
-                mn, mx = get(e)
-                if mn is None or mx is None:
-                    continue  # no stats -> cannot exclude
-                # each (stat, bound) pair is normalized to a
-                # like-typed ordering — temporal pairs as datetimes
-                # (date-vs-datetime granularity would misorder as
-                # strings at the boundary), everything else through
-                # the JSON form the stats were written with
-                if rhi is not None:
-                    smn, bhi = _prune_pair(mn, rhi)
-                    if smn > bhi:
-                        return False
-                if rlo is not None:
-                    smx, blo = _prune_pair(mx, rlo)
-                    if smx < blo:
-                        return False
-            return True
+            stats = _entry_stats(e, m["key_col"], cols)
+            return all(
+                skip_admits(*stats[c], op, v, dtypes.get(c), utc)
+                for c, op, v in specs
+            )
 
-        return [e["path"] for e in self.manifest(version)["files"] if keep(e)]
+        return [e["path"] for e in m["files"] if keep(e)]
 
     def history(self) -> list[dict]:
         """One summary row per kept version (oldest first): version,
@@ -1664,7 +1610,7 @@ class MTable:
         nums = [
             {
                 c: tuple(zorder_stat_num(v, dtypes.get(c)) for v in p)
-                for c, p in _zorder_pairs(e, key_col, zcols).items()
+                for c, p in _entry_stats(e, key_col, zcols).items()
             }
             for e in files
         ]

@@ -9,6 +9,8 @@ batch expression IS the oracle).
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import uuid
 from contextlib import contextmanager
 
@@ -991,12 +993,19 @@ def stream_hll_maintenance(
     # and an extra full-state read. The state stays readable mid-fold
     # (readers follow the pointer), and an at-least-once replay still
     # converges — register MAX is idempotent.
+    # Superseded versions go once the pointer has moved past them,
+    # keeping the previous one for readers still on it; a state dir
+    # from before the pointer existed seeds the first fold from its
+    # unversioned ``registers``.
     def fold(batch_df, batch_id):
         regs = hll_registers(batch_df, [group_col], key_col)
         last = _latest()
-        if last is not None:
+        src = last
+        if src is None and os.path.isdir(os.path.join(state, "registers")):
+            src = "registers"
+        if src is not None:
             prev = batch_df.sparkSession.read.parquet(
-                os.path.join(state, last)
+                os.path.join(state, src)
             )
             regs = (
                 prev.unionByName(regs)
@@ -1009,6 +1018,9 @@ def stream_hll_maintenance(
         with open(tmp, "w") as f:
             f.write(vname)
         os.replace(tmp, pointer)
+        for d in os.listdir(state):
+            if re.fullmatch(r"registers_v\d+", d) and d not in (vname, last):
+                shutil.rmtree(os.path.join(state, d), ignore_errors=True)
 
     q = (
         stream.writeStream.outputMode("update")

@@ -518,3 +518,32 @@ def test_define_rollup_refuses_float_sum(spark, tmp_path):
     mvs = MVCatalog(spark)
     mvs.define("fine", "t", df, ["a", "b"], aggs, str(tmp_path / "fine"))
     assert mvs._rollup_frame("t", ["a"], aggs, df) is None
+
+
+def test_define_redefine_never_rolls_up_from_itself(spark, base_df, tmp_path):
+    """Redefining a view under the same name and path at a coarser
+    grain must build from the base frame it is given: the old
+    registration subsumes the new grain, but rolling up from it reads
+    the files the write is overwriting — the old view's rows, not the
+    new base's."""
+    aggs = {"n": ("count", None), "x_s": ("sum", "x")}
+    path = str(tmp_path / "v")
+    fresh = base_df.filter(F.col("x") % 2 == 0)
+    mvs = MVCatalog(spark)
+    mvs.define("v", "t", base_df, ["a", "b"], aggs, path)
+    mvs.define("v", "t", fresh, ["a"], aggs, path)
+    got = sorted(map(tuple, spark.read.parquet(path).collect()))
+    want = sorted(
+        map(
+            tuple,
+            fresh.groupBy("a")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.sum("x").alias("x_s"),
+            )
+            .collect(),
+        )
+    )
+    assert got == want
+    # a differently named view at the same path is the same target
+    assert mvs._rollup_frame("t", ["a"], aggs, base_df, "w", path) is None

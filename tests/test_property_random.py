@@ -537,8 +537,8 @@ def test_manifest_summary_pruning_sound(values, lit, op, transform):
     transforms across random value sets, literals, and ops."""
     from dataflowex_spark.sources.iceberg_reader import (
         _bucket_of,
-        _partition_allows,
-        _summary_allows,
+        _cell_allows,
+        _summary_cell,
         _truncate_of,
     )
 
@@ -550,7 +550,7 @@ def test_manifest_summary_pruning_sound(values, lit, op, transform):
     else:
         tuples = [_truncate_of(v, "long", param) for v in values]
     file_allows = [
-        _partition_allows(t, kind, param, "long", op, lit)
+        _cell_allows(t, t, kind, param, "long", op, lit, True)
         for t in tuples
     ]
     lo, hi = min(tuples), max(tuples)
@@ -559,7 +559,9 @@ def test_manifest_summary_pruning_sound(values, lit, op, transform):
         "lower_bound": str(lo),
         "upper_bound": str(hi),
     }
-    summary_allows = _summary_allows(fs, kind, param, "long", op, lit)
+    summary_allows = _cell_allows(
+        *_summary_cell(fs, kind, "long"), kind, param, "long", op, lit, True
+    )
     if any(file_allows):
         assert summary_allows, (
             f"summary excluded a manifest with a matching tuple: "

@@ -1133,6 +1133,40 @@ def test_stream_hll_maintenance_equals_batch(spark):
         assert r["streamed_est"] == r["batch_est"], r
 
 
+def test_stream_hll_maintenance_bounds_state_and_folds_legacy(
+    spark, tmp_path
+):
+    """The state dir keeps at most two register versions (the
+    pointer's and the one before it) however many batches drain, and
+    a state dir from before the versioned layout — a bare
+    ``registers`` directory — seeds the fold instead of being
+    ignored: the drained registers equal a batch build over the
+    legacy rows plus the streamed ones."""
+    import os
+
+    from dataflowex_spark.operators.sketches import hll_registers
+    from dataflowex_spark.streaming.ops import stream_hll_maintenance
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            (F.col("id") % 3).alias("g"), (F.col("id") * 7).alias("u")
+        )
+
+    src, state = str(tmp_path / "src.parquet"), str(tmp_path / "state")
+    frame(0, 400).write.parquet(src)
+    hll_registers(frame(1000, 1400), ["g"], "u").write.parquet(
+        os.path.join(state, "registers")
+    )
+    got = stream_hll_maintenance(spark, src, "g", "u", state_dir=state)
+    versions = [d for d in os.listdir(state) if d.startswith("registers_v")]
+    assert 1 <= len(versions) <= 2, versions
+    want = hll_registers(frame(0, 400).union(frame(1000, 1400)), ["g"], "u")
+    key = ["g", "j", "m_j"]
+    assert sorted(map(tuple, got.select(*key).collect())) == sorted(
+        map(tuple, want.select(*key).collect())
+    )
+
+
 def test_session_window_merges_sessions_across_batches(spark, tmp_path):
     """The stateful property q353 leans on: two sessions opened in
     micro-batch 1 (events 50 min apart) are WELDED into one when the
