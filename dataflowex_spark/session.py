@@ -9,6 +9,16 @@ Two entry points:
   Required because the fixture ``events.parquet`` stores
   TIMESTAMP(NANOS), which Spark only reads with
   ``spark.sql.legacy.parquet.nanosAsLong``.
+
+On a local master ``configure`` also picks the FileSystem-based
+streaming checkpoint manager. Spark's default goes through Hadoop
+``FileContext``; on ``file:`` without the native Hadoop library (any
+pip-installed PySpark) it forks ``readlink`` for the source and the
+destination of every checkpoint rename, ``.crc`` sidecars included, so
+a 4-batch q367 drain made ~1,200 forks and clones (``/proc/stat``
+``processes``). With the FileSystem manager the same drain makes ~285:
+the ``chmod`` Hadoop forks for every local file it creates, plus JVM
+threads, which that counter also counts.
 """
 
 from __future__ import annotations
@@ -16,6 +26,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 # Settable at runtime (SQL confs) — safe to apply to a foreign session.
 RUNTIME_CONFS: dict[str, str] = {
@@ -57,6 +73,17 @@ def configure(spark: SparkSession) -> SparkSession:
             # files already provide the parallelism.
             spark.conf.set("spark.sql.files.maxPartitionBytes", "1048576")
             spark.conf.set("spark.sql.files.openCostInBytes", "262144")
+            # stream checkpoints (offsets, commits, one state delta per
+            # store per batch) rename through FileSystem.rename, an
+            # in-process rename(2), not FileContext, which forks
+            # `readlink` for both ends of every rename (module
+            # docstring). It checks `exists` before a no-overwrite
+            # rename, so a second writer of a batch file still fails;
+            # only FileContext's atomic check-and-rename is lost, and
+            # one driver cannot race on it (Spark refuses two active
+            # queries on one checkpoint).
+            if not spark.conf.get(CHECKPOINT_MANAGER_CONF, ""):
+                spark.conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)
     except Exception:
         pass
     return spark

@@ -7,6 +7,8 @@ append mode is exercised where its semantics ARE the test (late-data
 drop, stateful dedup).
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1810,3 +1812,111 @@ def test_bounded_state_scope_restores_conf(spark, events_stream, monkeypatch):
     with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTS"):
         run_to_memory(agg, output_mode="complete")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def _processes_forked():
+    """The kernel's count of forks and clones since boot (the
+    ``processes`` line of ``/proc/stat``)."""
+    with open("/proc/stat") as f:
+        for line in f:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    raise AssertionError("/proc/stat has no processes line")
+
+
+@pytest.mark.skipif(
+    not os.path.exists("/proc/stat"), reason="needs Linux /proc/stat"
+)
+def test_stateful_drain_does_not_fork_per_checkpoint_file(
+    spark, sf_dir, tmp_path
+):
+    """A local stateful drain commits offsets, commit logs and one
+    state delta per store per batch. Through Hadoop FileContext on
+    ``file:`` (no libhadoop) every rename forks ``readlink`` for its
+    source and destination, .crc sidecars included: ~1,200 forks and
+    clones for this q367-shaped drain. The FileSystem-based checkpoint
+    manager that ``configure`` selects renames in-process (~285 left:
+    ``chmod`` on each file Hadoop creates, and JVM threads)."""
+    from dataflowex_spark.streaming.ops import (
+        ordered_event_replay,
+        run_to_memory,
+    )
+
+    ev = Catalog(spark, sf_dir)["events"].select(
+        "event_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
+    )
+    redelivered = ev.withColumn(
+        "ts", F.col("ts") + F.expr("interval 5 seconds")
+    )
+    stream = ordered_event_replay(
+        spark, ev.unionByName(redelivered), "ts", 4, str(tmp_path / "s")
+    )
+    before = _processes_forked()
+    out, _ = run_to_memory(
+        stream.withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .select("event_id")
+    )
+    forks = _processes_forked() - before
+    assert out.count() == ev.select("event_id").distinct().count()
+    assert forks < 600, f"{forks} forks for one 4-batch drain"
+
+
+class _StubSession:
+    """Only the ``spark.conf.get/set`` that ``configure`` calls."""
+
+    def __init__(self, **values):
+        self.conf, self.values = self, dict(values)
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+    def set(self, key, value):
+        self.values[key] = value
+
+
+def test_configure_scopes_checkpoint_manager_to_local_masters(spark):
+    """Local sessions get the FileSystem-based checkpoint manager; a
+    manager the session already chose is kept, and a cluster session
+    keeps Spark's default."""
+    from dataflowex_spark.session import (
+        CHECKPOINT_MANAGER_CONF,
+        FS_CHECKPOINT_MANAGER,
+        configure,
+    )
+
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == FS_CHECKPOINT_MANAGER
+
+    local = configure(_StubSession(**{"spark.master": "local[2]"}))
+    assert local.values[CHECKPOINT_MANAGER_CONF] == FS_CHECKPOINT_MANAGER
+
+    mine = "com.example.MyCheckpointFileManager"
+    chosen = configure(
+        _StubSession(**{"spark.master": "local[*]", CHECKPOINT_MANAGER_CONF: mine})
+    )
+    assert chosen.values[CHECKPOINT_MANAGER_CONF] == mine
+
+    yarn = configure(_StubSession(**{"spark.master": "yarn"}))
+    assert CHECKPOINT_MANAGER_CONF not in yarn.values
+
+
+def test_q367_removes_its_replay_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """q367 stages its event-time-ordered replay in a temp dir and
+    deletes it once the drain returns; the result still equals the
+    batch per-type distinct count, since it reads the memory sink."""
+    import tempfile
+
+    from dataflowex_spark.queries import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fn, _ = REGISTRY["q367_stream_dedup_within_watermark"]
+    got = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert not [p.name for p in tmp_path.glob("q367_*")]
+    want = sorted(
+        (r.event_type, r.n)
+        for r in Catalog(spark, sf_dir)["events"]
+        .groupBy("event_type")
+        .agg(F.countDistinct("event_id").alias("n"))
+        .collect()
+    )
+    assert got == want
