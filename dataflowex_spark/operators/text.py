@@ -369,6 +369,15 @@ def repetition_stats(
     )
 
 
+# ICU Normalizer method and its `compat` flag for each Unicode form
+_NORMALIZER_FORMS = {
+    "NFC": ("compose", False),
+    "NFD": ("decompose", False),
+    "NFKC": ("compose", True),
+    "NFKD": ("decompose", True),
+}
+
+
 def normalize_unicode(
     df: DataFrame,
     text_col: str = "text",
@@ -378,25 +387,36 @@ def normalize_unicode(
     """Unicode normalization (NFC/NFD/NFKC/NFKD) of a text column —
     the canonicalization pass a multilingual corpus needs BEFORE any
     hashing/dedup (the same text with composed vs decomposed accents
-    hashes differently and silently defeats exact dedup). Arrow-
-    batched pandas UDF over stdlib ``unicodedata`` — no Python
-    row loop in the driver, no external dependency; scan-local, zero
-    shuffles."""
-    import pandas  # noqa: F401 — must be module-resolvable for hint inference
+    hashes differently and silently defeats exact dedup).
 
-    def _norm(s: "pandas.Series") -> "pandas.Series":
-        import unicodedata
+    Runs in the JVM: ``reflect`` calls the static
+    ``com.ibm.icu.text.Normalizer.compose/decompose(String, boolean)``
+    of the ICU4J jar Spark ships for collations. No Python worker is
+    involved, so a sort or sampling job over the result does not pay a
+    second Python round trip. Scan-local, zero shuffles. The NULL guard
+    is needed because ``reflect`` rejects a NULL argument.
 
-        return s.map(
-            lambda x: unicodedata.normalize(form, x) if x is not None else None
+    ICU 77.1 implements Unicode 16.0, newer than Python 3.11's
+    ``unicodedata`` (14.0); results differ only on characters assigned
+    after 14.0 (e.g. NFC composes Kirat Rai U+16D67 U+16D67 to
+    U+16D68). A ``form`` outside the four raises ``ValueError`` here,
+    before any job runs."""
+    if form not in _NORMALIZER_FORMS:
+        raise ValueError(
+            f"normalize_unicode form {form!r}: "
+            f"expected one of {', '.join(_NORMALIZER_FORMS)}"
         )
-
-    _norm.__annotations__ = {
-        "s": pandas.Series,
-        "return": pandas.Series,
-    }
-    norm = F.pandas_udf(_norm, "string")
-    return df.withColumn(out_col, norm(F.col(text_col)))
+    method, compat = _NORMALIZER_FORMS[form]
+    c = F.col(text_col)
+    return df.withColumn(
+        out_col,
+        F.when(
+            c.isNotNull(),
+            F.reflect(
+                F.lit("com.ibm.icu.text.Normalizer"), F.lit(method), c, F.lit(compat)
+            ),
+        ),
+    )
 
 
 def heavy_hitters(

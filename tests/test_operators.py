@@ -236,6 +236,55 @@ def test_text_stats_columns(spark):
     assert r.fingerprint > 0
 
 
+# Unicode <= 14.0 only: Python 3.11's unicodedata is 14.0, ICU is newer.
+_NORMALIZE_FIXTURE = [
+    "caf\u00e9",  # é composed
+    "cafe\u0301",  # e + combining acute
+    "\ud55c\uae00",  # Hangul syllables
+    "\u1112\u1161\u11ab",  # conjoining jamo
+    "\ufb01le \u2460",  # fi ligature, circled digit one
+    "\u2126 \u212b",  # singletons: ohm sign, angstrom sign
+    "\u1e9b\u0323",  # long s with dot above + dot below: mark reordering
+    "a\U0001f600b",  # astral emoji
+    "",
+    None,
+]
+
+
+def test_normalize_unicode_matches_unicodedata_in_jvm(spark):
+    import unicodedata
+
+    from dataflowex_spark.operators.text import normalize_unicode
+
+    df = spark.createDataFrame([(t,) for t in _NORMALIZE_FIXTURE], "t string")
+    forms = ["NFC", "NFD", "NFKC", "NFKD"]
+    out = df
+    for form in forms:
+        out = normalize_unicode(out, "t", form, form)
+    assert plan_stats(out)["python_evals"] == 0
+    assert dict(out.dtypes)["NFC"] == "string"
+    rows = out.collect()
+    for form in forms:
+        got = [r[form] for r in rows]
+        want = [
+            None if t is None else unicodedata.normalize(form, t)
+            for t in _NORMALIZE_FIXTURE
+        ]
+        assert got == want, form
+    # ICU 77.1 is Unicode 16.0: Kirat Rai (added in 16.0) composes
+    # U+16D67 U+16D67 to U+16D68; Unicode 14.0 leaves the pair alone.
+    kirat = spark.createDataFrame([("\U00016d67\U00016d67",)], "t string")
+    assert normalize_unicode(kirat, "t").first().normalized == "\U00016d68"
+
+
+def test_normalize_unicode_rejects_bad_form_at_build(spark):
+    from dataflowex_spark.operators.text import normalize_unicode
+
+    df = spark.createDataFrame([(None,)], "t string")
+    with pytest.raises(ValueError, match=r"'NFX'.*NFC.*NFD.*NFKC.*NFKD"):
+        normalize_unicode(df, "t", form="NFX")
+
+
 def test_multimodal_feature_plumbing(spark):
     df = spark.createDataFrame([Row(doc_id=1), Row(doc_id=2)]).withColumn(
         "uri", F.concat(F.lit("mem://"), F.col("doc_id"))
@@ -353,7 +402,12 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
 
 
 def test_no_python_eval_in_relational_paths(spark, sf_dir):
-    for name in ["q20_join_inner_multi", "q30_agg_pricing_summary", "q40_window_rank"]:
+    for name in [
+        "q20_join_inner_multi",
+        "q30_agg_pricing_summary",
+        "q40_window_rank",
+        "q210_unicode_normalize",
+    ]:
         fn, _ = Q.REGISTRY[name]
         assert plan_stats(fn(spark, sf_dir))["python_evals"] == 0, name
 
