@@ -76,22 +76,6 @@ def _cell_rows(df: DataFrame, key_col: str, cells: int, sign: int) -> DataFrame:
     )
 
 
-def iblt_build(
-    df: DataFrame, key_col: str, cells: int, sign: int = 1
-) -> DataFrame:
-    """Encode a key set into an m-cell IBLT: cell c holds
-    (Σ sign, XOR key, XOR check(key)) over the keys hashing to c
-    under each of the K hash functions. One explode + one bounded
-    aggregate. ``sign=-1`` marks the negated sketch so that a plain
-    UNION + re-aggregate IS sketch subtraction (counts cancel, XOR
-    is its own inverse)."""
-    return _cell_rows(df, key_col, cells, sign).groupBy("cell").agg(
-        F.sum("d_count").alias("count"),
-        F.expr("bit_xor(d_key)").alias("key_xor"),
-        F.expr("bit_xor(d_check)").alias("check_xor"),
-    )
-
-
 def iblt_diff(
     a: DataFrame, b: DataFrame, key_col: str, cells: int = 256
 ) -> list[tuple[int, str]]:

@@ -67,17 +67,6 @@ def unpartitioned_windows(plan: str) -> int:
     return n
 
 
-def assert_pushdown(df: DataFrame, must_broadcast: bool = False) -> dict:
-    """Bench-time guard: fails loudly if a plan lost its pushed filters
-    or an expected broadcast join degraded to SMJ at small scale."""
-    s = plan_stats(df)
-    if s["scans"] and not s["pushed_filters"]:
-        raise AssertionError(f"no pushed filters in plan: {s}")
-    if must_broadcast and not s["broadcast_joins"]:
-        raise AssertionError(f"expected a broadcast join: {s}")
-    return s
-
-
 def column_lineage(df: DataFrame) -> dict[str, set[tuple[str, str]]]:
     """COLUMN-LEVEL LINEAGE from the analyzed logical plan: for every
     output column, the set of (source_table, source_column) leaves it

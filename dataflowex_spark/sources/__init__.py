@@ -3,7 +3,7 @@
 Reference parity: DataflowEx ingests from IEnumerable / Post
 ([R: Gridsum.DataflowEx/Dataflow.cs # ProcessAsync]) and sinks via
 SqlBulkCopy ([R: Gridsum.DataflowEx/Databases/DbBulkInserter.cs]).
-Here: declarative readers (parquet/csv/json/jdbc/binaryFile, plus
+Here: declarative readers (parquet/orc/text/audited csv/jdbc, plus
 streaming variants) and writers with batch semantics.
 """
 
@@ -20,21 +20,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
     return spark.read.options(**options).parquet(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    opts = {"header": "true", "inferSchema": "false", **options}
-    r = spark.read.options(**opts)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    r = spark.read.options(**options)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.json(path)
 
 
 def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
@@ -83,11 +68,6 @@ def read_jdbc(
     for k, v in options.items():
         r = r.option(k, v)
     return r.load()
-
-
-def from_rows(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
-    """In-memory source (tests / small dims) — the IEnumerable path."""
-    return spark.createDataFrame(list(rows), schema=schema)
 
 
 def write_batch(

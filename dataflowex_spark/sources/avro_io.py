@@ -156,19 +156,6 @@ class _Decoder:
         raise NotImplementedError(f"avro type: {t}")
 
 
-def read_header_schema(path: str) -> dict | list | str:
-    """Decode ONLY the container header's embedded schema — planning
-    metadata (the Avro twin of a parquet footer read): no data
-    blocks are touched, so this is cheap enough to run per file at
-    plan time for field-id column resolution."""
-    with open(path, "rb") as f:
-        if f.read(4) != _MAGIC:
-            raise ValueError(f"not an Avro container file: {path}")
-        meta_dec = _Decoder({"type": "map", "values": "bytes"})
-        meta = meta_dec.read(meta_dec.schema, f)
-    return json.loads(meta["avro.schema"].decode())
-
-
 def read_container(path: str) -> tuple[dict | list | str, list]:
     """Decode an entire container file → (schema, records)."""
     with open(path, "rb") as f:

@@ -4312,14 +4312,6 @@ def _snapshot_meta_nospark(root: str) -> dict:
     return meta
 
 
-def _snapshot_schema_types(root: str) -> tuple[dict, list]:
-    """(column → primitive type name, partitionColumns) from the
-    no-Spark metaData fold — what delta_tail's partition planner
-    needs to type partition values."""
-    types, pcols, _phys, _mode = _snapshot_schema_mapping(root)
-    return types, pcols
-
-
 def _snapshot_schema_mapping(
     root: str,
 ) -> tuple[dict, list, dict, str]:

@@ -13,6 +13,7 @@ from dataflowex_spark.streaming.ops import (
     session_counts,
     dedup_stream,
     run_to_memory,
+    run_foreach_batch,
 )
 
 __all__ = [
@@ -22,4 +23,5 @@ __all__ = [
     "session_counts",
     "dedup_stream",
     "run_to_memory",
+    "run_foreach_batch",
 ]

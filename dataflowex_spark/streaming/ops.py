@@ -4,6 +4,18 @@ All window aggregations are written against a generic event DataFrame
 (ts/user/event_type columns) and work identically on a batch frame —
 tests assert stream output == batch output on the same data (the
 batch expression IS the oracle).
+
+Every drain goes through :func:`run_to_memory` or
+:func:`run_foreach_batch`, which share one rule (``_drain``):
+
+- the trigger is availableNow: process everything, then stop;
+- a checkpoint is kept only where the caller named one; otherwise
+  Spark uses its own temporary checkpoint and deletes it when the
+  query succeeds;
+- the state-partition scope (``_bounded_state_scope``) applies to
+  memory drains only; foreachBatch handlers plan batch jobs;
+- the wait has no timeout, and a failed query raises
+  ``StreamingQueryException``.
 """
 
 from __future__ import annotations
@@ -11,6 +23,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import tempfile
 import uuid
 from contextlib import contextmanager
 
@@ -41,9 +54,9 @@ def _bounded_state_scope(spark: SparkSession):
     state-partition count is a per-deployment capacity decision
     exactly like ``shuffle.partitions`` itself). ``-1`` opts out
     entirely (keep the session value); any other non-integer value
-    raises a ``ValueError`` that names the variable. Batch jobs
-    planned inside the scope (foreachBatch handlers) stay
-    AQE-coalesced, so their results are partition-count-invariant.
+    raises a ``ValueError`` that names the variable. Only memory
+    drains run inside the scope; foreachBatch drains plan batch jobs
+    and keep the session value.
 
     The conf change is SESSION-GLOBAL for the whole drain: any other
     query planned on the same session meanwhile (another thread)
@@ -70,6 +83,83 @@ def _bounded_state_scope(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _drain(writer, checkpoint_dir: str | None):
+    """Start ``writer`` with availableNow and wait for it to finish;
+    returns the finished query. The one drain rule of this module (see
+    the module docstring)."""
+    writer = writer.trigger(availableNow=True)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    query = writer.start()
+    query.awaitTermination()
+    return query
+
+
+class _LatestPointer:
+    """The ``_LATEST`` commit pointer of a versioned state directory:
+    it names the committed version subdirectory, and :meth:`commit`
+    swaps it with an atomic ``os.replace`` once that version is fully
+    written, so readers never see a half-written version."""
+
+    def __init__(self, root: str):
+        self.root = root.rstrip("/")
+        self.path = os.path.join(self.root, "_LATEST")
+
+    def name(self) -> str | None:
+        try:
+            with open(self.path) as f:
+                return f.read().strip() or None
+        except OSError:
+            return None
+
+    def committed(self) -> tuple[int, str | None]:
+        """(batch id, name) of a ``<prefix>_v<batch id>`` version;
+        (-1, None) before the first commit."""
+        name = self.name()
+        try:
+            return int(name.rsplit("_v", 1)[1]), name
+        except (AttributeError, ValueError, IndexError):
+            return -1, None
+
+    def commit(self, name: str) -> None:
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(name)
+        os.replace(tmp, self.path)
+
+
+def _publish_batch_dirs(
+    stream: DataFrame,
+    transform,
+    path: str | None,
+    prefix: str,
+    checkpoint_dir: str | None,
+) -> DataFrame:
+    """Drain ``stream`` through ``transform(batch_df, batch_id)`` and
+    return everything it published.
+
+    Publish is IDEMPOTENT under foreachBatch's at-least-once replay:
+    each micro-batch overwrites its own ``batch-<id>`` subdirectory of
+    the output (the batch id is stable across recovery, so a replay
+    rewrites the same directory instead of appending a second copy).
+    A ``batch-init`` directory holding zero rows of the output schema
+    is written before the stream starts, so the final recursive read
+    succeeds, with the right schema, even when the stream drains zero
+    batches or every batch produces no output."""
+    spark = stream.sparkSession
+    out = (path or (tempfile.mkdtemp(prefix=prefix) + "/out")).rstrip("/")
+    anchor = transform(spark.createDataFrame([], stream.schema), -1)
+    anchor.limit(0).write.mode("overwrite").parquet(out + "/batch-init")
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        transform(batch_df, batch_id).write.mode("overwrite").parquet(
+            f"{out}/batch-{batch_id:012d}"
+        )
+
+    run_foreach_batch(stream, handle, checkpoint_dir)
+    return spark.read.option("recursiveFileLookup", "true").parquet(out)
+
+
 def file_replay_stream(
     spark: SparkSession,
     parquet_path: str,
@@ -86,8 +176,6 @@ def file_replay_stream(
     BoundedCapacity analog).
     """
     import hashlib
-    import os
-    import tempfile
 
     batch = spark.read.parquet(parquet_path)
     # key the staging dir by source content identity (mtime+size), so
@@ -188,9 +276,18 @@ def dedup_stream(
     ts_col: str = "ts",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Stateful exact dedup with bounded state: dropDuplicates keyed by
-    id within the watermark horizon (state for ids older than the
-    watermark is reclaimed — mandatory at unbounded scale)."""
+    """Stateful dedup on ``id_cols`` with BOUNDED state: on a stream,
+    ``dropDuplicatesWithinWatermark`` keeps a key's dedup state only
+    until the watermark passes it, so state size tracks the lateness
+    bound instead of the whole stream history (a plain
+    ``dropDuplicates`` on a stream keeps every id forever: fine for a
+    replay, an OOM on an unbounded production stream).
+
+    Contract vs exact dedup: a duplicate arriving MORE than
+    ``watermark`` after its twin (already possible only for data later
+    than the watermark allows) can be re-emitted; events within the
+    bound dedup exactly. On a batch frame this is exact
+    ``dropDuplicates``, the oracle the stream is tested against."""
     df = _with_watermark(events, ts_col, watermark)
     if df.isStreaming:
         return df.dropDuplicatesWithinWatermark(list(id_cols))
@@ -251,16 +348,8 @@ def asof_join_stream(
     joins the static/history ``right`` side through the
     union-interleave :func:`~dataflowex_spark.operators.joins.asof_join`
     inside ``foreachBatch``. Drains with availableNow and returns the
-    enriched result frame.
-
-    Publish is IDEMPOTENT under foreachBatch's at-least-once replay:
-    each micro-batch overwrites its own ``batch-<id>`` subdirectory of
-    ``out_path`` (the batch_id is stable across recovery, so a replay
-    rewrites the same directory instead of appending a second copy).
-    An ``batch-init`` directory holding zero rows of the enriched
-    schema is written before the stream starts, so the final read
-    succeeds — with the right schema — even when the stream drains
-    zero batches or every batch produces no output.
+    enriched result frame, published batch by batch under ``path``
+    (idempotent under replay: see ``_publish_batch_dirs``).
 
     Stream == batch exactly: an as-of match is a per-left-row property
     of the FULL right side, so partitioning the left into micro-batches
@@ -270,14 +359,9 @@ def asof_join_stream(
     without a lateness bound; :func:`asof_join_stream_stream` packages
     exactly that bounded shape.)
     """
-    import tempfile
-
     from dataflowex_spark.operators.joins import asof_join
 
-    spark = left_stream.sparkSession
-    out_path = path or (tempfile.mkdtemp(prefix="asof_stream_") + "/out")
-
-    def enrich(batch_df: DataFrame) -> DataFrame:
+    def enrich(batch_df: DataFrame, _batch_id: int) -> DataFrame:
         return asof_join(
             batch_df,
             right,
@@ -289,26 +373,9 @@ def asof_join_stream(
             tie_break=tie_break,
         )
 
-    # schema anchor: guarantees the post-drain read never hits
-    # PATH_NOT_FOUND and pins the enriched schema for empty results
-    enrich(spark.createDataFrame([], left_stream.schema)).write.mode(
-        "overwrite"
-    ).parquet(out_path.rstrip("/") + "/batch-init")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        enrich(batch_df).write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch-{batch_id:012d}"
-        )
-
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="asof_ckpt_")
-    q = (
-        left_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _publish_batch_dirs(
+        left_stream, enrich, path, "asof_stream_", checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
 
 
 def asof_join_stream_stream(
@@ -422,19 +489,34 @@ def run_to_memory(
     ``checkpoint_dir`` pins an explicit checkpoint — the handle the
     statestore reader needs (see :func:`run_with_state`)."""
     name = query_name or f"mem_{uuid.uuid4().hex[:8]}"
-    w = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
     spark = stream_df.sparkSession
     with _bounded_state_scope(spark):
-        q = w.start()
-        q.awaitTermination()
+        _drain(
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode),
+            checkpoint_dir,
+        )
     return spark.table(name), name
+
+
+def run_foreach_batch(
+    stream_df: DataFrame,
+    handle,
+    checkpoint_dir: str | None = None,
+    output_mode: str = "append",
+):
+    """Drain a stream with availableNow, calling
+    ``handle(batch_df, batch_id)`` once per micro-batch, and return the
+    finished query. The handler plans ordinary batch jobs, so the
+    state-partition scope of :func:`run_to_memory` does not apply.
+    Without ``checkpoint_dir`` Spark's temporary checkpoint is used and
+    deleted; a handler that raises fails the drain with
+    ``StreamingQueryException``."""
+    return _drain(
+        stream_df.writeStream.foreachBatch(handle).outputMode(output_mode),
+        checkpoint_dir,
+    )
 
 
 def upsert_sink(
@@ -457,8 +539,6 @@ def upsert_sink(
     Runs with availableNow (drain everything, then stop); returns the
     number of rows appended across all batches.
     """
-    import tempfile
-
     from dataflowex_spark.sources import incremental_append
 
     appended = {"n": 0}
@@ -466,14 +546,7 @@ def upsert_sink(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         appended["n"] += incremental_append(batch_df, path, key)
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="upsert_ckpt_")
-    q = (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, handle, checkpoint_dir)
     return appended["n"]
 
 
@@ -535,108 +608,6 @@ def stateful_dispatch_counts(
     )
 
 
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can actually run: the TWS
-    Python runner speaks protobuf to the JVM state server, so the
-    API exists in pyspark 4.x but crashes without google.protobuf."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_dispatch_counts_tws(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Spark 4-native arbitrary-state dispatcher: same contract as
-    :func:`stateful_dispatch_counts` (per-key running count + exact
-    cents sum, one row per key per micro-batch) built on
-    ``transformWithStateInPandas`` — the successor API with typed
-    state variables, timers and TTL.
-
-    Requirements (probed by :func:`tws_available`): google.protobuf
-    in the Python env, and the RocksDB state store
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) on the session. On a
-    batch frame, falls back to the identical decimal-exact groupBy so
-    the operator stays oracle-testable everywhere.
-    """
-    import pandas as pd
-
-    if not events.isStreaming:
-        return events.groupBy(F.col(key_col).alias("key")).agg(
-            F.count("*").alias("n"),
-            F.sum(F.col(value_col).cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total"),
-        )
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not installed in this environment; use "
-            "stateful_dispatch_counts (applyInPandasWithState) instead"
-        )
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.state = handle.getValueState("agg", "n long, total_cents long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, cents = self.state.get() if self.state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int((pdf[value_col] * 100).round().sum())
-            self.state.update((n, cents))
-            yield pd.DataFrame(
-                [{"key": key[0], "n": n, "total": cents / 100.0}]
-            )
-
-        def close(self) -> None:
-            pass
-
-    df = _with_watermark(events, ts_col, watermark)
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningAgg(),
-        outputStructType="key string, n long, total double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def dedup_stream_bounded(
-    stream_df: DataFrame,
-    keys: list[str],
-    watermark_col: str,
-    delay: str = "1 hour",
-) -> DataFrame:
-    """State-BOUNDED streaming dedup: ``dropDuplicatesWithinWatermark``
-    keeps a key's dedup state only until the watermark passes it, so
-    state size tracks the lateness bound instead of the whole stream
-    history — the 100 TB requirement (`dedup_stream`'s plain
-    ``dropDuplicates`` state grows without bound; fine for replays and
-    tests, an OOM on an unbounded production stream).
-
-    Contract change vs exact dedup: a duplicate arriving MORE than
-    ``delay`` after its twin (already possible only for data later
-    than the watermark allows) can be re-emitted. Events within the
-    bound dedup exactly."""
-    return _with_watermark(
-        stream_df, watermark_col, delay
-    ).dropDuplicatesWithinWatermark(keys)
-
-
 def enrich_with_dim(
     stream_df: DataFrame,
     dim_df: DataFrame,
@@ -678,34 +649,25 @@ def incremental_agg_sink(
       is skipped, and a crash BEFORE the pointer swap replays into a
       full overwrite of the same version directory.
 
-    Returns (query, handler) — the handler is exposed so tests can
+    Drains with availableNow and returns (query, handler): the query
+    has already finished, and the handler is exposed so tests can
     drive replay scenarios directly. Read the table back with
     :func:`read_agg_state`.
 
     Scale shape: per trigger, one map-side-combined partial over the
     batch + one keyed merge over (state ∪ partial) — cost tracks the
     batch and the key cardinality, never the stream's history."""
-    import os
-
     from dataflowex_spark.operators.etl import (
         merge_aggregate,
         partial_aggregate,
     )
 
-    root = state_path.rstrip("/")
+    pointer = _LatestPointer(state_path)
+    root = pointer.root
     os.makedirs(root, exist_ok=True)
-    pointer = os.path.join(root, "_LATEST")
-
-    def _committed() -> tuple[int, str | None]:
-        try:
-            with open(pointer) as f:
-                name = f.read().strip()
-            return int(name.rsplit("_v", 1)[1]), name
-        except (OSError, ValueError, IndexError):
-            return -1, None
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_name = _committed()
+        last_id, last_name = pointer.committed()
         if batch_id <= last_id:
             return  # at-least-once replay of an already-folded batch
         spark = batch_df.sparkSession
@@ -718,30 +680,20 @@ def incremental_agg_sink(
         new_state = merge_aggregate(state, part, keys, spec)
         vname = f"state_v{batch_id}"
         new_state.write.mode("overwrite").parquet(os.path.join(root, vname))
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(vname)
-        os.replace(tmp, pointer)  # atomic commit
+        pointer.commit(vname)
 
-    writer = stream_df.writeStream.foreachBatch(handle).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.trigger(availableNow=True).start()
+    query = run_foreach_batch(stream_df, handle, checkpoint or None, "update")
     return query, handle
 
 
 def read_agg_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     """Read the committed aggregate state written by
     :func:`incremental_agg_sink` (None before the first commit)."""
-    import os
-
-    pointer = os.path.join(state_path.rstrip("/"), "_LATEST")
-    try:
-        with open(pointer) as f:
-            name = f.read().strip()
-    except OSError:
+    pointer = _LatestPointer(state_path)
+    name = pointer.name()
+    if name is None:
         return None
-    return spark.read.parquet(os.path.join(state_path.rstrip("/"), name))
+    return spark.read.parquet(os.path.join(pointer.root, name))
 
 
 def enrich_with_dim_parking(
@@ -768,24 +720,15 @@ def enrich_with_dim_parking(
 
     Scale shape: per trigger cost is (batch + parked) ⋈ dim — the
     parked set stays bounded by genuinely-late keys, and the dim side
-    broadcasts. Returns (query, handler)."""
-    import os
-
-    root = park_path.rstrip("/")
+    broadcasts. Drains with availableNow and returns (query, handler);
+    the query has already finished."""
+    pointer = _LatestPointer(park_path)
+    root = pointer.root
     os.makedirs(root, exist_ok=True)
     os.makedirs(out_path, exist_ok=True)
-    pointer = os.path.join(root, "_LATEST")
-
-    def _committed() -> tuple[int, str | None]:
-        try:
-            with open(pointer) as f:
-                name = f.read().strip()
-            return int(name.rsplit("_v", 1)[1]), name
-        except (OSError, ValueError, IndexError):
-            return -1, None
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_name = _committed()
+        last_id, last_name = pointer.committed()
         if batch_id <= last_id:
             return
         spark = batch_df.sparkSession
@@ -808,15 +751,9 @@ def enrich_with_dim_parking(
             )
         vname = f"park_v{batch_id}"
         unmatched.write.mode("overwrite").parquet(os.path.join(root, vname))
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(vname)
-        os.replace(tmp, pointer)
+        pointer.commit(vname)
 
-    writer = stream_df.writeStream.foreachBatch(handle).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.trigger(availableNow=True).start()
+    query = run_foreach_batch(stream_df, handle, checkpoint or None, "update")
     return query, handle
 
 
@@ -838,54 +775,26 @@ def drift_monitor_stream(
     :func:`~dataflowex_spark.operators.mleval.population_stability_index`
     (reference edges are re-derived from the static side inside the
     batch plan — at scale, pre-compute and broadcast them once) and
-    publishes one ``(batch_id, psi, n_ref, n_cur)`` row. Publish is
-    idempotent under foreachBatch's at-least-once replay: every batch
-    overwrites its own ``batch-<id>`` directory (same discipline as
-    :func:`asof_join_stream`), and a zero-row schema anchor guarantees
-    the post-drain read succeeds even for an empty stream.
+    publishes one ``(batch_id, psi, n_ref, n_cur)`` row, idempotently
+    under replay (``_publish_batch_dirs``, as :func:`asof_join_stream`).
 
     Stream vs batch: PSI is NOT batch-decomposable (each micro-batch
     is scored alone, by design — that IS the monitoring semantics),
     so the contract here is per-batch equivalence: each emitted row
     equals the batch PSI of that chunk, which the test asserts.
     """
-    import tempfile
-
-    from pyspark.sql import functions as SF
-
     from dataflowex_spark.operators.mleval import (
         population_stability_index,
     )
 
-    spark = stream_df.sparkSession
-    out_path = path or (tempfile.mkdtemp(prefix="drift_stream_") + "/out")
-
     def score(batch_df: DataFrame, batch_id: int) -> DataFrame:
         return population_stability_index(
             reference, batch_df, value=value, n_bins=n_bins
-        ).withColumn("batch_id", SF.lit(batch_id))
+        ).withColumn("batch_id", F.lit(batch_id))
 
-    # schema anchor (empty current side → smoothed PSI of nothing is
-    # still a valid 1-row frame; we keep ZERO rows, just the schema)
-    anchor = score(spark.createDataFrame([], stream_df.schema), -1).limit(0)
-    anchor.write.mode("overwrite").parquet(
-        out_path.rstrip("/") + "/batch-init"
+    return _publish_batch_dirs(
+        stream_df, score, path, "drift_stream_", checkpoint_dir
     )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        score(batch_df, batch_id).write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch-{batch_id:012d}"
-        )
-
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="drift_ckpt_")
-    q = (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
 
 
 def mtable_merge_stream(
@@ -925,7 +834,6 @@ def mtable_merge_stream(
     touches only range-affected files — a trickle of CDC against a
     100 TB table rewrites a handful of files per batch.
     """
-    import tempfile
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= table.last_stream_batch(app_id):
@@ -939,14 +847,7 @@ def mtable_merge_stream(
             stream_batch=(app_id, batch_id),
         )
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="mtable_ckpt_")
-    q = (
-        change_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(change_stream, handle, checkpoint_dir)
     return table.current_version()
 
 
@@ -969,23 +870,12 @@ def stream_hll_maintenance(
     sketches can't offer across engines.
 
     Returns the final register DataFrame (group_col, j, m_j)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from dataflowex_spark.operators.sketches import hll_registers
 
     state = state_dir or tempfile.mkdtemp(prefix="hll_state_")
-    pointer = os.path.join(state, "_LATEST")
+    pointer = _LatestPointer(state)
 
     stream = file_replay_stream(spark, parquet_path, n_chunks=4)
-
-    def _latest() -> str | None:
-        try:
-            with open(pointer) as f:
-                return f.read().strip() or None
-        except OSError:
-            return None
 
     # versioned write + atomic pointer swap (the incremental_agg_sink
     # commit idiom in this module): ONE parquet write per batch where
@@ -999,7 +889,7 @@ def stream_hll_maintenance(
     # unversioned ``registers``.
     def fold(batch_df, batch_id):
         regs = hll_registers(batch_df, [group_col], key_col)
-        last = _latest()
+        last = pointer.name()
         src = last
         if src is None and os.path.isdir(os.path.join(state, "registers")):
             src = "registers"
@@ -1014,26 +904,13 @@ def stream_hll_maintenance(
             )
         vname = f"registers_v{batch_id}"
         regs.write.mode("overwrite").parquet(os.path.join(state, vname))
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(vname)
-        os.replace(tmp, pointer)
+        pointer.commit(vname)
         for d in os.listdir(state):
             if re.fullmatch(r"registers_v\d+", d) and d not in (vname, last):
                 shutil.rmtree(os.path.join(state, d), ignore_errors=True)
 
-    q = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(fold)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="hll_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    final = _latest()
+    run_foreach_batch(stream, fold, output_mode="update")
+    final = pointer.name()
     return spark.read.parquet(
         os.path.join(state, final if final else "registers")
     )
@@ -1106,7 +983,6 @@ def ordered_event_replay(
     appended as the final files: the first advances the watermark
     past all real data, the next triggers the eviction batch that
     emits the tail — the flush idiom Spark's availableNow needs."""
-    import os
     import time as _time
 
     import pyarrow as pa
@@ -1263,40 +1139,18 @@ def enrich_with_scd2(
     version join) that silently misattributes every late or replayed
     event after a dimension change.
 
-    Same idempotent batch-dir publish protocol as
-    :func:`asof_join_stream` (stable batch ids overwrite their own
-    directory under replay; a schema-anchor init dir makes the
-    post-drain read total). Stream == batch exactly: a PIT match is
+    Same idempotent batch-dir publish as :func:`asof_join_stream`
+    (``_publish_batch_dirs``). Stream == batch exactly: a PIT match is
     a per-event property of the full history, so micro-batch
     boundaries cannot change any row's match."""
-    import tempfile
-
     from dataflowex_spark.operators.etl import pit_join
 
-    spark = stream.sparkSession
-    out_path = path or (tempfile.mkdtemp(prefix="scd2_stream_") + "/out")
-
-    def enrich(batch_df: DataFrame) -> DataFrame:
+    def enrich(batch_df: DataFrame, _batch_id: int) -> DataFrame:
         return pit_join(
             batch_df, history, key, ts_col,
             from_col=from_col, to_col=to_col, suffix=suffix,
         )
 
-    enrich(spark.createDataFrame([], stream.schema)).write.mode(
-        "overwrite"
-    ).parquet(out_path.rstrip("/") + "/batch-init")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        enrich(batch_df).write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch-{batch_id:012d}"
-        )
-
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="scd2_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _publish_batch_dirs(
+        stream, enrich, path, "scd2_stream_", checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)

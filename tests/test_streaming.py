@@ -76,7 +76,7 @@ def test_watermark_append_emits_only_closed_windows(events_batch, events_stream)
     assert 0 < out.count() <= batch_n
 
 
-def test_dedup_stream_bounded_state(events_batch, events_stream):
+def test_dedup_stream_matches_batch_distinct(events_batch, events_stream):
     # watermark beyond the data span: nothing is ever late, so the
     # streaming dedup must agree exactly with batch distinct
     stream = dedup_stream(events_stream, watermark="60 days")
@@ -259,57 +259,6 @@ def test_upsert_sink_idempotent_across_replay(spark, sf_dir, tmp_path):
     )
     assert n2 == 0
     assert spark.read.parquet(path).count() == total
-
-
-def test_tws_batch_fallback_matches_apply_in_pandas_variant(spark, sf_dir):
-    """The transformWithStateInPandas dispatcher shares the batch
-    contract with the applyInPandasWithState one."""
-    from dataflowex_spark.catalog import Catalog
-    from dataflowex_spark.streaming.ops import (
-        stateful_dispatch_counts,
-        stateful_dispatch_counts_tws,
-    )
-
-    ev = Catalog(spark, sf_dir)["events"]
-    a = {r.key: (r.n, r.total) for r in stateful_dispatch_counts(ev).collect()}
-    b = {r.key: (r.n, r.total) for r in stateful_dispatch_counts_tws(ev).collect()}
-    assert a == b and len(a) > 0
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "dataflowex_spark.streaming.ops", fromlist=["tws_available"]
-    ).tws_available(),
-    reason="google.protobuf not installed — TWS python runner cannot start",
-)
-def test_tws_streaming_running_totals(spark, sf_dir):
-    """Streamed TWS totals converge to the batch aggregate (final
-    update per key == full-data aggregate)."""
-    from dataflowex_spark.catalog import Catalog
-    from dataflowex_spark.streaming.ops import (
-        file_replay_stream,
-        run_to_memory,
-        stateful_dispatch_counts_tws,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = file_replay_stream(spark, f"{sf_dir}/events.parquet", n_chunks=4)
-    out, name = run_to_memory(
-        stateful_dispatch_counts_tws(stream), output_mode="update"
-    )
-    import pyspark.sql.functions as F
-
-    last = (
-        out.withColumn("_i", F.monotonically_increasing_id())
-        .groupBy("key")
-        .agg(F.max_by(F.struct("n", "total"), "_i").alias("s"))
-        .select("key", "s.n", "s.total")
-    )
-    batch = stateful_dispatch_counts_tws(Catalog(spark, sf_dir)["events"])
-    assert {tuple(r) for r in last.collect()} == {tuple(r) for r in batch.collect()}
 
 
 def test_interval_join_left_outer_semantics(spark, sf_dir):
@@ -522,8 +471,6 @@ def test_dedup_stream_bounded_state(spark, sf_dir):
     """dropDuplicatesWithinWatermark-based dedup: replaying a stream
     with every event DUPLICATED yields exactly the batch-distinct
     event set (all duplicates here are within the lateness bound)."""
-    from dataflowex_spark.streaming.ops import dedup_stream_bounded
-
     batch = Catalog(spark, sf_dir)["events"].select(
         "event_id", "user_id", "ts"
     )
@@ -532,7 +479,7 @@ def test_dedup_stream_bounded_state(spark, sf_dir):
     ).select("event_id", "user_id", "ts")
     doubled = stream.unionByName(stream)  # every event appears twice
     out, _ = run_to_memory(
-        dedup_stream_bounded(doubled, ["event_id"], "ts", "365 days"),
+        dedup_stream(doubled, ("event_id",), "ts", "365 days"),
         output_mode="append",
     )
     assert out.count() == batch.count()
@@ -1920,3 +1867,81 @@ def test_q367_removes_its_replay_dir(spark, sf_dir, tmp_path, monkeypatch):
         .collect()
     )
     assert got == want
+
+
+def test_drains_leave_no_checkpoint_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """A drain keeps a checkpoint only where the caller names one:
+    q262's memory drain and an asof_join_stream foreachBatch drain
+    without ``checkpoint_dir`` leave no checkpoint directory behind."""
+    import tempfile
+
+    from dataflowex_spark.queries import REGISTRY
+    from dataflowex_spark.streaming.ops import asof_join_stream
+
+    clicks = Catalog(spark, sf_dir)["events"].select(
+        F.col("event_id").alias("click_id"), "user_id", "ts"
+    )
+    left = file_replay_stream(
+        spark, f"{sf_dir}/events.parquet", n_chunks=2
+    ).select("event_id", "user_id", "ts")
+    private = tmp_path / "tmp"
+    private.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(private))
+
+    fn, _ = REGISTRY["q262_python_stream_source"]
+    assert fn(spark, sf_dir).count() > 0
+    got = asof_join_stream(
+        left, clicks, on="user_id", left_ts="ts", right_ts="ts",
+        tie_break="click_id", path=str(tmp_path / "asof_out"),
+    )
+    assert got.count() > 0
+    assert not [p.name for p in private.glob("*ckpt*")]
+
+
+def test_run_foreach_batch_handler_failure_raises(spark, tmp_path):
+    """A handler that raises fails the drain: no timeout, no silent
+    partial result."""
+    from pyspark.errors import StreamingQueryException
+
+    from dataflowex_spark.streaming.ops import run_foreach_batch
+
+    src = tmp_path / "src"
+    spark.range(10).write.parquet(str(src))
+    stream = spark.readStream.schema("id long").parquet(str(src))
+
+    def handle(batch_df, batch_id):
+        raise RuntimeError("handler failed")
+
+    with pytest.raises(StreamingQueryException):
+        run_foreach_batch(stream, handle)
+
+
+def test_one_await_point():
+    """Every drain in the package waits in ``streaming.ops._drain``:
+    ``awaitTermination(`` appears exactly once, inside it."""
+    import ast
+    import pathlib
+
+    import dataflowex_spark
+
+    root = pathlib.Path(dataflowex_spark.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text()
+        if "awaitTermination(" not in text:
+            continue
+        fns = [
+            f for f in ast.walk(ast.parse(text))
+            if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for no, line in enumerate(text.splitlines(), 1):
+            for _ in range(line.count("awaitTermination(")):
+                inner = min(
+                    (f for f in fns if f.lineno <= no <= f.end_lineno),
+                    key=lambda f: f.end_lineno - f.lineno,
+                    default=None,
+                )
+                sites.append(
+                    (path.relative_to(root).as_posix(), inner and inner.name)
+                )
+    assert sites == [("streaming/ops.py", "_drain")]
