@@ -1213,6 +1213,8 @@ def lsh_index_compact(
     import shutil
     import uuid as _uuid
 
+    from dataflowex_spark.sources.footer_stats import local_path
+
     tomb = _lsh_tombstones(spark, table_name)
     if tomb is None or tomb.limit(1).count() == 0:
         return 0
@@ -1224,7 +1226,7 @@ def lsh_index_compact(
         .filter(F.col("col_name") == "Location")
         .first()["data_type"]
     )
-    old_path = old_loc[len("file:"):] if old_loc.startswith("file:") else old_loc
+    old_path = local_path(old_loc)
     new_path = old_path.rstrip("/") + f"_g{_uuid.uuid4().hex[:8]}"
     staged = f"{table_name}_staged"
     old_name = f"{table_name}_old"

@@ -199,14 +199,15 @@ def spread_small_scan(
     construction and the plan is untouched."""
     import os as _os
 
+    from dataflowex_spark.sources.footer_stats import local_path
+
     files = df.inputFiles()
     if not files:
         return df
     total = 0
     for f in files:
-        local = re.sub(r"^file:/*", "/", f)
         try:
-            total += _os.stat(local).st_size
+            total += _os.stat(local_path(f)).st_size
         except OSError:
             return df  # non-local storage: stay out of the way
         if total > cap_bytes:

@@ -32,6 +32,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataflowex_spark.sources.footer_stats import local_path
+
 
 def cacheable(df: DataFrame) -> bool:
     """Whether a plan's fingerprint actually pins its DATA.
@@ -61,7 +63,7 @@ def plan_fingerprint(df: DataFrame) -> str:
     canon = re.sub(r"#\d+L?", "#", analyzed)
     h = hashlib.sha256(canon.encode())
     for path in sorted(df.inputFiles()):
-        local = re.sub(r"^file:/*", "/", path)
+        local = local_path(path)
         try:
             st = os.stat(local)
             ident = f"{local}:{st.st_size}:{st.st_mtime_ns}"

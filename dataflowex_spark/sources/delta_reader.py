@@ -59,7 +59,6 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
-import re
 import urllib.parse as _uparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -72,6 +71,11 @@ from dataflowex_spark.sources import (
     utc_clock,
 )
 from dataflowex_spark.sources.commit_backend import get_commit_backend
+from dataflowex_spark.sources.footer_stats import (
+    file_path_col,
+    file_stats,
+    hive_values,
+)
 
 _SUPPORTED_READER_FEATURES = {
     "timestampNtz",  # type-only, no read-path behavior change
@@ -371,21 +375,6 @@ def _typed_partition_lit(value: str | None, dtype: T.DataType):
     return F.lit(value).cast(dtype)
 
 
-def _file_path_col():
-    """``_metadata.file_path`` → the ON-DISK path: scheme stripped,
-    URI percent-escapes decoded (a literal ``+`` is pre-escaped so
-    url_decode's form-decoding cannot turn it into a space). Without
-    the decode, hive-escaped partition dirs (space → ``%20`` on
-    disk → ``%2520`` in the scan's URI) mismatch the raw
-    ``add.path`` the log records — DVs would silently not apply and
-    DML would fail to find its own files (caught by the r8 ops
-    runbook example on a ``NOT SPECIFIED`` partition value)."""
-    c = F.regexp_replace(
-        F.col("_metadata.file_path"), "^file:/*", "/"
-    )
-    return F.url_decode(F.regexp_replace(c, r"\+", "%2B"))
-
-
 def _mapping_mode(meta: dict) -> str:
     mode = (meta.get("configuration") or {}).get(
         "delta.columnMapping.mode", "none"
@@ -673,7 +662,7 @@ def read_delta(
         if dead:
             df = df.select(
                 "*",
-                _file_path_col().alias("__fp"),
+                file_path_col().alias("__fp"),
                 F.col("_metadata.row_index").alias("__ri"),
             )
         id_name = (
@@ -1070,7 +1059,7 @@ def read_delta_changes(
             if dead:
                 df = df.select(
                     "*",
-                    _file_path_col().alias("__fp"),
+                    file_path_col().alias("__fp"),
                     F.col("_metadata.row_index").alias("__ri"),
                 )
             have = set(df.columns)
@@ -1794,10 +1783,9 @@ def _stage_data_files(
     """Write ``df`` as the table's data files (executor-side staging
     job, hive layout under ``partition_by``, atomic renames into
     ``data/``) and return the ``{"add": ...}`` actions with per-file
-    min/max stats aggregated in ONE ``input_file_name``-grouped
-    pass. Shared by :func:`write_delta` and :func:`update_delta`."""
+    min/max stats (:func:`footer_stats.file_stats`). Shared by
+    :func:`write_delta` and :func:`update_delta`."""
     import shutil
-    import urllib.parse as _up
     import uuid as _uuid
 
     job = os.path.join(dest, f"_stage-{_uuid.uuid4().hex}")
@@ -1805,29 +1793,11 @@ def _stage_data_files(
     if pcols:
         w = w.partitionBy(*pcols)
     w.parquet(job)
-    from dataflowex_spark.sources.footer_stats import footer_file_stats
-
     # stats come from the parquet footers the write tasks already
     # produced (partition columns live in the hive dirs, not the
-    # files, so footers carry exactly the scols); the distributed
-    # re-scan below is only the fallback for stats the footers
-    # cannot reproduce exactly (see footer_stats docstring)
-    stats_rows = footer_file_stats(job, scols, recursive=True)
-    if stats_rows is not None:
-        stats_rows = [{**r, "__path": r["path"]} for r in stats_rows]
-    else:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in scols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        stats_rows = [
-            r.asDict()
-            for r in spark.read.parquet(job)
-            .drop(*pcols)  # partition cols re-derive from paths below
-            .groupBy(F.input_file_name().alias("__path"))
-            .agg(*aggs)
-            .collect()
-        ]
+    # files, so footers carry exactly the scols); the grouped re-scan
+    # is only the fallback (see footer_stats docstring)
+    stats_rows = file_stats(spark, job, scols, recursive=True)
 
     def jsonable(v):
         import datetime
@@ -1838,30 +1808,14 @@ def _stage_data_files(
 
     adds = []
     for r in stats_rows:
-        # input_file_name() is a URI: decode %-escapes to the
-        # on-disk name (hive value escaping decodes separately).
-        # Footer-sourced rows already carry the raw on-disk path —
-        # a second unquote would corrupt hive-escaped dir names.
-        if r["__path"].startswith("file:"):
-            src = _up.unquote(re.sub(r"^file:/*", "/", r["__path"]))
-        else:
-            src = r["__path"]
+        src = r["path"]
         rel_dir = os.path.relpath(os.path.dirname(src), job)
-        pv: dict[str, str | None] = {}
-        if pcols:
-            for seg in rel_dir.split(os.sep):
-                if "=" in seg:
-                    k, _, raw = seg.partition("=")
-                    pv[k] = (
-                        None
-                        if raw == "__HIVE_DEFAULT_PARTITION__"
-                        else _up.unquote(raw)
-                    )
-            missing = [c for c in pcols if c not in pv]
-            if missing:
-                raise ValueError(
-                    f"staged file {src} lacks partition dirs {missing}"
-                )
+        pv = hive_values(rel_dir)
+        missing = [c for c in pcols if c not in pv]
+        if missing:
+            raise ValueError(
+                f"staged file {src} lacks partition dirs {missing}"
+            )
         name = (
             "data/"
             + (rel_dir + "/" if rel_dir != "." else "")
@@ -2067,13 +2021,14 @@ def write_delta(
     Files write executor-side as ordinary parquet (one staging job,
     atomic renames into ``data/``); per-file min/max stats for the
     key numeric/string columns (``stats_cols``, default: all
-    top-level primitive columns) aggregate in ONE pass grouped by
-    ``input_file_name`` and land in ``add.stats`` — so tables
-    written here get data skipping from day one. The commit is a
-    single JSON append; concurrent writers race on the version slot
-    through the pluggable commit backend (put-if-absent: os.link on
-    POSIX, conditional PUT on an object store) — the loser retries
-    with the next number, delta's optimistic concurrency.
+    top-level primitive columns) come from the write's parquet
+    footers (:func:`footer_stats.file_stats`) and land in
+    ``add.stats`` — so tables written here get data skipping from
+    day one. The commit is a single JSON append; concurrent writers
+    race on the version slot through the pluggable commit backend
+    (put-if-absent: os.link on POSIX, conditional PUT on an object
+    store) — the loser retries with the next number, delta's
+    optimistic concurrency.
 
     ``partition_by``: hive-layout partitioned staging
     (``data/<col>=<val>/…``), canonical string partitionValues per
@@ -2096,8 +2051,6 @@ def write_delta(
     ``_last_checkpoint`` flipped — so a long-lived written table's
     snapshot resolution stays O(log tail) instead of replaying an
     ever-longer JSON commit chain."""
-    import shutil
-    import urllib.parse as _up
     import uuid as _uuid
 
     pcols = list(partition_by or [])
@@ -2763,7 +2716,6 @@ def _stage_cdc(
     actions — executor-side parquet write, one move per file;
     volume is change-bound, never table-bound."""
     import shutil
-    import urllib.parse as _up
     import uuid as _uuid
 
     job = os.path.join(dest, f"_cdcstage-{_uuid.uuid4().hex}")
@@ -2779,16 +2731,7 @@ def _stage_cdc(
                 continue
             src = os.path.join(dirpath, fn)
             rel_dir = os.path.relpath(dirpath, job)
-            pv: dict[str, str | None] = {}
-            if pcols and rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    if "=" in seg:
-                        k, _, raw = seg.partition("=")
-                        pv[k] = (
-                            None
-                            if raw == "__HIVE_DEFAULT_PARTITION__"
-                            else _up.unquote(raw)
-                        )
+            pv = hive_values(rel_dir)
             name = (
                 "_change_data/"
                 + (
@@ -2971,7 +2914,7 @@ def _dml_scan(
         piece = piece.select(
             *sel,
             *[F.col(c) for c in (extra_cols or [])],
-            _file_path_col().alias("__fp"),
+            file_path_col().alias("__fp"),
             F.col("_metadata.row_index").alias("__ri"),
         )
         pv = dict(key)
@@ -4630,14 +4573,13 @@ def convert_to_delta(
     (``partition_schema``: column → Spark type string, required for
     partitioned layouts exactly like delta-spark's ``CONVERT TO
     DELTA ... PARTITIONED BY``). Per-file min/max stats for
-    ``stats_cols`` (default: all top-level primitives) aggregate in
-    ONE input_file_name-grouped pass, so the converted table gets
+    ``stats_cols`` (default: all top-level primitives) come from
+    :func:`footer_stats.file_stats`, so the converted table gets
     data skipping immediately. Refuses an existing _delta_log.
 
     The conversion scan reads footers + stats only; data files stay
     where they are, referenced by their (URI-encoded) relative
     paths. Returns version 0."""
-    import urllib.parse as _up
     import uuid as _uuid
 
     log = _log_dir(path)
@@ -4680,27 +4622,12 @@ def convert_to_delta(
             if isinstance(f.dataType, prim) and f.name not in pcols
         ]
     )
-    from dataflowex_spark.sources.footer_stats import footer_file_stats
-
     # in-place convert registers FOREIGN files — their footers carry
-    # the same stats a re-scan would compute; fall back to the
-    # distributed scan when they can't reproduce it exactly. The
-    # explicit list keeps the registered file set byte-identical to
-    # the walk above (incl. underscore-prefixed names).
-    stats_rows = footer_file_stats(path, scols, paths=files)
-    if stats_rows is not None:
-        stats_rows = [{**r, "__path": r["path"]} for r in stats_rows]
-    else:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in scols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        stats_rows = [
-            r.asDict()
-            for r in df.groupBy(F.input_file_name().alias("__path"))
-            .agg(*aggs)
-            .collect()
-        ]
+    # the same stats a re-scan would compute; the grouped scan of
+    # ``df`` is the fallback. The explicit list keeps the registered
+    # file set byte-identical to the walk above (incl.
+    # underscore-prefixed names).
+    stats_rows = file_stats(spark, path, scols, paths=files, scan=df)
 
     def jsonable(v):
         import datetime
@@ -4711,21 +4638,13 @@ def convert_to_delta(
 
     adds = []
     for r in stats_rows:
-        if r["__path"].startswith("file:"):
-            src = _up.unquote(re.sub(r"^file:/*", "/", r["__path"]))
-        else:
-            src = r["__path"]
+        src = r["path"]
         rel = os.path.relpath(src, path)
-        pv: dict[str, str | None] = {}
-        for seg in os.path.dirname(rel).split(os.sep):
-            if "=" in seg:
-                k, _, raw = seg.partition("=")
-                if k in pschema:
-                    pv[k] = (
-                        None
-                        if raw == "__HIVE_DEFAULT_PARTITION__"
-                        else _up.unquote(raw)
-                    )
+        pv = {
+            k: v
+            for k, v in hive_values(os.path.dirname(rel)).items()
+            if k in pschema
+        }
         missing = [c for c in pcols if c not in pv]
         if missing:
             raise ValueError(

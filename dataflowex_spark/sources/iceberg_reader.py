@@ -89,6 +89,11 @@ from dataflowex_spark.sources import (
 )
 from dataflowex_spark.sources.avro_io import read_container
 from dataflowex_spark.sources.commit_backend import get_commit_backend
+from dataflowex_spark.sources.footer_stats import (
+    file_path_col,
+    file_stats,
+    hive_values,
+)
 
 
 class IcebergProtocolError(NotImplementedError):
@@ -97,26 +102,6 @@ class IcebergProtocolError(NotImplementedError):
 
 def _meta_dir(root: str) -> str:
     return os.path.join(root, "metadata")
-
-
-def _scan_path_col():
-    """``_metadata.file_path`` → the ON-DISK path: scheme stripped
-    and URI percent-escapes decoded (a literal ``+`` is pre-escaped
-    so url_decode's form-decoding cannot turn it into a space).
-    Spark URI-encodes the pseudo-column, so a hive-escaped partition
-    dir (space → ``%20`` on disk → ``%2520`` in the scan URI) would
-    otherwise yield a ``__fp`` that differs from the manifest's
-    on-disk ``file_path`` — position-delete sidecars would then
-    record a path no engine (including our own tail reader) can
-    resolve, violating the spec rule that a delete's ``file_path``
-    must equal the data file's manifest path. Mirrors
-    ``delta_reader._file_path_col``."""
-    from pyspark.sql import functions as F
-
-    c = F.regexp_replace(
-        F.col("_metadata.file_path"), "^file:/*", "/"
-    )
-    return F.url_decode(F.regexp_replace(c, r"\+", "%2B"))
 
 
 def _resolve_path(root: str, p: str) -> str:
@@ -1196,7 +1181,7 @@ def read_iceberg(
                 # AVRO pieces carry their own)
                 piece = piece.select(
                     "*",
-                    _scan_path_col().alias("__fp"),
+                    file_path_col().alias("__fp"),
                     F.col("_metadata.row_index").alias("__ri"),
                 )
             if renames:
@@ -2933,9 +2918,7 @@ def _stage_iceberg_entries(
     manifest bounds, executor-side avro transcode when asked) and
     return the status=1 manifest entries. Shared by
     :func:`write_iceberg` and :func:`upsert_iceberg`."""
-    import re as _re
     import shutil
-    import urllib.parse as _up
     import uuid as _uuid
 
     from pyspark.sql import functions as F
@@ -2984,51 +2967,20 @@ def _stage_iceberg_entries(
     if pnames:
         w = w.partitionBy(*pnames)
     getattr(w, stage_format)(job)
-    stats_rows = None
-    if stage_format == "parquet":
-        # stats from the footers the write tasks already produced;
-        # orc/avro stages and footer-unfaithful columns fall back to
-        # the distributed re-scan (see footer_stats docstring)
-        from dataflowex_spark.sources.footer_stats import footer_file_stats
-
-        raw = footer_file_stats(job, scols, recursive=True)
-        if raw is not None:
-            stats_rows = [{**r, "__path": r["path"]} for r in raw]
-    if stats_rows is None:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in scols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        stats_rows = [
-            r.asDict()
-            for r in getattr(spark.read, stage_format)(job)
-            .drop(*pnames)  # partition values re-derive from paths below
-            .groupBy(F.input_file_name().alias("__path"))
-            .agg(*aggs)
-            .collect()
-        ]
+    # footer stats for a parquet stage; orc/avro stages and
+    # footer-unfaithful columns fall back to the grouped re-scan
+    # (see footer_stats docstring)
+    stats_rows = file_stats(
+        spark, job, scols, recursive=True, fmt=stage_format
+    )
     entries = []
     transcode: list[tuple[str, str]] = []
     for r in stats_rows:
-        # input_file_name() is a URI: decode %-escapes to the
-        # on-disk name (hive value escaping decodes separately).
-        # Footer-sourced rows already carry the raw on-disk path.
-        if r["__path"].startswith("file:"):
-            src = _up.unquote(_re.sub(r"^file:/*", "/", r["__path"]))
-        else:
-            src = r["__path"]
+        src = r["path"]
         rel_dir = os.path.relpath(os.path.dirname(src), job)
         ptuple = None
         if pinfo:
-            raw_by_name: dict[str, str | None] = {}
-            for seg in rel_dir.split(os.sep):
-                if "=" in seg:
-                    k, _, raw = seg.partition("=")
-                    raw_by_name[k] = (
-                        None
-                        if raw == "__HIVE_DEFAULT_PARTITION__"
-                        else _up.unquote(raw)
-                    )
+            raw_by_name = hive_values(rel_dir)
             ptuple = {}
             for pf, kind, _param, _src, ice_t in pinfo:
                 dn = f"__p_{pf['name']}"
@@ -3281,9 +3233,6 @@ def _write_iceberg_attempt(
     spec serialization covers) aggregate in ONE pass and land as
     manifest ``lower_bounds``/``upper_bounds`` — written tables get
     manifest-level data skipping from day one."""
-    import re as _re
-    import shutil
-    import urllib.parse as _up
     import uuid as _uuid
 
     from pyspark.sql import functions as F
@@ -3757,7 +3706,7 @@ def _lineage_scan(
     if exp:
         base = spark.read.parquet(*exp).select(
             "*",
-            _scan_path_col().alias("__fp"),
+            file_path_col().alias("__fp"),
             F.col("_metadata.row_index").alias("__ri"),
         )
         fri = spark.createDataFrame(
@@ -3780,7 +3729,7 @@ def _lineage_scan(
     if mat:
         base = spark.read.parquet(*mat).select(
             "*",
-            _scan_path_col().alias("__fp"),
+            file_path_col().alias("__fp"),
             F.col("_metadata.row_index").alias("__ri"),
         )
         base = conform(
@@ -3992,7 +3941,7 @@ def _iceberg_pos_scan(
                 )
             piece = piece.select(
                 "*",
-                _scan_path_col().alias("__fp"),
+                file_path_col().alias("__fp"),
                 F.col("_metadata.row_index").alias("__ri"),
             )
             cur_fields = _current_schema_fields(meta)
@@ -6457,7 +6406,6 @@ def convert_to_iceberg(
     row counts via pyarrow metadata) — O(files) metadata work, zero
     data scan; the delta twin is
     :func:`delta_reader.convert_to_delta`."""
-    import urllib.parse as _up
     import uuid as _uuid
 
     import pyarrow.parquet as _pq
@@ -6530,17 +6478,13 @@ def convert_to_iceberg(
         if pcols:
             pt = {}
             rel = os.path.relpath(fp, path)
-            for seg in os.path.dirname(rel).split(os.sep):
-                if "=" in seg:
-                    k, _, raw = seg.partition("=")
-                    if k in pschema:
-                        pt[k] = (
-                            None
-                            if raw == "__HIVE_DEFAULT_PARTITION__"
-                            else _decode_part_value(
-                                _up.unquote(raw), "identity", pschema[k]
-                            )
-                        )
+            for k, v in hive_values(os.path.dirname(rel)).items():
+                if k in pschema:
+                    pt[k] = (
+                        None
+                        if v is None
+                        else _decode_part_value(v, "identity", pschema[k])
+                    )
             missing = [c for c in pcols if c not in pt]
             if missing:
                 raise ValueError(

@@ -60,6 +60,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataflowex_spark.sources import apply_skip_filter, skip_admits, utc_clock
+from dataflowex_spark.sources.footer_stats import file_stats, local_path
 
 # Per-file Bloom index geometry (Parquet/Delta "bloom filter index"
 # shape, lifted to the MANIFEST so equality probes prune whole files
@@ -87,20 +88,6 @@ class MTableCheckViolation(RuntimeError):
     """Data rejected by a declared CHECK constraint — the commit did
     not happen; nothing became visible (orphaned staging files are
     reclaimed by ``vacuum(delete_orphans=True)``)."""
-
-
-def _local_path(uri: str) -> str:
-    """``input_file_name()`` URIs → canonical local paths (strip the
-    ``file:`` scheme, collapse leading slashes, unquote) so manifest
-    entries compare equal to ``os.walk`` paths in :meth:`MTable.vacuum`."""
-    from urllib.parse import unquote
-
-    p = unquote(uri)
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-    while p.startswith("//"):
-        p = p[1:]
-    return os.path.normpath(p)
 
 
 def _jsonable(v):
@@ -167,7 +154,10 @@ class MTable:
         self, spark: SparkSession, root: str, commit_backend=None
     ):
         self.spark = spark
-        self.root = root
+        # one spelling of the root (see footer_stats.local_path):
+        # manifest entries, DV and bloom keys and vacuum's walk all
+        # derive from it, and Spark resolves no relative path itself
+        self.root = local_path(root)
         self.commit_backend = commit_backend or PosixCommitBackend()
 
     # -- metadata ------------------------------------------------------
@@ -304,37 +294,13 @@ class MTable:
             df = df.repartitionByRange(max(1, n_files), key_col)
         if not bucketed:
             df.write.parquet(job)
-        from dataflowex_spark.sources.footer_stats import footer_file_stats
-
         stat_cols = list(dict.fromkeys([key_col] + scols))
-        raw = footer_file_stats(job, stat_cols)
-        stats = (
-            None
-            if raw is None
-            else [{**r, "rows": r["__rows"]} for r in raw]
-        )
-        if stats is None:
-            # footers can't reproduce the scan exactly (exotic type,
-            # dropped stats, NaN floats) — distributed fallback, the
-            # original full re-read grouped by file
-            aggs = [F.count("*").alias("rows")]
-            for c in stat_cols:
-                aggs.append(F.min(c).alias(f"__mn_{c}"))
-                aggs.append(F.max(c).alias(f"__mx_{c}"))
-            stats = [
-                {**r.asDict(), "path": _local_path(r["path"])}
-                for r in self.spark.read.parquet(job)
-                .groupBy(F.input_file_name().alias("path"))
-                .agg(*aggs)
-                .collect()
-            ]
+        stats = file_stats(self.spark, job, stat_cols)
         entries = []
         for r in stats:
-            if r["rows"] == 0:
-                continue
             e = {
                 "path": r["path"],
-                "rows": r["rows"],
+                "rows": r["__rows"],
                 "min_key": _jsonable(r[f"__mn_{key_col}"]),
                 "max_key": _jsonable(r[f"__mx_{key_col}"]),
             }
@@ -397,7 +363,7 @@ class MTable:
             by_file: dict[str, dict[str, list[int]]] = {}
             for r in word_rows:
                 words = by_file.setdefault(
-                    _local_path(r["path"]), {}
+                    local_path(r["path"]), {}
                 ).setdefault(r["c"], [0] * _BLOOM_WORDS)
                 words[int(r["w"])] = int(r["m"])
             for e in entries:
@@ -1286,18 +1252,18 @@ class MTable:
         # DV files don't accumulate dead weight across generations);
         # path-form note: DV rows carry the reader's _metadata form
         # ("file:/..."), manifests the local form — bridge via
-        # _local_path on the DRIVER over the (small) distinct DV paths
+        # local_path in Python over the (small) distinct DV paths
         old_dv_files = sorted({e["dv"] for e in m["files"] if e.get("dv")})
         old = None
         if old_dv_files:
             old_all = self.spark.read.parquet(*old_dv_files).select(
                 "file_path", "row_index"
             )
-            live = {e["path"] for e in m["files"]}
+            live = {local_path(e["path"]) for e in m["files"]}
             keep_fps = [
                 r["file_path"]
                 for r in old_all.select("file_path").distinct().collect()
-                if _local_path(r["file_path"]) in live
+                if local_path(r["file_path"]) in live
             ]
             old = old_all.where(F.col("file_path").isin(keep_fps))
             new_hits = hits.join(
@@ -1317,7 +1283,7 @@ class MTable:
         # and re-aggregating the old sidecars — new and old are
         # disjoint by the anti-join above
         new_counts = {
-            _local_path(r["file_path"]): r["n"]
+            local_path(r["file_path"]): r["n"]
             for r in new_hits.groupBy("file_path")
             .agg(F.count("*").alias("n"))
             .collect()
@@ -1328,7 +1294,7 @@ class MTable:
             new_hits.unionByName(old) if old is not None else new_hits
         )
         by_local = {
-            e["path"]: new_counts.get(e["path"], 0)
+            e["path"]: new_counts.get(local_path(e["path"]), 0)
             + (e.get("dv_rows") or 0)
             for e in m["files"]
         }
@@ -1905,7 +1871,8 @@ class MTable:
                 if e.get("dv"):
                     out.add(e["dv"])
                 out.update(e.get("eq", []))
-            return out
+            # compared with the walk below in one spelling
+            return {local_path(p) for p in out}
 
         referenced: set[str] = set()
         for v in keep_vs:
@@ -1924,7 +1891,7 @@ class MTable:
             data_root = os.path.join(self.root, "data")
             for dirpath, _dirs, files in os.walk(data_root):
                 for fn in files:
-                    p = os.path.join(dirpath, fn)
+                    p = local_path(os.path.join(dirpath, fn))
                     if (
                         fn.endswith(".parquet")
                         and p not in referenced

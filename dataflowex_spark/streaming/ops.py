@@ -175,18 +175,14 @@ def file_replay_stream(
     (``maxFilesPerTrigger`` is the back-pressure knob, A20
     BoundedCapacity analog).
     """
-    import hashlib
+    from dataflowex_spark.plans.result_cache import plan_fingerprint
 
     batch = spark.read.parquet(parquet_path)
-    # key the staging dir by source content identity (mtime+size), so
-    # a rewritten source table re-stages instead of silently replaying
-    # stale rows
-    try:
-        st = os.stat(parquet_path)
-        ident = f"{parquet_path}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        ident = parquet_path
-    tag = hashlib.sha1(ident.encode()).hexdigest()[:10]
+    # key the staging dir by the source's content identity (every input
+    # file's path, size and mtime), so a rewritten file — even inside a
+    # directory whose own mtime does not move — re-stages instead of
+    # silently replaying stale rows
+    tag = plan_fingerprint(batch)[:10]
     stage_dir = os.path.join(
         tempfile.gettempdir(), f"dataflowex_replay_{tag}_{n_chunks}"
     )

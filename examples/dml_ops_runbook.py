@@ -44,6 +44,7 @@ from dataflowex_spark.sources.delta_reader import (
     write_delta,
 )
 from dataflowex_spark.sources.manifest_ds import DeltaTailDataSource
+from dataflowex_spark.streaming.ops import run_foreach_batch
 
 
 def run(spark: SparkSession, sf_dir: str) -> dict:
@@ -91,17 +92,11 @@ def run(spark: SparkSession, sf_dir: str) -> dict:
     ev["n_after_dml"] = read_delta(spark, dest).count()
 
     # 3. tail the feed; stream must equal the batch CDF reader
-    outdir, ckpt = root + "/tail_out", root + "/tail_ckpt"
-    q = (
-        spark.readStream.format("delta_tail")
-        .load(dest)
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    outdir = root + "/tail_out"
+    run_foreach_batch(
+        spark.readStream.format("delta_tail").load(dest),
+        lambda batch, _id: batch.write.mode("append").parquet(outdir),
     )
-    q.awaitTermination()
     stream_rows = (
         spark.read.parquet(outdir)
         .groupBy("_commit_version", "_change_type")

@@ -1184,9 +1184,9 @@ def test_mtable_2d_stats_zorder_and_changefeed(spark, tmp_path):
     m_from = {e["path"] for e in t.manifest(v_before)["files"]}
     m_to = {e["path"] for e in t.manifest()["files"]}
     touched = (m_from - m_to) | (m_to - m_from)
-    from dataflowex_spark.sources.mtable import _local_path
+    from dataflowex_spark.sources.footer_stats import local_path
 
-    read_files = {_local_path(p) for p in feed.inputFiles()}
+    read_files = {local_path(p) for p in feed.inputFiles()}
     assert read_files and read_files <= touched
 
     # span with no file changes -> empty feed, correct schema

@@ -44,6 +44,7 @@ def run(spark, n_rows: int, tag: str) -> dict:
     from dataflowex_spark.sources.manifest_ds import (
         DeltaTailDataSource,
     )
+    from dataflowex_spark.streaming.ops import run_foreach_batch
 
     try:
         spark.dataSource.register(DeltaTailDataSource)
@@ -79,18 +80,12 @@ def run(spark, n_rows: int, tag: str) -> dict:
     assert st["updated"] == 5000, st
 
     def drain():
-        q = (
-            spark.readStream.format("delta_tail")
-            .load(dest)
-            .writeStream.format("noop")
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="probe_ckpt_"),
-            )
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.format("delta_tail").load(dest),
+            lambda batch, _id: batch.write.format("noop")
+            .mode("overwrite")
+            .save(),
         )
-        q.awaitTermination()
 
     out["tail_drain"], _ = timed(drain)
     out["optimize_zorder"], _ = timed(
