@@ -19,11 +19,21 @@ a 4-batch q367 drain made ~1,200 forks and clones (``/proc/stat``
 ``processes``). With the FileSystem manager the same drain makes ~285:
 the ``chmod`` Hadoop forks for every local file it creates, plus JVM
 threads, which that counter also counts.
+
+Query temp state belongs to the session. A query that stages a fixture,
+a table, a checkpoint or a replay writes it under ``scratch_dir(spark,
+prefix)``, a fresh directory in the driver's per-SparkContext files
+root (``SparkFiles.getRootDirectory()``, a ``userFiles-*`` dir under
+``spark.local.dir``). Spark creates that root with the context and
+deletes it in ``spark.stop()`` (and at JVM exit), so nothing a query
+stages outlives its session and no query removes its own temp state
+unless it must bound disk within a long session (q367).
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -87,6 +97,25 @@ def configure(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def scratch_root(spark: SparkSession) -> str:
+    """The session's scratch root: the driver's SparkFiles root, which
+    Spark deletes when the session stops. Refuses a root that is not
+    an existing absolute directory (off the driver Spark reports
+    ``.``)."""
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    if not (os.path.isabs(root) and os.path.isdir(root)):
+        raise RuntimeError(
+            f"SparkFiles root {root!r} is not an existing absolute directory"
+        )
+    return root
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory for query temp state under the session's
+    scratch root; it is removed with the session."""
+    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root(spark))
 
 
 def get_spark(

@@ -75,6 +75,7 @@ from dataflowex_spark.sources.footer_stats import (
     file_path_col,
     file_stats,
     hive_values,
+    local_path,
 )
 
 _SUPPORTED_READER_FEATURES = {
@@ -563,6 +564,7 @@ def read_delta(
     missing stats, and literals whose Spark cast it cannot reproduce,
     keep the file. At 100 TB this is the difference between opening
     every file and opening the handful a point query touches."""
+    root = local_path(root)
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
@@ -2053,6 +2055,7 @@ def write_delta(
     ever-longer JSON commit chain."""
     import uuid as _uuid
 
+    dest = local_path(dest)
     pcols = list(partition_by or [])
     prim = (
         T.LongType, T.IntegerType, T.ShortType, T.ByteType,
@@ -2067,6 +2070,15 @@ def write_delta(
             if isinstance(f.dataType, prim) and f.name not in pcols
         ]
     )
+    for c in scols:
+        dt = df.schema[c].dataType if c in df.columns else None
+        if isinstance(dt, T.DecimalType):
+            # add.stats is JSON, and skip_admits never prunes on a
+            # decimal, so refuse before anything is staged
+            raise ValueError(
+                f"stats_cols: column {c!r} is {dt.simpleString()}; "
+                "write_delta records no stats for decimal columns"
+            )
     ccols = list(cluster_by or [])
     if ccols:
         bad = [c for c in ccols if c not in df.columns]

@@ -23,7 +23,6 @@ from __future__ import annotations
 import os
 import re
 import shutil
-import tempfile
 import uuid
 from contextlib import contextmanager
 
@@ -31,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from dataflowex_spark.catalog import _normalize_events
+from dataflowex_spark.session import scratch_dir, scratch_root
 
 
 @contextmanager
@@ -147,7 +147,7 @@ def _publish_batch_dirs(
     succeeds, with the right schema, even when the stream drains zero
     batches or every batch produces no output."""
     spark = stream.sparkSession
-    out = (path or (tempfile.mkdtemp(prefix=prefix) + "/out")).rstrip("/")
+    out = (path or (scratch_dir(spark, prefix) + "/out")).rstrip("/")
     anchor = transform(spark.createDataFrame([], stream.schema), -1)
     anchor.limit(0).write.mode("overwrite").parquet(out + "/batch-init")
 
@@ -170,8 +170,8 @@ def file_replay_stream(
     watermark/late-data behavior.
 
     The file source needs a *directory*, and a single file would be a
-    single micro-batch — so the table is staged into a temp dir as
-    ``n_chunks`` files, consumed one per trigger
+    single micro-batch — so the table is staged under the session's
+    scratch root as ``n_chunks`` files, consumed one per trigger
     (``maxFilesPerTrigger`` is the back-pressure knob, A20
     BoundedCapacity analog).
     """
@@ -184,7 +184,7 @@ def file_replay_stream(
     # silently replaying stale rows
     tag = plan_fingerprint(batch)[:10]
     stage_dir = os.path.join(
-        tempfile.gettempdir(), f"dataflowex_replay_{tag}_{n_chunks}"
+        scratch_root(spark), f"dataflowex_replay_{tag}_{n_chunks}"
     )
     if not os.path.isdir(stage_dir) or not any(
         f.endswith(".parquet") for f in os.listdir(stage_dir)
@@ -868,7 +868,7 @@ def stream_hll_maintenance(
     Returns the final register DataFrame (group_col, j, m_j)."""
     from dataflowex_spark.operators.sketches import hll_registers
 
-    state = state_dir or tempfile.mkdtemp(prefix="hll_state_")
+    state = state_dir or scratch_dir(spark, "hll_state_")
     pointer = _LatestPointer(state)
 
     stream = file_replay_stream(spark, parquet_path, n_chunks=4)

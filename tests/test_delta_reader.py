@@ -738,6 +738,22 @@ def test_write_delta_generic(spark, tmp_path):
     assert read_delta(spark, dest).count() == 3
 
 
+def test_write_delta_refuses_decimal_stats_before_staging(spark, tmp_path):
+    """A decimal stats column is refused up front, by name and type,
+    instead of failing at the stats JSON after the data files were
+    already moved into ``data/``."""
+    from dataflowex_spark.sources.delta_reader import write_delta
+
+    dest = tmp_path / "t"
+    df = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") / 4).cast("decimal(8,2)").alias("d")
+    )
+    with pytest.raises(ValueError, match=r"'d' is decimal\(8,2\)"):
+        write_delta(spark, df, str(dest), stats_cols=["d"])
+    data = dest / "data"
+    assert not data.exists() or not list(data.rglob("*.parquet"))
+
+
 def test_write_delta_partitioned(spark, tmp_path):
     """partition_by: hive-layout staging, canonical partitionValues
     per add, typed re-attachment on read; partition '=' still prunes

@@ -44,6 +44,20 @@ def test_mtable_relative_root_bloom_probe(spark, tmp_path, monkeypatch):
     assert t.read_where(eq={"c": 5}).count() == 27
 
 
+def test_delta_relative_dest_resolves_once(spark, tmp_path, monkeypatch):
+    """With Python's cwd away from the JVM's, a relative ``dest`` is
+    resolved in Python once, so data, log and read all meet under it
+    (Spark would otherwise resolve the data files against its own
+    start-up directory)."""
+    from dataflowex_spark.sources.delta_reader import read_delta, write_delta
+
+    monkeypatch.chdir(tmp_path)
+    assert os.getcwd() != spark._jvm.java.lang.System.getProperty("user.dir")
+    write_delta(spark, _frame(spark, 100), "rel_d")
+    assert read_delta(spark, "rel_d").count() == 100
+    assert os.listdir(tmp_path / "rel_d" / "data")
+
+
 def test_mtable_vacuum_keeps_files_under_another_root_spelling(
     spark, tmp_path
 ):

@@ -660,21 +660,18 @@ def test_drift_monitor_stream_per_batch_equals_batch(spark, sf_dir, tmp_path):
     # (the staging dir is keyed by THIS source's content identity —
     # a bare *_3 glob would also match other tests' 3-chunk replays)
     import glob
-    import hashlib
-    import os
-    import tempfile
 
-    src = f"{sf_dir}/events.parquet"
-    st = os.stat(src)
-    tag = hashlib.sha1(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:10]
+    from dataflowex_spark.plans.result_cache import plan_fingerprint
+    from dataflowex_spark.session import scratch_root
+
+    tag = plan_fingerprint(spark.read.parquet(f"{sf_dir}/events.parquet"))[:10]
     staged = sorted(
         glob.glob(
-            f"{tempfile.gettempdir()}/dataflowex_replay_{tag}_3/"
+            f"{scratch_root(spark)}/dataflowex_replay_{tag}_3/"
             "part-*.parquet"
         )
     )
+    assert len(staged) == 3
     # map chunks to batches by matching n_cur
     batch_ns = sorted(r["n_cur"] for r in rows.values())
     chunk_ns = []
@@ -1021,8 +1018,6 @@ def test_mtable_tail_spans_schema_evolution(spark, tmp_path):
     working: pre-evolution files null-fill the new column to the
     COMMITTED schema (the declared stream schema comes from the
     manifest, not a file footer)."""
-    import tempfile as _tf
-
     from dataflowex_spark.sources.manifest_ds import MTableTailDataSource
     from dataflowex_spark.sources.mtable import MTable
 
@@ -1049,7 +1044,7 @@ def test_mtable_tail_spans_schema_evolution(spark, tmp_path):
         .writeStream.format("memory")
         .queryName("mtail_evo")
         .outputMode("append")
-        .option("checkpointLocation", _tf.mkdtemp(prefix="evo_ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1852,13 +1847,18 @@ def test_q367_removes_its_replay_dir(spark, sf_dir, tmp_path, monkeypatch):
     deletes it once the drain returns; the result still equals the
     batch per-type distinct count, since it reads the memory sink."""
     import tempfile
+    from pathlib import Path
 
     from dataflowex_spark.queries import REGISTRY
+    from dataflowex_spark.session import scratch_root
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    scratch = Path(scratch_root(spark))
+    before = set(scratch.glob("q367_*"))
     fn, _ = REGISTRY["q367_stream_dedup_within_watermark"]
     got = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert not [p.name for p in tmp_path.glob("q367_*")]
+    assert set(scratch.glob("q367_*")) == before
     want = sorted(
         (r.event_type, r.n)
         for r in Catalog(spark, sf_dir)["events"]
@@ -1874,8 +1874,10 @@ def test_drains_leave_no_checkpoint_dirs(spark, sf_dir, tmp_path, monkeypatch):
     q262's memory drain and an asof_join_stream foreachBatch drain
     without ``checkpoint_dir`` leave no checkpoint directory behind."""
     import tempfile
+    from pathlib import Path
 
     from dataflowex_spark.queries import REGISTRY
+    from dataflowex_spark.session import scratch_root
     from dataflowex_spark.streaming.ops import asof_join_stream
 
     clicks = Catalog(spark, sf_dir)["events"].select(
@@ -1887,6 +1889,8 @@ def test_drains_leave_no_checkpoint_dirs(spark, sf_dir, tmp_path, monkeypatch):
     private = tmp_path / "tmp"
     private.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(private))
+    scratch = Path(scratch_root(spark))
+    before = set(scratch.rglob("*ckpt*"))
 
     fn, _ = REGISTRY["q262_python_stream_source"]
     assert fn(spark, sf_dir).count() > 0
@@ -1896,6 +1900,7 @@ def test_drains_leave_no_checkpoint_dirs(spark, sf_dir, tmp_path, monkeypatch):
     )
     assert got.count() > 0
     assert not [p.name for p in private.glob("*ckpt*")]
+    assert set(scratch.rglob("*ckpt*")) == before
 
 
 def test_run_foreach_batch_handler_failure_raises(spark, tmp_path):
