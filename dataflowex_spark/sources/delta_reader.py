@@ -46,6 +46,17 @@ for, the same discipline as the codec modules):
   misreading would return wrong data, the worst failure mode a
   reader can have.
 
+Commit rule (write side): every writer claims its log version
+through ``_try_claim_commit``, as the successor of the version its
+snapshot was folded at — ``base = _latest_version(root)``, then
+``_snapshot(spark, root, base)``, then claim ``base + 1`` by
+put-if-absent. A commit landing in between makes the claim fail, and
+the writer re-reads and recomputes, so state derived from an older
+snapshot never lands on top of a newer one (a DV replacing a DV it
+never saw, a metaData dropping a constraint). A plain append is the
+one blind writer: its adds commute, so it claims the head + 1 at claim
+time.
+
 Scale note: snapshot resolution is metadata work proportional to the
 log tail since the last checkpoint (exactly the economics the real
 reader has); the data read is ordinary parquet scans, so pushdown /
@@ -195,6 +206,16 @@ def _checkpoint_for(root: str, target: int) -> tuple[int, list[str]] | None:
     return v, [got[i][1] for i in sorted(got)]
 
 
+def _latest_version(root: str) -> int:
+    """Newest version the log holds: the max of the JSON commits and
+    the newest checkpoint (after retention ages the JSON tail out, the
+    commit listing alone would land below the checkpoint), or -1 for
+    an empty log. The one place the log head is computed."""
+    commits = _commit_files(root)
+    cp = _checkpoint_for(root, 1 << 62)
+    return max(max(commits, default=-1), cp[0] if cp else -1)
+
+
 def _check_protocol(p: dict) -> None:
     mrv = p.get("minReaderVersion", 1)
     if mrv in (1, 2):
@@ -225,14 +246,10 @@ def _snapshot(
     (PROTOCOL.md "Domain Metadata"): it fills with
     domain → configuration-JSON-string, last writer wins,
     ``removed: true`` tombstones drop the entry."""
-    commits = _commit_files(root)
-    newest_cp = _checkpoint_for(root, 1 << 62)
-    if not commits and newest_cp is None:
+    latest = _latest_version(root)
+    if latest < 0:
         raise FileNotFoundError(f"empty _delta_log in {root}")
-    latest = max(
-        max(commits, default=-1),
-        newest_cp[0] if newest_cp else -1,
-    )
+    commits = _commit_files(root)
     target = latest if version is None else version
     if version is not None and target > latest:
         raise ValueError(f"version {target} > latest {latest}")
@@ -1221,7 +1238,9 @@ def export_delta_increment(
     both directions). Returns the new Delta version.
 
     Snapshots carrying unapplied DV/equality-delete debt refuse, as
-    in the full export."""
+    in the full export. A publish that loses its version claim runs
+    again against the new history, so a racing publish of the same
+    snapshot ends in the "already published" refusal."""
     hist = delta_history(dest)
     if not hist or "sourceVersion" not in hist[-1]:
         raise ValueError(
@@ -1229,7 +1248,8 @@ def export_delta_increment(
             "(export_snapshot_to_delta first)"
         )
     from_v = hist[-1]["sourceVersion"]
-    next_delta = hist[-1]["version"] + 1
+    base = hist[-1]["version"]
+    next_delta = base + 1
     to_v = table.manifest(version)["version"]
     if to_v <= from_v:
         raise ValueError(
@@ -1276,7 +1296,14 @@ def export_delta_increment(
             .unionByName(image("pre", "update_preimage", ["U"]))
             .unionByName(image("post", "update_postimage", ["U"]))
         )
-        cdc_name = f"_change_data/cdc-{next_delta:010d}.parquet"
+        # unique per attempt: a publish that loses its claim must not
+        # overwrite the CDC file the winner's commit names
+        import uuid as _uuid
+
+        cdc_name = (
+            f"_change_data/cdc-{next_delta:010d}-"
+            f"{_uuid.uuid4().hex[:8]}.parquet"
+        )
         stage_parquet_file(cdc, dest, cdc_name)
         actions.append(
             {
@@ -1322,13 +1349,9 @@ def export_delta_increment(
             }
         }
     )
-    log = _log_dir(dest)
-    commit_path = os.path.join(log, f"{next_delta:020d}.json")
-    tmp = commit_path + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    os.rename(tmp, commit_path)
+    conf = _snapshot_meta_nospark(dest).get("configuration") or {}
+    if _try_claim_commit(table.spark, dest, base, actions, conf) is None:
+        return export_delta_increment(table, dest, version, with_cdc)
     return next_delta
 
 
@@ -1355,13 +1378,11 @@ def vacuum_delta_export(
     files are never opened. Hard-linked exports only release disk
     once the MTable source also vacuums (link counts), which is the
     correct shared-ownership semantics."""
-    commits = _commit_files(dest)
-    newest_cp = _checkpoint_for(dest, 1 << 62)
-    if not commits and newest_cp is None:
+    latest = _latest_version(dest)
+    if latest < 0:
         raise FileNotFoundError(f"not a Delta table: {dest}")
-    latest = max(
-        max(commits, default=-1), newest_cp[0] if newest_cp else -1
-    )
+    commits = _commit_files(dest)
+    newest_cp = _checkpoint_for(dest, latest)
     cutoff = max(0, latest - keep_versions + 1)
     keep: set[str] = set()
     if spark is None and 0 not in commits:
@@ -1466,7 +1487,7 @@ def _txn_state(root: str) -> dict[str, int]:
     checkpoints predate the column and contribute nothing) plus the
     JSON commits after it."""
     commits = _commit_files(root)
-    cp = _checkpoint_for(root, 1 << 62)
+    cp = _checkpoint_for(root, _latest_version(root))
     out: dict[str, int] = {}
     start = 0
     if cp is not None:
@@ -1559,13 +1580,13 @@ def checkpoint_delta_export(
     read in parallel without a rigid part numbering. Requires (and
     commits, if absent) the ``v2Checkpoint`` reader+writer feature
     on a features-era 3/7 protocol, per PROTOCOL.md."""
-    commits = _commit_files(dest)
-    if not commits:
+    if not _commit_files(dest):
         raise FileNotFoundError(f"not a Delta table: {dest}")
     if v2:
         # the feature gate must be visible to ANY reader before a v2
         # checkpoint exists — commit the protocol upgrade first
         while True:
+            base = _latest_version(dest)
             proto = _latest_protocol(dest)
             feats = set(proto.get("readerFeatures") or [])
             if "v2Checkpoint" in feats:
@@ -1614,20 +1635,11 @@ def checkpoint_delta_export(
                     }
                 },
             ]
-            meta0, _a0 = _snapshot(spark, dest, None)
-            if (
-                _try_claim_commit(
-                    spark,
-                    dest,
-                    max(_commit_files(dest)),
-                    actions,
-                    meta0.get("configuration") or {},
-                )
-                is not None
-            ):
+            meta0, _a0 = _snapshot(spark, dest, base)
+            conf = meta0.get("configuration") or {}
+            if _try_claim_commit(spark, dest, base, actions, conf) is not None:
                 break
-        commits = _commit_files(dest)
-    v = max(commits)
+    v = _latest_version(dest)
     cp_domains: dict[str, str] = {}
     meta, adds = _snapshot(spark, dest, v, cp_domains)
     # checkpoint-aware protocol resolution: after log retention
@@ -1893,12 +1905,13 @@ def add_delta_constraint(
     constraint the data violates would lie to every future reader).
     Returns the committed version."""
     while True:
-        meta, adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, adds = _snapshot(spark, dest, base)
         if name in _check_constraints(meta):
             raise ValueError(f"constraint {name!r} already exists")
         if adds:
             bad = (
-                read_delta(spark, dest)
+                read_delta(spark, dest, version=base)
                 .filter(~F.coalesce(F.expr(expr), F.lit(True)))
                 .limit(1)
             )
@@ -1909,12 +1922,6 @@ def add_delta_constraint(
                     f"existing rows violate CHECK {expr!r} — e.g. "
                     f"{sample}"
                 )
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         conf = dict(meta.get("configuration") or {})
         conf[f"delta.constraints.{name}"] = expr
         new_meta = dict(meta)
@@ -1959,7 +1966,7 @@ def add_delta_constraint(
                 }
             }
         )
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v
@@ -1971,15 +1978,10 @@ def drop_delta_constraint(
     """ALTER TABLE ... DROP CONSTRAINT (metadata-only); unknown
     names refuse."""
     while True:
-        meta, _adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, _adds = _snapshot(spark, dest, base)
         if name not in _check_constraints(meta):
             raise ValueError(f"constraint {name!r} not on table")
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         conf = dict(meta.get("configuration") or {})
         del conf[f"delta.constraints.{name}"]
         new_meta = dict(meta)
@@ -1994,7 +1996,7 @@ def drop_delta_constraint(
                 }
             },
         ]
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v
@@ -2029,8 +2031,12 @@ def write_delta(
     day one. The commit is a single JSON append; concurrent writers
     race on the version slot through the pluggable commit backend
     (put-if-absent: os.link on POSIX, conditional PUT on an object
-    store) — the loser retries with the next number, delta's
-    optimistic concurrency.
+    store). A plain append that loses retries with the next number;
+    a create, an overwrite or a schema-evolving append claims the
+    successor of the version it read, and on a lost race re-reads:
+    an overwrite recomputes its removes and claims again while the
+    schema, partition columns and configuration are unchanged, and
+    refuses (naming the table) otherwise.
 
     ``partition_by``: hive-layout partitioned staging
     (``data/<col>=<val>/…``), canonical string partitionValues per
@@ -2097,10 +2103,8 @@ def write_delta(
             "SetTransaction is (appId, version))"
         )
     log = _log_dir(dest)
-    exists = os.path.isdir(log) and (
-        bool(_commit_files(dest))
-        or _checkpoint_for(dest, 1 << 62) is not None
-    )
+    base = _latest_version(dest) if os.path.isdir(log) else -1
+    exists = base >= 0
     if mode == "error" and exists:
         raise ValueError(f"Delta table already exists at {dest}")
     if txn_app_id is not None and exists:
@@ -2108,11 +2112,7 @@ def write_delta(
         if last is not None and txn_version <= last:
             # idempotent replay: this batch already committed —
             # nothing stages, nothing commits
-            _cp = _checkpoint_for(dest, 1 << 62)
-            return max(
-                max(_commit_files(dest), default=-1),
-                _cp[0] if _cp else -1,
-            )
+            return base
     if mode not in ("error", "append", "overwrite"):
         raise ValueError(f"write_delta mode {mode!r}")
     os.makedirs(os.path.join(dest, "data"), exist_ok=True)
@@ -2122,17 +2122,18 @@ def write_delta(
     stage_schema: T.StructType | None = None
     create_schema: T.StructType | None = None
     create_conf = dict(configuration or {})
+    live0: dict = {}
     if exists:
         if mode == "overwrite":
             # overwrite removes the whole live set — the only write
             # mode that needs the adds fold
-            meta0, _live0 = _snapshot(spark, dest, None)
+            meta0, live0 = _snapshot(spark, dest, base)
         else:
             # append needs METADATA only (schema/conf/constraints):
             # the meta-only fold is O(tail + checkpoint metaData
             # column), not O(live files) — per-append cost must not
             # grow with table size (the r11b probe's finding)
-            meta0, _live0 = _snapshot_meta_nospark(dest), {}
+            meta0 = _snapshot_meta_nospark(dest)
         mode0 = _mapping_mode(meta0)
         if mode0 == "id":
             # same refusal as the DML paths: mode=id binds columns by
@@ -2280,9 +2281,9 @@ def write_delta(
             "cluster_by applies at table creation; use "
             "alter_delta_clustering to (re)cluster an existing table"
         )
-    actions: list[dict] = []
+    lead: list[dict] = []
     if evolved_meta is not None:
-        actions.append({"metaData": evolved_meta})
+        lead.append({"metaData": evolved_meta})
     if not exists:
         # features-era protocol (writer 7 + named writerFeatures)
         # whenever a created table needs one; readers stay at the
@@ -2314,8 +2315,8 @@ def write_delta(
             proto_action = {"minReaderVersion": 2, "minWriterVersion": 5}
         else:
             proto_action = {"minReaderVersion": 1, "minWriterVersion": 2}
-        actions.append({"protocol": proto_action})
-        actions.append(
+        lead.append({"protocol": proto_action})
+        lead.append(
             {
                 "metaData": {
                     "id": f"write-delta-{_uuid.uuid4().hex[:12]}",
@@ -2333,7 +2334,7 @@ def write_delta(
             # clustering columns live in the delta.clustering
             # domain — data layout is advisory metadata, OPTIMIZE
             # reads it to decide how to rewrite
-            actions.append(
+            lead.append(
                 {
                     "domainMetadata": {
                         "domain": _CLUSTERING_DOMAIN,
@@ -2348,14 +2349,9 @@ def write_delta(
                     }
                 }
             )
-    elif mode == "overwrite":
-        actions += [
-            {"remove": {"path": p, "dataChange": True}}
-            for p in sorted(_live0)
-        ]
-    actions += adds
+    tail = list(adds)
     if txn_app_id is not None:
-        actions.append(
+        tail.append(
             {
                 "txn": {
                     "appId": txn_app_id,
@@ -2364,7 +2360,7 @@ def write_delta(
                 }
             }
         )
-    actions.append(
+    tail.append(
         {
             "commitInfo": {
                 "operation": "WRITE" if not exists else mode.upper(),
@@ -2372,11 +2368,6 @@ def write_delta(
             }
         }
     )
-    # optimistic concurrency: claim the next version slot through the
-    # pluggable commit backend — the claim publishes the COMPLETE
-    # serialized commit (temp-file + link on POSIX, conditional PUT
-    # on an object store), so a visible version file is never torn
-    # and the in-claim SetTransaction re-check below stays sound
     # meta0 is this write's base snapshot — re-replaying the log for
     # its configuration would pay an O(live files) checkpoint read
     # per append for nothing (config changes ride ALTER commits)
@@ -2385,70 +2376,67 @@ def write_delta(
         if not exists
         else (meta0.get("configuration") or {})
     )
+    # a plain append is BLIND: adds commute, so it claims whatever
+    # slot follows the head at claim time. Every other write read the
+    # table (a create, an overwrite's removes, an evolved schema) and
+    # claims the successor of the version it read, ``base``.
+    blind = exists and mode == "append" and evolved_meta is None
     while True:
-        # the next version is one past EVERYTHING visible — newest
-        # JSON commit or newest checkpoint (after retention ages the
-        # JSON tail out, claiming from the commit listing alone
-        # would land BELOW the checkpoint and be invisible forever)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        v = (
-            max(
-                max(_commit_files(dest), default=-1),
-                newest_cp[0] if newest_cp else -1,
-            )
-            + 1
-        )
-        if txn_app_id is not None and v > 0:
+        if blind:
+            base = _latest_version(dest)
+        if txn_app_id is not None and base >= 0:
             # a RACING REPLAY of the same batch may have landed
             # between the early check and this claim — re-verify so
             # a batch never commits twice (this attempt's staged
             # files become vacuum-reclaimable orphans)
             last = last_txn_version(dest, txn_app_id)
             if last is not None and txn_version <= last:
-                return v - 1
-        attempt_actions = actions
+                return _latest_version(dest)
+        actions = (
+            lead
+            + [
+                {"remove": {"path": p, "dataChange": True}}
+                for p in sorted(live0)
+            ]
+            + tail
+        )
         if rt_enabled:
             # per ATTEMPT: a lost race means another writer may have
             # raised the high-water mark — fresh ids must start
             # above the WINNER's, and defaultRowCommitVersion is
             # the version this attempt will claim
-            hwm = (
-                _row_id_high_water_mark(spark, dest)
-                if v > 0
-                else -1
-            )
+            hwm = _row_id_high_water_mark(spark, dest) if exists else -1
             dm_actions, _new_hwm = _assign_base_row_ids(
-                adds, hwm, v
+                adds, hwm, base + 1
             )
-            attempt_actions = actions + dm_actions
-        # serialize per ATTEMPT: in-commit timestamps must be
-        # monotone against the actual predecessor, which a lost
-        # race changes
-        content = "".join(
-            json.dumps(a) + "\n"
-            for a in _ict_stamp(dest, conf_pre, attempt_actions)
-        )
-        path = os.path.join(log, f"{v:020d}.json")
-        try:
-            get_commit_backend().put_if_absent(path, content)
-        except FileExistsError:
-            continue  # lost the race: retry with the next version
-        break
-    # delta.checkpointInterval: checkpoint when the committed version
-    # hits the interval, exactly delta-spark's cadence — keeps the
-    # replayed JSON tail bounded for long-lived written tables
-    conf = (
-        dict(configuration or {})
-        if not exists
-        else (meta0.get("configuration") or {})
-    )
-    try:
-        interval = int(conf.get("delta.checkpointInterval", 10))
-    except (TypeError, ValueError):
-        interval = 10
-    if interval > 0 and v > 0 and v % interval == 0:
-        checkpoint_delta_export(spark, dest)
-    return v
+            actions += dm_actions
+        v = _try_claim_commit(spark, dest, base, actions, conf_pre)
+        if v is not None:
+            return v
+        if blind:
+            continue
+        # the table moved under a write that read it: re-read, and
+        # claim again only when what this write was built on holds
+        if not exists:
+            raise ValueError(
+                f"Delta table already exists at {dest} (created by a "
+                "concurrent writer)"
+            )
+        base = _latest_version(dest)
+        if mode == "overwrite":
+            meta1, live0 = _snapshot(spark, dest, base)
+        else:
+            meta1 = _snapshot_meta_nospark(dest)
+        if any(
+            meta1.get(k) != meta0.get(k)
+            for k in ("schemaString", "partitionColumns", "configuration")
+        ):
+            raise ValueError(
+                f"write_delta({mode}): Delta table {dest} changed its "
+                "schema, partition columns or configuration "
+                f"concurrently (now at version {base}); nothing was "
+                "committed"
+            )
 
 
 def _latest_protocol(root: str) -> dict:
@@ -2460,7 +2448,7 @@ def _latest_protocol(root: str) -> dict:
     carries (e.g. DML re-emitting a deletionVectors-only 3/7 on a
     v2Checkpoint table)."""
     proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-    cp = _checkpoint_for(root, 1 << 62)
+    cp = _checkpoint_for(root, _latest_version(root))
     start = 0
     if cp is not None:
         start = cp[0] + 1
@@ -2543,7 +2531,7 @@ def _domains_nospark(root: str) -> dict[str, str]:
     r11b probe caught the full-replay version growing with file
     count)."""
     domains: dict[str, str] = {}
-    cp = _checkpoint_for(root, 1 << 62)
+    cp = _checkpoint_for(root, _latest_version(root))
     start = 0
     if cp is not None:
         import pyarrow.parquet as pq
@@ -3006,7 +2994,8 @@ def _dml_delta(
     op = "DELETE" if set_exprs is None else "UPDATE"
     cond = F.expr(where) if isinstance(where, str) else where
     while True:
-        meta, adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, adds = _snapshot(spark, dest, base)
         mode = _mapping_mode(meta)
         if mode == "id":
             # mode=id resolves columns per-file by footer field id —
@@ -3016,14 +3005,8 @@ def _dml_delta(
             raise DeltaProtocolError(
                 f"{op.lower()} unsupported for columnMapping mode=id"
             )
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         if not adds:
-            return latest, 0
+            return base, 0
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         ptypes = {f.name: f.dataType for f in schema.fields}
         setc = {}
@@ -3140,7 +3123,7 @@ def _dml_delta(
         flt.unpersist()
         if n_matched == 0:
             _unlink_dvs(results, root_abs)
-            return latest, 0
+            return base, 0
         actions = _dv_protocol_actions(dest)
         actions += _dv_readd_actions(results, adds, root_abs)
         actions.extend(new_adds)
@@ -3154,7 +3137,7 @@ def _dml_delta(
             dm_actions, _hwm = _assign_base_row_ids(
                 new_adds,
                 _row_id_high_water_mark(spark, dest),
-                latest + 1,
+                base + 1,
             )
             actions.extend(dm_actions)
         actions.extend(cdc_actions)
@@ -3171,7 +3154,7 @@ def _dml_delta(
                 }
             }
         )
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue  # lost the race: recompute against new snapshot
         return v, n_matched
@@ -3309,20 +3292,22 @@ def _ict_stamp(
 def _try_claim_commit(
     spark: SparkSession,
     dest: str,
-    latest: int,
+    base: int,
     actions: list[dict],
     conf: dict,
 ) -> int | None:
-    """Claim version ``latest+1`` exclusively through the pluggable
+    """Claim version ``base + 1`` exclusively through the pluggable
     commit backend (put-if-absent of the FULLY-SERIALIZED commit —
     a visible ``N.json`` is always complete, no reader can observe a
-    claimed-but-torn file); ``None`` when another writer won the
-    race (caller recomputes). Honors ``delta.checkpointInterval``.
+    claimed-but-torn file). ``base`` is the version the caller's
+    snapshot was folded at, so ``None`` (another writer claimed
+    ``base + 1`` first) means the caller's state is stale: it
+    re-reads and recomputes. Honors ``delta.checkpointInterval``.
 
     When the table enables ``delta.enableInCommitTimestamps`` (the
     inCommitTimestamp writer feature), every commit's commitInfo is
     stamped via :func:`_ict_stamp` before serialization."""
-    v = latest + 1
+    v = base + 1
     actions = _ict_stamp(dest, conf, actions)
     path = os.path.join(_log_dir(dest), f"{v:020d}.json")
     content = "".join(json.dumps(a) + "\n" for a in actions)
@@ -3360,19 +3345,14 @@ def enable_delta_in_commit_timestamps(
     import time as _time
 
     while True:
-        meta, _adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, _adds = _snapshot(spark, dest, base)
         conf = dict(meta.get("configuration") or {})
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         if (
             str(conf.get("delta.enableInCommitTimestamps", "")).lower()
             == "true"
         ):
-            return latest  # idempotent
+            return base  # idempotent
         proto = _latest_protocol(dest)
         wv = proto.get("minWriterVersion", 1)
         # legacy writer levels imply features that must materialize
@@ -3400,7 +3380,7 @@ def enable_delta_in_commit_timestamps(
                 set(proto["readerFeatures"])
             )
         ict = int(_time.time() * 1000)
-        v_target = latest + 1
+        v_target = base + 1
         conf["delta.enableInCommitTimestamps"] = "true"
         conf["delta.inCommitTimestampEnablementVersion"] = str(v_target)
         conf["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
@@ -3416,7 +3396,7 @@ def enable_delta_in_commit_timestamps(
                 }
             },
         ]
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v
@@ -3444,20 +3424,15 @@ def enable_delta_row_tracking(spark: SparkSession, dest: str) -> int:
     import uuid as _uuid
 
     while True:
-        meta, adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, adds = _snapshot(spark, dest, base)
         if _mapping_mode(meta) != "none":
             raise DeltaProtocolError(
                 "row tracking with columnMapping is not implemented"
             )
         conf = dict(meta.get("configuration") or {})
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         if str(conf.get("delta.enableRowTracking", "")).lower() == "true":
-            return latest  # idempotent
+            return base  # idempotent
         proto = _latest_protocol(dest)
         wv = proto.get("minWriterVersion", 1)
         _implied_w = {
@@ -3494,7 +3469,7 @@ def enable_delta_row_tracking(spark: SparkSession, dest: str) -> int:
         )
         new_meta = dict(meta)
         new_meta["configuration"] = conf
-        v_target = latest + 1
+        v_target = base + 1
         readds: list[dict] = []
         for rel in sorted(adds):
             old = adds[rel]
@@ -3525,7 +3500,7 @@ def enable_delta_row_tracking(spark: SparkSession, dest: str) -> int:
                 }
             ]
         )
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v
@@ -3544,7 +3519,8 @@ def alter_delta_clustering(
     if not cluster_by:
         raise ValueError("alter_delta_clustering: empty cluster_by")
     while True:
-        meta, _adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, _adds = _snapshot(spark, dest, base)
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         known = {f.name for f in schema.fields}
         bad = [c for c in cluster_by if c not in known]
@@ -3556,12 +3532,6 @@ def alter_delta_clustering(
             raise ValueError(
                 f"cluster_by overlaps partition columns {overlap}"
             )
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         proto = _latest_protocol(dest)
         wv = proto.get("minWriterVersion", 1)
         _implied_w = {
@@ -3613,7 +3583,7 @@ def alter_delta_clustering(
             },
         ]
         v = _try_claim_commit(
-            spark, dest, latest, actions,
+            spark, dest, base, actions,
             meta.get("configuration") or {},
         )
         if v is None:
@@ -3635,16 +3605,11 @@ def upgrade_delta_column_mapping(
     METADATA-ONLY. Idempotent on an already-name-mapped table;
     mode=id refuses. Returns the committed (or current) version."""
     while True:
-        meta, _adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, _adds = _snapshot(spark, dest, base)
         mode = _mapping_mode(meta)
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         if mode == "name":
-            return latest  # idempotent
+            return base  # idempotent
         if mode == "id":
             raise DeltaProtocolError(
                 "upgrade targets mode=name; table is already mode=id"
@@ -3710,7 +3675,7 @@ def upgrade_delta_column_mapping(
                 }
             }
         )
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v
@@ -3740,18 +3705,13 @@ def alter_delta(
     if not renames and not drops:
         raise ValueError("alter_delta: nothing to do")
     while True:
-        meta, _adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, _adds = _snapshot(spark, dest, base)
         if _mapping_mode(meta) != "name":
             raise DeltaProtocolError(
                 "alter_delta needs columnMapping mode=name "
                 "(run upgrade_delta_column_mapping first)"
             )
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         schema = T.StructType.fromJson(
             json.loads(meta["schemaString"])
         )
@@ -3805,7 +3765,7 @@ def alter_delta(
                 }
             },
         ]
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v
@@ -3845,7 +3805,8 @@ def merge_delta(
     if not on:
         raise ValueError("merge_delta: empty merge key")
     while True:
-        meta, adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, adds = _snapshot(spark, dest, base)
         mode = _mapping_mode(meta)
         if mode == "id":
             raise DeltaProtocolError(
@@ -3853,12 +3814,6 @@ def merge_delta(
             )
         rt = _row_tracking(meta)
         lineage_extra = list(rt) if rt else []
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         tcols = [f.name for f in schema.fields]
         for k in on:
@@ -4051,7 +4006,7 @@ def merge_delta(
         }
         if not (n_matched or n_inserted):
             _unlink_dvs(results, root_abs)
-            return latest, stats
+            return base, stats
         actions = _dv_protocol_actions(dest) if n_matched else []
         if n_matched:
             actions += _dv_readd_actions(results, adds, root_abs)
@@ -4060,7 +4015,7 @@ def merge_delta(
             dm_actions, _hwm = _assign_base_row_ids(
                 new_adds,
                 _row_id_high_water_mark(spark, dest),
-                latest + 1,
+                base + 1,
             )
             actions.extend(dm_actions)
         actions.extend(cdc_actions)
@@ -4077,7 +4032,7 @@ def merge_delta(
                 }
             }
         )
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v, stats
@@ -4106,19 +4061,14 @@ def compact_delta_dvs(
     from dataflowex_spark.sources.roaring import decode_dv_descriptor
 
     while True:
-        meta, adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, adds = _snapshot(spark, dest, base)
         mode = _mapping_mode(meta)
         if mode == "id":
             raise DeltaProtocolError(
                 "compact_delta_dvs unsupported for columnMapping "
                 "mode=id"
             )
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         chosen: dict[str, dict] = {}
         for rel, a in adds.items():
             dv = a.get("deletionVector")
@@ -4133,7 +4083,7 @@ def compact_delta_dvs(
             if dead / total >= min_dead_ratio:
                 chosen[rel] = a
         if not chosen:
-            return latest, 0
+            return base, 0
         pcols = meta.get("partitionColumns") or []
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         prim = (
@@ -4207,7 +4157,7 @@ def compact_delta_dvs(
             dm_actions, _hwm = _assign_base_row_ids(
                 new_adds,
                 _row_id_high_water_mark(spark, dest),
-                latest + 1,
+                base + 1,
             )
             actions.extend(dm_actions)
         actions.append(
@@ -4222,7 +4172,7 @@ def compact_delta_dvs(
             }
         )
         conf = meta.get("configuration") or {}
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v, len(chosen)
@@ -4245,7 +4195,7 @@ def _snapshot_meta_nospark(root: str) -> dict:
                 if a.get("metaData"):
                     meta.update(a["metaData"])
     if "schemaString" not in meta:
-        cp = _checkpoint_for(root, 1 << 62)
+        cp = _checkpoint_for(root, _latest_version(root))
         if cp is not None:
             import pyarrow.parquet as pq
 
@@ -4352,19 +4302,14 @@ def optimize_delta(
     from dataflowex_spark.sources import fold_zorder_bounds, zorder_sort_key
 
     while True:
-        meta, adds = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, adds = _snapshot(spark, dest, base)
         mode = _mapping_mode(meta)
         if mode == "id":
             raise DeltaProtocolError(
                 "optimize_delta unsupported for columnMapping mode=id"
             )
         rt = _row_tracking(meta)
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
         target = target_file_mb << 20
         if not zorder_by:
             # clustered table: OPTIMIZE without explicit columns
@@ -4381,9 +4326,9 @@ def optimize_delta(
                 if int(a.get("size") or 0) < target // 2
             }
             if len(chosen) < 2:
-                return latest, {"files_removed": 0, "files_added": 0}
+                return base, {"files_removed": 0, "files_added": 0}
         if not chosen:
-            return latest, {"files_removed": 0, "files_added": 0}
+            return base, {"files_removed": 0, "files_added": 0}
         pcols = meta.get("partitionColumns") or []
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
@@ -4474,7 +4419,7 @@ def optimize_delta(
             dm_actions, _hwm = _assign_base_row_ids(
                 new_adds,
                 _row_id_high_water_mark(spark, dest),
-                latest + 1,
+                base + 1,
             )
             actions.extend(dm_actions)
         actions.append(
@@ -4491,7 +4436,7 @@ def optimize_delta(
             }
         )
         conf = meta.get("configuration") or {}
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v, {
@@ -4514,16 +4459,11 @@ def restore_delta(
     the restore as the synthesized delete/insert diff, which is
     exactly what happened logically. Returns the new version."""
     while True:
-        meta, cur = _snapshot(spark, dest, None)
+        base = _latest_version(dest)
+        meta, cur = _snapshot(spark, dest, base)
         _meta_t, target = _snapshot(spark, dest, version)
-        commits = _commit_files(dest)
-        newest_cp = _checkpoint_for(dest, 1 << 62)
-        latest = max(
-            max(commits, default=-1),
-            newest_cp[0] if newest_cp else -1,
-        )
-        if version == latest:
-            return latest
+        if version == base:
+            return base
         if _row_tracking(meta) and any(
             a.get("baseRowId") is None for a in target.values()
         ):
@@ -4555,7 +4495,7 @@ def restore_delta(
                 add["dataChange"] = True
                 actions.append({"add": add})
         if not actions:
-            return latest  # states identical: nothing to restore
+            return base  # states identical: nothing to restore
         actions.append(
             {
                 "commitInfo": {
@@ -4566,7 +4506,7 @@ def restore_delta(
             }
         )
         conf = meta.get("configuration") or {}
-        v = _try_claim_commit(spark, dest, latest, actions, conf)
+        v = _try_claim_commit(spark, dest, base, actions, conf)
         if v is None:
             continue
         return v
@@ -4595,9 +4535,7 @@ def convert_to_delta(
     import uuid as _uuid
 
     log = _log_dir(path)
-    if os.path.isdir(log) and (
-        _commit_files(path) or _checkpoint_for(path, 1 << 62)
-    ):
+    if os.path.isdir(log) and _latest_version(path) >= 0:
         raise ValueError(f"already a Delta table: {path}")
     pschema = dict(partition_schema or {})
     pcols = list(pschema)
@@ -4713,10 +4651,10 @@ def convert_to_delta(
         {"commitInfo": {"operation": "CONVERT", "timestamp": None}}
     ]
     os.makedirs(log, exist_ok=True)
-    content = "".join(json.dumps(a) + "\n" for a in actions)
-    get_commit_backend().put_if_absent(
-        os.path.join(log, f"{0:020d}.json"), content
-    )
+    if _try_claim_commit(spark, path, -1, actions, {}) is None:
+        raise ValueError(
+            f"already a Delta table: {path} (converted concurrently)"
+        )
     return 0
 
 

@@ -191,9 +191,10 @@ def _try_commit_metadata(root: str, meta: dict) -> bool:
     ``vN.metadata.json`` through the pluggable commit backend
     (put-if-absent of the COMPLETE serialized metadata — os.link on
     POSIX, conditional PUT on an object store; the store twin of a
-    catalog's compare-and-swap — same shape as Delta's version
-    claim at ``delta_reader._try_claim_commit`` and MTable's
-    backend). Returns False when another
+    catalog's compare-and-swap — the same rule as Delta's
+    ``delta_reader._try_claim_commit``, which claims the successor
+    of the version its snapshot was folded at, and MTable's
+    ``_commit(parent)``). Returns False when another
     writer claimed the version first; the caller re-reads the
     winner's snapshot and REPLAYS its change set (every writer here
     is change-bound, so replay is cheap). The hint only ever
@@ -2102,7 +2103,11 @@ def export_snapshot_to_iceberg(
     + one metadata.json. Snapshots carrying unapplied deletion-vector
     or equality-delete sidecars REFUSE — exporting their base files
     would resurrect deleted rows; fold the debt first
-    (``apply_deletion_vectors()`` / compaction)."""
+    (``apply_deletion_vectors()`` / compaction). The metadata claims
+    ``v1`` through :func:`_try_commit_metadata`; a ``dest`` that
+    already holds a table (or loses a racing export) refuses."""
+    import uuid as _uuid
+
     from dataflowex_spark.sources.avro_io import write_container
 
     m = table.manifest(version)
@@ -2162,9 +2167,12 @@ def export_snapshot_to_iceberg(
                 },
             }
         )
-    mpath = os.path.join(md, "manifest-00001.avro")
+    # unique per attempt: an export that loses its claim must not
+    # overwrite the files the winner's metadata names
+    token = _uuid.uuid4().hex[:8]
+    mpath = os.path.join(md, f"manifest-00001-{token}.avro")
     write_container(mpath, MANIFEST_SCHEMA, entries)
-    mlist = os.path.join(md, "snap-1.avro")
+    mlist = os.path.join(md, f"snap-1-{token}.avro")
     write_container(
         mlist,
         MANIFEST_LIST_SCHEMA,
@@ -2199,11 +2207,12 @@ def export_snapshot_to_iceberg(
                 },
             }
         ],
+        "_loaded-version": 0,  # a creation claims v1
     }
-    with open(os.path.join(md, "v1.metadata.json"), "w") as f:
-        json.dump(meta, f)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write("1")
+    if not _try_commit_metadata(dest, meta):
+        raise ValueError(
+            f"Iceberg table already exists at {dest} (export refused)"
+        )
 
 
 def export_iceberg_increment(

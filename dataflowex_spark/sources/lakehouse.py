@@ -22,6 +22,7 @@ silently ignoring.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -143,7 +144,9 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
     from dataflowex_spark.sources import iceberg_reader as ir
     from dataflowex_spark.sources.avro_io import write_container
 
-    meta, adds = dr._snapshot(spark, root, None)
+    # pinned, so uniform.delta-version names the version mirrored
+    delta_v = dr._latest_version(root)
+    meta, adds = dr._snapshot(spark, root, delta_v)
     if dr._mapping_mode(meta) != "none":
         raise ValueError(
             "sync_delta_uniform: columnMapping tables unsupported "
@@ -159,12 +162,6 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
             "their dead rows; compact_delta_dvs first (UniForm's "
             "purge precondition)"
         )
-    commits = dr._commit_files(root)
-    newest_cp = dr._checkpoint_for(root, 1 << 62)
-    delta_v = max(
-        max(commits, default=-1),
-        newest_cp[0] if newest_cp else -1,
-    )
 
     from pyspark.sql import types as T
 
@@ -306,11 +303,14 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
         )
 
     os.makedirs(md, exist_ok=True)
+    # unique per attempt: a sync that loses its claim must not
+    # overwrite the files the winner's metadata names
+    token = uuid.uuid4().hex[:8]
     mpath = os.path.join(
-        md, f"uniform-manifest-{new_sid:05d}.avro"
+        md, f"uniform-manifest-{new_sid:05d}-{token}.avro"
     )
     write_container(mpath, man_schema, entries)
-    mlist = os.path.join(md, f"uniform-snap-{new_sid}.avro")
+    mlist = os.path.join(md, f"uniform-snap-{new_sid}-{token}.avro")
     write_container(
         mlist,
         ir.MANIFEST_LIST_SCHEMA,
@@ -342,12 +342,10 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
     }
     schema_entry = {"schema-id": 0, "type": "struct", "fields": top}
     if imeta is None:
-        imeta_new = {
+        imeta = {
             "format-version": 2,
             "table-uuid": f"uniform-delta-{delta_v:028d}"[-36:],
             "location": os.path.abspath(root),
-            "last-sequence-number": new_seq,
-            "current-snapshot-id": new_sid,
             "current-schema-id": 0,
             "schemas": [schema_entry],
             **(
@@ -370,22 +368,12 @@ def sync_delta_uniform(spark: SparkSession, root: str) -> int:
                 if spec_fields
                 else {}
             ),
-            "snapshots": [snap],
-            "properties": {
-                "uniform.source-format": "delta",
-                "uniform.delta-version": str(delta_v),
-            },
+            "snapshots": [],
+            "properties": {"uniform.source-format": "delta"},
+            "_loaded-version": 0,  # a creation claims v1
         }
-        with open(os.path.join(md, "v1.metadata.json"), "w") as f:
-            json.dump(imeta_new, f)
-        with open(
-            os.path.join(md, "version-hint.text"), "w"
-        ) as f:
-            f.write("1")
-        return new_sid
-    # incremental: fresh snapshot + (possibly evolved) schema, CAS
-    cur_fields = ir._current_schema_fields(imeta)
-    if cur_fields != top:
+    elif ir._current_schema_fields(imeta) != top:
+        # the Delta schema evolved: it becomes the current schema
         sid2 = (
             max(
                 s.get("schema-id", 0)

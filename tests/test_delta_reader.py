@@ -3070,3 +3070,254 @@ def test_sync_delta_uniform(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="not.*written by this sync"):
         sync_delta_uniform(spark, root3)
+
+
+# ---------------------------------------------------------------------
+# One commit rule: a writer claims the successor of the version its
+# snapshot was folded at. Each race test runs one concurrent operation
+# right after the writer's first read returns, so the concurrent
+# commit lands between the writer's read and its claim.
+# ---------------------------------------------------------------------
+
+
+_DR = "dataflowex_spark.sources.delta_reader"
+
+
+def _after_first_call(monkeypatch, target, op):
+    """Wrap the function at the dotted path ``target`` so that its
+    first call runs ``op`` once, after the wrapped call has
+    returned."""
+    import importlib
+
+    module, name = target.rsplit(".", 1)
+    real = getattr(importlib.import_module(module), name)
+    pending = [op]
+
+    def read_then_race(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if pending:
+            pending.pop()()
+        return out
+
+    monkeypatch.setattr(target, read_then_race)
+
+
+def test_race_add_constraint_keeps_both(spark, tmp_path, monkeypatch):
+    import dataflowex_spark.sources.delta_reader as dr
+
+    dest = str(tmp_path / "t")
+    dr.write_delta(
+        spark, spark.range(10).selectExpr("id", "id * 2 as x"), dest
+    )
+    _after_first_call(
+        monkeypatch,
+        _DR + "._snapshot",
+        lambda: dr.add_delta_constraint(spark, dest, "c_other", "x >= 0"),
+    )
+    dr.add_delta_constraint(spark, dest, "c_mine", "id >= 0")
+    meta, _adds = dr._snapshot(spark, dest, None)
+    assert sorted(dr._check_constraints(meta)) == ["c_mine", "c_other"]
+
+
+def test_race_delete_delete_one_file(spark, tmp_path, monkeypatch):
+    """Both deletion vectors land on the same file: the second one is
+    built on top of the first, not beside it."""
+    import dataflowex_spark.sources.delta_reader as dr
+
+    dest = str(tmp_path / "t")
+    dr.write_delta(spark, spark.range(100).coalesce(1), dest)
+    _after_first_call(
+        monkeypatch,
+        _DR + "._snapshot",
+        lambda: dr.delete_from_delta(spark, dest, "id < 10"),
+    )
+    dr.delete_from_delta(spark, dest, "id >= 90")
+    ids = sorted(r.id for r in dr.read_delta(spark, dest).collect())
+    assert ids == list(range(10, 90))
+
+
+def test_race_overwrite_append(spark, tmp_path, monkeypatch):
+    """The log orders the append first, so the overwrite removes it."""
+    import dataflowex_spark.sources.delta_reader as dr
+
+    dest = str(tmp_path / "t")
+    dr.write_delta(spark, spark.range(5), dest)
+    _after_first_call(
+        monkeypatch,
+        _DR + "._snapshot",
+        lambda: dr.write_delta(
+            spark, spark.range(100, 110), dest, mode="append"
+        ),
+    )
+    dr.write_delta(spark, spark.range(20), dest, mode="overwrite")
+    assert sorted(r.id for r in dr.read_delta(spark, dest).collect()) == list(
+        range(20)
+    )
+    assert [h["operation"] for h in dr.delta_history(dest)] == [
+        "WRITE", "APPEND", "OVERWRITE",
+    ]
+
+
+def test_race_overwrite_refuses_a_changed_configuration(
+    spark, tmp_path, monkeypatch
+):
+    """An overwrite whose table changed configuration under it names
+    the table and commits nothing."""
+    import re
+
+    import dataflowex_spark.sources.delta_reader as dr
+
+    dest = str(tmp_path / "t")
+    dr.write_delta(spark, spark.range(5), dest)
+    _after_first_call(
+        monkeypatch,
+        _DR + "._snapshot",
+        lambda: dr.add_delta_constraint(spark, dest, "pos", "id >= 0"),
+    )
+    with pytest.raises(ValueError, match=re.escape(dest) + " changed"):
+        dr.write_delta(spark, spark.range(20), dest, mode="overwrite")
+    assert dr.read_delta(spark, dest).count() == 5
+    assert len(dr.delta_history(dest)) == 2
+
+
+def test_race_alter_rename_rename(spark, tmp_path, monkeypatch):
+    import dataflowex_spark.sources.delta_reader as dr
+
+    dest = str(tmp_path / "t")
+    dr.write_delta(
+        spark, spark.range(5).selectExpr("id as a", "id as b", "id as c"), dest
+    )
+    dr.upgrade_delta_column_mapping(spark, dest)
+    _after_first_call(
+        monkeypatch,
+        _DR + "._snapshot",
+        lambda: dr.alter_delta(spark, dest, renames={"b": "b2"}),
+    )
+    dr.alter_delta(spark, dest, renames={"a": "a2"})
+    assert dr.read_delta(spark, dest).columns == ["a2", "b2", "c"]
+
+
+def test_race_merge_delete(spark, tmp_path, monkeypatch):
+    """A MERGE whose matched file took a DV concurrently keeps that
+    DV's deletions."""
+    import dataflowex_spark.sources.delta_reader as dr
+
+    dest = str(tmp_path / "t")
+    dr.write_delta(
+        spark, spark.range(20).selectExpr("id", "0 as v").coalesce(1), dest
+    )
+    _after_first_call(
+        monkeypatch,
+        _DR + "._snapshot",
+        lambda: dr.delete_from_delta(spark, dest, "id < 5"),
+    )
+    src = spark.range(15, 25).selectExpr("id", "1 as v")
+    dr.merge_delta(spark, dest, src, ["id"])
+    got = {r.id: r.v for r in dr.read_delta(spark, dest).collect()}
+    assert got == {i: int(i >= 15) for i in range(5, 25)}
+
+
+def test_race_export_increment_same_snapshot(spark, tmp_path, monkeypatch):
+    """Two publishes of one MTable snapshot: the loser of the version
+    claim re-reads the history and refuses as already published."""
+    import dataflowex_spark.sources.delta_reader as dr
+    from dataflowex_spark.sources.mtable import MTable
+
+    df = spark.range(30).selectExpr("id as k", "0 as v")
+    t = MTable.create(spark, str(tmp_path / "m"), df, "k")
+    dest = str(tmp_path / "delta")
+    dr.export_snapshot_to_delta(t, dest)
+    t.merge(
+        spark.range(3).selectExpr(
+            "id as k", "1 as ts", "'U' as op", "0 as tie", "7 as v"
+        ),
+        "ts", "op", "tie", ["v"],
+    )
+    _after_first_call(
+        monkeypatch,
+        _DR + ".delta_history",
+        lambda: dr.export_delta_increment(t, dest),
+    )
+    with pytest.raises(ValueError, match="already published"):
+        dr.export_delta_increment(t, dest)
+    assert [h["version"] for h in dr.delta_history(dest)] == [0, 1]
+    assert sorted(r.v for r in dr.read_delta(spark, dest).collect()) == [
+        0
+    ] * 27 + [7] * 3
+
+
+def test_race_uniform_first_sync(spark, tmp_path, monkeypatch):
+    """A first sync that loses the Iceberg v1 claim replays against the
+    winner, and ``uniform.delta-version`` names the version whose files
+    the Iceberg side lists."""
+    import dataflowex_spark.sources.delta_reader as dr
+    import dataflowex_spark.sources.iceberg_reader as ir
+    from dataflowex_spark.sources.lakehouse import sync_delta_uniform
+
+    root = str(tmp_path / "t")
+    dr.write_delta(spark, spark.range(10), root)
+
+    def append_and_sync():
+        dr.write_delta(spark, spark.range(10, 15), root, mode="append")
+        sync_delta_uniform(spark, root)
+
+    # the concurrent sync lands once this one has read both trees and
+    # is writing its manifest
+    _after_first_call(
+        monkeypatch,
+        "dataflowex_spark.sources.avro_io.write_container",
+        append_and_sync,
+    )
+    sync_delta_uniform(spark, root)
+    imeta = ir.load_table_metadata(root)
+    assert imeta["properties"]["uniform.delta-version"] == "1"
+    assert ir.read_iceberg(spark, root).count() == 15
+    assert len(imeta["snapshots"]) == 1
+
+
+def test_one_delta_commit_rule():
+    """Static guard: in ``delta_reader.py`` only ``_try_claim_commit``
+    claims a log version, only ``_latest_version`` computes the log
+    head, and no rename publishes a ``_delta_log`` JSON commit.
+    ``write_conformance_log`` writes hand-built fixture logs and is
+    exempt."""
+    import ast
+    from pathlib import Path
+
+    import dataflowex_spark.sources.delta_reader as dr
+
+    tree = ast.parse(Path(dr.__file__).read_text())
+    claims, heads, renames = set(), set(), []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        if fn.name == "write_conformance_log":
+            continue
+        if ast.get_docstring(fn) is not None:
+            fn.body = fn.body[1:] or [ast.Pass()]
+        code = ast.unparse(fn)
+        if "put_if_absent(" in code:
+            claims.add(fn.name)
+        if "1 << 62" in code:
+            heads.add(fn.name)
+        assigned = {
+            t.id: ast.unparse(node.value)
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Assign)
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) in ("os.rename", "os.replace")
+            ):
+                target = node.args[1]
+                text = ast.unparse(target)
+                if isinstance(target, ast.Name):
+                    text = assigned.get(target.id, text)
+                if ".json" in text:
+                    renames.append(f"{fn.name}: {ast.unparse(node)}")
+    assert claims == {"_try_claim_commit"}
+    assert heads == {"_latest_version"}
+    assert renames == []

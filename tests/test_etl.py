@@ -1651,7 +1651,7 @@ def test_mtable_shallow_clone(spark, tmp_path):
         src.clone(str(tmp_path / "fork"))
 
 
-def test_mtable_purge_audit_stages(spark):
+def test_mtable_purge_audit_stages(spark, tmp_path):
     """The three purge stages q333 reports, pinned end-to-end:
     logically gone at current, readable via time travel before
     vacuum, unreadable at any version after vacuum (and the purged
@@ -1666,7 +1666,7 @@ def test_mtable_purge_audit_stages(spark):
     )
     import tempfile
 
-    root = tempfile.mkdtemp(prefix="purge_t_")
+    root = tempfile.mkdtemp(prefix="purge_t_", dir=tmp_path)
     t = MTable.create(spark, root + "/t", df.repartitionByRange(4, "k"), "k")
     v0 = t.current_version()
     chg = spark.createDataFrame(

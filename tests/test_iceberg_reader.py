@@ -206,7 +206,7 @@ AVRO_PRIM = st.one_of(
         max_size=12,
     )
 )
-def test_avro_roundtrip_property(recs):
+def test_avro_roundtrip_property(tmp_path_factory, recs):
     """Generic codec round-trips arbitrary records (zigzag varints,
     unions with null, arrays, maps) under both codecs."""
     import tempfile
@@ -223,7 +223,8 @@ def test_avro_roundtrip_property(recs):
     }
     data = [{"a": a, "b": b, "c": c, "d": d} for a, b, c, d in recs]
     for codec in ("null", "deflate"):
-        p = os.path.join(tempfile.mkdtemp(), "t.avro")
+        tmp_dir = tempfile.mkdtemp(dir=tmp_path_factory.getbasetemp())
+        p = os.path.join(tmp_dir, "t.avro")
         write_container(p, schema, data, codec=codec)
         s2, r2 = read_container(p)
         assert s2 == schema and r2 == data
@@ -4020,3 +4021,49 @@ def test_iceberg_sort_orders(spark, tmp_path):
     }
     assert ids == {1, 2}
     assert ir.read_iceberg(spark, root).count() == 6100
+
+
+def test_table_creations_claim_v1_through_the_backend(spark, tmp_path):
+    """An MTable export and a first UniForm sync create their Iceberg
+    table by claiming ``v1.metadata.json`` with ``put_if_absent`` on
+    the active commit backend; a second export into the same ``dest``
+    refuses, naming it."""
+    import re
+
+    from dataflowex_spark.sources.commit_backend import (
+        PosixCommitBackend,
+        commit_backend,
+    )
+    from dataflowex_spark.sources.delta_reader import write_delta
+    from dataflowex_spark.sources.iceberg_reader import (
+        export_snapshot_to_iceberg,
+    )
+    from dataflowex_spark.sources.lakehouse import sync_delta_uniform
+    from dataflowex_spark.sources.mtable import MTable
+
+    class Recording(PosixCommitBackend):
+        def __init__(self):
+            self.claims = []
+
+        def put_if_absent(self, path, content):
+            self.claims.append(os.path.relpath(path, tmp_path))
+            super().put_if_absent(path, content)
+
+    df = spark.range(20).selectExpr("id as k", "id % 3 as v")
+    t = MTable.create(spark, str(tmp_path / "m"), df, "k")
+    dest = str(tmp_path / "ice")
+    root = str(tmp_path / "u")
+    write_delta(spark, df, root)
+    rec = Recording()
+    with commit_backend(rec):
+        export_snapshot_to_iceberg(t, dest)
+        sync_delta_uniform(spark, root)
+    assert rec.claims == [
+        os.path.join("ice", "metadata", "v1.metadata.json"),
+        os.path.join("u", "metadata", "v1.metadata.json"),
+    ]
+    assert read_iceberg(spark, dest).count() == 20
+    assert read_iceberg(spark, root).count() == 20
+    with pytest.raises(ValueError, match=re.escape(dest)):
+        export_snapshot_to_iceberg(t, dest)
+    assert read_iceberg(spark, dest).count() == 20

@@ -2778,7 +2778,7 @@ def test_grid_radius_pairs(spark):
     }
 
 
-def test_ngram_precision_bleu_edges(spark):
+def test_ngram_precision_bleu_edges(spark, tmp_path):
     """q318's scoring on constructed docs: identical text scores
     1e6/1e6; disjoint text scores 0/0; clipping caps repeated
     candidate tokens at the reference count; a single-token candidate
@@ -2793,7 +2793,7 @@ def test_ngram_precision_bleu_edges(spark):
         (4, "the the the the", "en", "s1", 15),         # clip test
         (5, "the", "en", "s1", 3),                      # 1 token
     ]
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         spark.createDataFrame(
             rows, "doc_id long, text string, lang string, source string, n_chars long"
@@ -2828,7 +2828,7 @@ def test_ngram_precision_bleu_edges(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_temperature_mixture_invariants(spark):
+def test_temperature_mixture_invariants(spark, tmp_path):
     """q319 allocation on a skewed synthetic corpus: slots sum to
     exactly 10,000 (largest remainder never over/under-allocates),
     every domain gets a slot, and τ=0.5 compresses the big/small
@@ -2837,7 +2837,7 @@ def test_temperature_mixture_invariants(spark):
     import dataflowex_spark.queries as Q
     from pyspark.sql import functions as F
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         rows = (
             [(i, "x", "en", "big", 1) for i in range(400)]
@@ -2910,7 +2910,7 @@ def test_dbscan_roles_geometry(spark):
     }
 
 
-def test_phrase_search_positional_join(spark):
+def test_phrase_search_positional_join(spark, tmp_path):
     """Phrase matching is POSITIONAL, not bag-of-words: a doc with
     all three words in the wrong order does not match; overlapping
     occurrences ("a b a b a" for "a b a") are each counted; a phrase
@@ -2918,7 +2918,7 @@ def test_phrase_search_positional_join(spark):
     import tempfile, shutil
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         rows = [
             # the dominant trigram "x y z" appears 3x here
@@ -2944,7 +2944,7 @@ def test_phrase_search_positional_join(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_sorted_neighborhood_blocking(spark):
+def test_sorted_neighborhood_blocking(spark, tmp_path):
     """q322 semantics on constructed records: near-ties that straddle
     an integer-bucket boundary (100.9 vs 101.05) ARE paired (the
     whole point vs equi-join blocking), far records are not, the
@@ -2952,7 +2952,7 @@ def test_sorted_neighborhood_blocking(spark):
     import tempfile, shutil
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         rows = [
             (1, "a", 10, 100.90, "AUTO"),
@@ -3049,7 +3049,7 @@ def test_kendall_rbo_identities(spark):
     assert 0 <= row["overlap_at_20"] <= 20
 
 
-def test_hits_star_graph(spark):
+def test_hits_star_graph(spark, tmp_path):
     """HITS mutual reinforcement on a constructed star: one supplier
     shared by every customer gets authority 1e6 (the max), a
     supplier used by a single light hub scores strictly lower, and
@@ -3057,7 +3057,7 @@ def test_hits_star_graph(spark):
     import tempfile, shutil
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         # orders: customers 1..3 each have one order
         orders = [(i, i, "O", 1.0, f"2024-01-0{i}") for i in (1, 2, 3)]
@@ -3088,7 +3088,7 @@ def test_hits_star_graph(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_lateness_audit_semantics(spark):
+def test_lateness_audit_semantics(spark, tmp_path):
     """q328 on a constructed arrival sequence: an event arriving
     (by id) after a later-timestamped one is late by exactly the
     gap; in-order arrivals are never late; the first arrival per
@@ -3097,7 +3097,7 @@ def test_lateness_audit_semantics(spark):
     import datetime as dt
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
         s = lambda sec: t0 + dt.timedelta(seconds=sec)
@@ -3141,7 +3141,7 @@ def test_bitpack_layout_audit(spark):
     assert rows["sorted"]["total_bits"] < rows["hashed"]["total_bits"] / 2
 
 
-def test_vocab_growth_and_burstiness(spark):
+def test_vocab_growth_and_burstiness(spark, tmp_path):
     """q330: vocab_size is the cumulative sum of new_terms, is
     non-decreasing, and ends at the corpus's distinct token count;
     a fully duplicated corpus puts ALL new terms in bucket 0.
@@ -3151,7 +3151,7 @@ def test_vocab_growth_and_burstiness(spark):
     import datetime as dt
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         docs = [(i, "alpha beta gamma", "en", "s", 10) for i in range(120)]
         spark.createDataFrame(
@@ -3222,14 +3222,14 @@ def test_hll_parameter_sweep_accuracy(spark):
     assert rel8 <= max(rel4 * 1.5, 0.07)
 
 
-def test_source_overlap_matrix_semantics(spark):
+def test_source_overlap_matrix_semantics(spark, tmp_path):
     """Containment vs Jaccard distinction on constructed sources: a
     strict-subset source shows containment 1e6 with Jaccard < 1e6;
     disjoint sources produce no pair row at all."""
     import tempfile, shutil
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         rows = [
             (1, "a b c d", "en", "big", 1),
@@ -3286,7 +3286,7 @@ def test_incremental_cms_merge_equals_single_pass(spark):
     assert merged == single
 
 
-def test_graph_metrics_constructed(spark):
+def test_graph_metrics_constructed(spark, tmp_path):
     """q338/q339 semantics on a constructed co-purchase graph: a
     path graph's endpoints (degree 1) attach to centers (degree 2) —
     negative assortativity; link prediction surfaces the 2-hop
@@ -3295,7 +3295,7 @@ def test_graph_metrics_constructed(spark):
     import tempfile, shutil
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         # orders: {1,2} {2,3} {3,4} — path 1-2-3-4 on parts
         rows = []
@@ -3407,14 +3407,14 @@ def test_recursive_cte_and_pipe(spark):
     assert [tuple(r) for r in pipe] == [tuple(r) for r in classic]
 
 
-def test_collation_and_params_surface(spark):
+def test_collation_and_params_surface(spark, tmp_path):
     """q344: a mixed-case fixture groups case-insensitively under the
     UTF8_LCASE-collated column (one group, not three); q345: changing
     the bound parameter changes results without changing SQL text."""
     import tempfile, shutil
     import dataflowex_spark.queries as Q
 
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp_path)
     try:
         spark.createDataFrame(
             [

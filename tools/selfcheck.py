@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import sys
 import time
 import traceback
@@ -47,7 +48,9 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from dataflowex_spark.catalog import TABLES  # noqa: E402
 from dataflowex_spark.session import get_spark  # noqa: E402
