@@ -2376,14 +2376,29 @@ def write_delta(
         if not exists
         else (meta0.get("configuration") or {})
     )
+
+    def changed(head: int) -> ValueError:
+        return ValueError(
+            f"write_delta({mode}): Delta table {dest} changed its "
+            "schema, partition columns, configuration or protocol "
+            f"concurrently (now at version {head}); nothing was "
+            "committed"
+        )
+
     # a plain append is BLIND: adds commute, so it claims whatever
-    # slot follows the head at claim time. Every other write read the
-    # table (a create, an overwrite's removes, an evolved schema) and
-    # claims the successor of the version it read, ``base``.
+    # slot follows the head at claim time — unless a commit since
+    # meta0's fold changed what its rows were checked against (a new
+    # CHECK constraint, schema or protocol). Every other write read
+    # the table (a create, an overwrite's removes, an evolved schema)
+    # and claims the successor of the version it read, ``base``.
     blind = exists and mode == "append" and evolved_meta is None
+    checked = base  # meta0 was folded with every commit up to here
     while True:
         if blind:
             base = _latest_version(dest)
+            if _changes_metadata(dest, checked, base):
+                raise changed(base)
+            checked = base
         if txn_app_id is not None and base >= 0:
             # a RACING REPLAY of the same batch may have landed
             # between the early check and this claim — re-verify so
@@ -2431,12 +2446,24 @@ def write_delta(
             meta1.get(k) != meta0.get(k)
             for k in ("schemaString", "partitionColumns", "configuration")
         ):
-            raise ValueError(
-                f"write_delta({mode}): Delta table {dest} changed its "
-                "schema, partition columns or configuration "
-                f"concurrently (now at version {base}); nothing was "
-                "committed"
-            )
+            raise changed(base)
+
+
+def _changes_metadata(root: str, after: int, upto: int) -> bool:
+    """Whether a commit in ``(after, upto]`` carries a ``metaData`` or
+    ``protocol`` action: what a blind append's rows were validated
+    against no longer holds."""
+    commits = _commit_files(root)
+    for v in range(after + 1, upto + 1):
+        if v not in commits:
+            return True  # cannot vouch for a version it cannot read
+        with open(commits[v]) as f:
+            for line in f:
+                if line.strip() and (
+                    {"metaData", "protocol"} & json.loads(line).keys()
+                ):
+                    return True
+    return False
 
 
 def _latest_protocol(root: str) -> dict:

@@ -976,54 +976,37 @@ def ordered_event_replay(
     right harness for late-data behavior; this one is for queries
     whose OUTPUT depends on the watermark actually advancing past
     the data. ``sentinel_rows`` (e.g. two far-future heartbeats) are
-    appended as the final files: the first advances the watermark
-    past all real data, the next triggers the eviction batch that
-    emits the tail — the flush idiom Spark's availableNow needs."""
+    appended as the final files, one row each: the first advances the
+    watermark past all real data, the next triggers the eviction
+    batch that emits the tail — the flush idiom Spark's availableNow
+    needs.
+
+    Each frame is one ``toArrow()`` collect (one Spark job), sorted
+    (nulls first, as Spark's ``orderBy``), sliced and written on the
+    driver: staging a replay harness is not a distributed workload.
+    Arrow keeps Spark's types — a nullable ``long`` stays INT64 and a
+    timestamp a UTC instant on any session time zone."""
     import time as _time
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql import types as _T
 
     os.makedirs(stage_dir, exist_ok=True)
     schema = df.schema
-    ts_fields = [
-        f.name
-        for f in schema.fields
-        if isinstance(f.dataType, _T.TimestampType)
-    ]
-
-    def to_pandas_utc(frame):
-        pdf = frame.toPandas()
-        for c in ts_fields:
-            # tz-aware UTC → parquet isAdjustedToUTC=true → Spark
-            # reads TimestampType (naive would read TIMESTAMP_NTZ
-            # and mismatch the declared stream schema)
-            if pdf[c].dt.tz is None:
-                pdf[c] = pdf[c].dt.tz_localize("UTC")
-        return pdf
-
-    pdf = to_pandas_utc(df.orderBy(ts_col))
-    n = max(1, len(pdf))
-    per = -(-n // n_chunks)
-    chunks = [pdf.iloc[i * per:(i + 1) * per] for i in range(n_chunks)]
+    table = df.toArrow().sort_by(
+        [(ts_col, "ascending")], null_placement="at_start"
+    )
+    per = -(-max(1, table.num_rows) // n_chunks)
+    chunks = [table.slice(i * per, per) for i in range(n_chunks)]
     if sentinel_rows is not None:
-        spdf = to_pandas_utc(sentinel_rows)
-        chunks += [spdf.iloc[[j]] for j in range(len(spdf))]
+        sent = sentinel_rows.select(*schema.names).toArrow()
+        sent = sent.cast(table.schema)
+        chunks += [sent.slice(j, 1) for j in range(sent.num_rows)]
     t0 = _time.time() - 3600
-    # driver-side pyarrow writes: staging a replay harness is not a
-    # distributed workload, and N tiny Spark write jobs cost more
-    # than the whole drain
     for i, ch in enumerate(chunks):
-        if ch.empty:
+        if ch.num_rows == 0:
             continue
         p = os.path.join(stage_dir, f"chunk_{i:04d}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(ch, preserve_index=False),
-            p,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
+        pq.write_table(ch, p)
         os.utime(p, (t0 + i, t0 + i))
     return (
         spark.readStream.schema(schema)

@@ -119,3 +119,23 @@ def test_no_nested_output_columns_registry_wide():
             ):
                 bad.append((name, f.name, str(f.dataType)))
     assert bad == [], f"nested output columns (driver-canon-unsafe): {bad}"
+
+
+def test_selfcheck_refuses_unknown_query_names(monkeypatch, capsys):
+    """A name that matches no query is listed and exits 2 before
+    Spark or DuckDB start, instead of failing as a Spark error."""
+    import tools.selfcheck as sc
+
+    def no_engine(*_a, **_k):
+        raise AssertionError("started an engine for an unknown name")
+
+    monkeypatch.setattr(sc, "get_spark", no_engine)
+    monkeypatch.setattr(sc, "duck_connection", no_engine)
+    monkeypatch.setattr(
+        sys, "argv",
+        ["selfcheck.py", SF_DIR, "q20_join_inner_multi", "q0_no_such"],
+    )
+    assert sc.main() == 2
+    assert capsys.readouterr().err.strip() == (
+        "unknown query names: q0_no_such"
+    )

@@ -3180,6 +3180,32 @@ def test_race_overwrite_refuses_a_changed_configuration(
     assert len(dr.delta_history(dest)) == 2
 
 
+def test_race_append_refuses_a_new_constraint(spark, tmp_path, monkeypatch):
+    """A plain append claims the head + 1 without re-reading the table,
+    but it checked its rows against the metadata it read first. A CHECK
+    constraint added in between makes the append refuse, so no row
+    the new constraint forbids is committed."""
+    import re
+
+    import dataflowex_spark.sources.delta_reader as dr
+
+    dest = str(tmp_path / "t")
+    dr.write_delta(spark, spark.range(5), dest)
+    _after_first_call(
+        monkeypatch,
+        _DR + "._snapshot_meta_nospark",
+        lambda: dr.add_delta_constraint(spark, dest, "small", "id < 100"),
+    )
+    with pytest.raises(ValueError, match=re.escape(dest) + " changed"):
+        dr.write_delta(spark, spark.range(500, 503), dest, mode="append")
+    assert sorted(r.id for r in dr.read_delta(spark, dest).collect()) == list(
+        range(5)
+    )
+    assert [h["operation"] for h in dr.delta_history(dest)] == [
+        "WRITE", "ADD CONSTRAINT",
+    ]
+
+
 def test_race_alter_rename_rename(spark, tmp_path, monkeypatch):
     import dataflowex_spark.sources.delta_reader as dr
 

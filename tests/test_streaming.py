@@ -1326,6 +1326,81 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     assert got == list(range(10))
 
 
+def _replayed(spark, df, stage):
+    """Stage ``df`` through ordered_event_replay on ``ts`` (3 chunks)
+    and drain it back into a memory table."""
+    from dataflowex_spark.streaming.ops import (
+        ordered_event_replay,
+        run_to_memory,
+    )
+
+    out, _ = run_to_memory(ordered_event_replay(spark, df, "ts", 3, stage))
+    return out
+
+
+def test_ordered_replay_keeps_nullable_long(spark, tmp_path):
+    """A ``long`` column holding a NULL stages as INT64: the stream's
+    declared schema reads it back unchanged (a pandas round trip turns
+    it into float64 and the drain fails with "Expected bigint, actual
+    DOUBLE")."""
+    df = spark.createDataFrame(
+        [(1, 10, 1_000_000), (2, None, 1_000_060), (3, 30, 1_000_120)],
+        "event_id long, n long, sec long",
+    ).select("event_id", "n", F.timestamp_seconds("sec").alias("ts"))
+    got = _replayed(spark, df, str(tmp_path / "s"))
+    assert _sorted_rows(got, df.columns) == _sorted_rows(df, df.columns)
+
+
+def test_ordered_replay_keeps_instants_on_non_utc_session(spark, tmp_path):
+    """Staging is an instant-preserving copy whatever the session time
+    zone: ``unix_seconds(ts)`` of the replayed rows equals the input's
+    (local wall-clock times relabelled as UTC shift every row by the
+    zone's offset)."""
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        df = spark.createDataFrame(
+            [(i, 1_000_000 + i * 60) for i in range(6)],
+            "event_id long, sec long",
+        ).select("event_id", F.timestamp_seconds("sec").alias("ts"))
+        got = _replayed(spark, df, str(tmp_path / "s")).select(
+            "event_id", F.unix_seconds("ts")
+        )
+        assert _sorted_rows(got, got.columns) == [
+            (i, 1_000_000 + i * 60) for i in range(6)
+        ]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_ordered_replay_collects_each_frame_once(spark, tmp_path):
+    """Staging a frame runs one Spark job (the collect; the event-time
+    sort runs on the driver), and sentinel rows one more."""
+    from dataflowex_spark.streaming.ops import ordered_event_replay
+
+    sc = spark.sparkContext
+    df = spark.range(1000).select(
+        "id", F.timestamp_seconds(F.col("id") * 7 % 1000).alias("ts")
+    )
+    sent = spark.createDataFrame(
+        [(-1, 5_000)], "id long, sec long"
+    ).select("id", F.timestamp_seconds("sec").alias("ts"))
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            ordered_event_replay(
+                spark, df, "ts", 4, str(tmp_path / group), **kw
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("replay_plain") == 1
+    assert jobs("replay_sentinels", sentinel_rows=sent) == 2
+
+
 def test_delta_tail_stream_equals_batch_cdf_and_resumes(spark, tmp_path):
     """The streaming half of the Delta CDC story: delta_tail must
     (a) replay the commit log as the SAME change rows the batch CDF

@@ -207,6 +207,11 @@ def main() -> int:
         del args[i : i + 2]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = [a for a in args if "/" not in a]
+    qs = entrymod.queries()
+    unknown = [a for a in only if a not in qs]
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        return 2
 
     oracles = entrymod.oracle_sql()
     con = duck_connection(sf_dir)
@@ -224,7 +229,6 @@ def main() -> int:
         return 1 if lint_bad else 0
 
     spark = get_spark("selfcheck")
-    qs = entrymod.queries()
     names = only or list(qs)
     n_pass = n_fail = 0
     report: dict[str, dict] = {}
