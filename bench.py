@@ -117,7 +117,25 @@ HEADLINE = [
 ]
 
 
+def bench_reps() -> int:
+    """Timed repeats per query: ``$SPARK_GRAFT_BENCH_REPS``, default 3.
+    A value that is not a positive integer raises a ``ValueError`` that
+    names the variable."""
+    raw = os.environ.get("SPARK_GRAFT_BENCH_REPS", "").strip() or "3"
+    try:
+        reps = int(raw)
+    except ValueError:
+        reps = 0
+    if reps < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_BENCH_REPS={raw!r} is not a positive integer "
+            "(timed repeats per query)"
+        )
+    return reps
+
+
 def main() -> None:
+    reps = bench_reps()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("dataflowex-bench")
@@ -132,10 +150,11 @@ def main() -> None:
         "nation", "region", "events", "documents", "embeddings",
     ]:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-    # ... as is the one-per-core Python worker spawn (~5-10 s once per
-    # session): pre-warm the daemon pool so the first pandas-UDF query
-    # measures its computation, not process forking. Same class as the
-    # classloading warmup above; the timed methodology is unchanged.
+    # ... as is the one-per-core Python worker spawn (~1.5 s once per
+    # session on 4 cores): pre-warm the daemon pool so the first
+    # pandas-UDF query measures its computation, not process forking.
+    # Same class as the classloading warmup above; the timed
+    # methodology is unchanged.
     n_cores = spark.sparkContext.defaultParallelism
 
     def _touch(it):
@@ -156,7 +175,6 @@ def main() -> None:
 
     probe_before = probe()
 
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     reps_sec: dict[str, list[float]] = {}

@@ -16,9 +16,25 @@ Design rules (see SURVEY.md):
   in data paths.
 """
 
-from dataflowex_spark.session import get_spark, configure
-from dataflowex_spark.catalog import Catalog, TABLES
-from dataflowex_spark.pipeline import Pipeline
+import importlib
 
-__all__ = ["get_spark", "configure", "Catalog", "TABLES", "Pipeline"]
+# Exports load on first use (PEP 562), so that importing a submodule
+# imports no PySpark: the Python worker daemon (``pyworker``) runs as
+# ``python -m dataflowex_spark.pyworker`` and must fix ``sys.path``
+# before anything imports ``pyspark``.
+_EXPORTS = {
+    "get_spark": "dataflowex_spark.session",
+    "configure": "dataflowex_spark.session",
+    "Catalog": "dataflowex_spark.catalog",
+    "TABLES": "dataflowex_spark.catalog",
+    "Pipeline": "dataflowex_spark.pipeline",
+}
+
+__all__ = list(_EXPORTS)
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(_EXPORTS[name]), name)

@@ -20,6 +20,23 @@ a 4-batch q367 drain made ~1,200 forks and clones (``/proc/stat``
 the ``chmod`` Hadoop forks for every local file it creates, plus JVM
 threads, which that counter also counts.
 
+On a local master ``get_spark`` also runs the Python workers through
+``dataflowex_spark.pyworker`` (``spark.python.daemon.module``). Spark
+puts its ``pyspark.zip`` (``.py`` source only), the py4j zip and the
+spark-core jar at the front of each worker's ``sys.path``, so a worker
+daemon compiled PySpark from source at start (``import pyspark.worker``
+~1.1-1.5 s, against ~0.3 s from the installed package), and every
+task's ``importlib.invalidate_caches()`` made each of ~16
+``zipimporter``s re-read its archive's directory (~0.2 s of CPU per
+task on Python 3.11). When the installed pyspark and py4j are the
+release in those archives, the daemon drops the archives from its path
+first; a warm 4-task ``mapInPandas`` went from ~1.0 s to ~0.2 s of
+Python CPU. The package's parent directory is merged into
+``spark.executorEnv.PYTHONPATH`` so that workers find the daemon module
+whatever the caller's cwd and ``PYTHONPATH``. ``configure`` leaves both
+alone: they are static confs, and a foreign session keeps Spark's
+daemon.
+
 Query temp state belongs to the session. A query that stages a fixture,
 a table, a checkpoint or a replay writes it under ``scratch_dir(spark,
 prefix)``, a fresh directory in the driver's per-SparkContext files
@@ -36,6 +53,11 @@ import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE_CONF = "spark.python.daemon.module"
+EXECUTOR_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
+# the directory that holds this package, for the workers' PYTHONPATH
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 FS_CHECKPOINT_MANAGER = (
@@ -118,6 +140,23 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=scratch_root(spark))
 
 
+def _local_cpus() -> int:
+    """Local-mode core count: ``$SPARK_GRAFT_CPUS``, or 0 (all cores)
+    when unset or empty. A value that is not a non-negative integer
+    raises a ``ValueError`` that names the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "0"
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = -1
+    if cpus < 0:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS={raw!r} is not a non-negative integer "
+            "(local-mode cores; 0 or unset for all)"
+        )
+    return cpus
+
+
 def get_spark(
     app_name: str = "dataflowex-spark",
     master: str | None = None,
@@ -130,11 +169,22 @@ def get_spark(
     contract); on a real cluster, master/partitions come from
     spark-submit and these are left alone.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
+    cpus = _local_cpus()
     if master is None:
         master = f"local[{cpus}]" if cpus > 0 else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 32) if cpus else 32
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # workers import the installed PySpark, not Spark's source-only
+        # pyspark.zip (module docstring); they find the daemon module
+        # by path whatever the caller's cwd and PYTHONPATH
+        conf.setdefault(DAEMON_MODULE_CONF, "dataflowex_spark.pyworker")
+        paths = conf.get(EXECUTOR_PYTHONPATH_CONF, "").split(os.pathsep)
+        if PACKAGE_PARENT not in paths:
+            conf[EXECUTOR_PYTHONPATH_CONF] = os.pathsep.join(
+                [p for p in paths if p] + [PACKAGE_PARENT]
+            )
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -154,12 +204,13 @@ def get_spark(
     )
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     configure(spark)
     if os.environ.get("SPARK_GRAFT_PREWARM", "") == "1":
-        # pay the one-per-core Python worker spawn (~5-10 s/session)
+        # pay the one-per-core Python worker spawn (~1.5 s/session on
+        # 4 cores once workers import the installed PySpark)
         # up front so the FIRST pandas-UDF query in a sweep/selfcheck
         # session measures its computation, not process forking (the
         # same warmup bench.py does; spark.python.worker.reuse is on
