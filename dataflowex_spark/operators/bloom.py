@@ -132,8 +132,7 @@ def bloom_prefilter(df: DataFrame, key: str, bloom: BloomFilter) -> DataFrame:
     # Drop null keys up front, as documented: xxhash64(NULL, seed)
     # hashes the seed alone, so without this filter a null-key probe
     # row could alias a real key's positions and leak through the
-    # standalone prefilter (bloom_prefilter_join was unaffected — the
-    # downstream equi-join drops nulls anyway).
+    # prefilter.
     tmp = df.where(F.col(key).isNotNull()).crossJoin(F.broadcast(bmp))
     arr = F.col("__bloom_words")
     pos_names = []
@@ -151,27 +150,3 @@ def bloom_prefilter(df: DataFrame, key: str, bloom: BloomFilter) -> DataFrame:
         conds.append(word.bitwiseAND(mask) != F.lit(0))
     out = tmp.where(reduce(lambda a, b: a & b, conds))
     return out.drop("__bloom_words", *pos_names)
-
-
-def bloom_prefilter_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    how: str = "inner",
-    num_bits: int = 1 << 17,
-    num_hashes: int = 5,
-) -> DataFrame:
-    """Inner/semi join with the probe (left) side Bloom-pruned by the
-    build (right) side's key set first. Result is EXACTLY the plain
-    join — the bloom pass only removes rows that provably cannot
-    match. Use when ``right`` is too large to broadcast but its key
-    set compresses well, and ``left`` is the expensive side to
-    shuffle."""
-    if how not in ("inner", "semi", "left_semi", "leftsemi"):
-        raise ValueError(
-            "bloom_prefilter_join preserves semantics only for inner/semi "
-            f"joins (got {how!r}) — outer joins need the unpruned side"
-        )
-    bloom = bloom_build(right, on, num_bits=num_bits, num_hashes=num_hashes)
-    pruned = bloom_prefilter(left, on, bloom)
-    return pruned.join(right, on, how)

@@ -239,75 +239,6 @@ def triangle_count(
     ).select("n_edges", "n_triangles")
 
 
-def triangle_count_degree_ordered(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
-    """Triangle count with DEGREE ORDERING — the skew-proof variant of
-    :func:`triangle_count` for graphs with hub nodes.
-
-    Every edge is oriented from its lower-(degree, id) endpoint to the
-    higher one; triangles are enumerated as two out-edges (a→b, a→c
-    with b before c in the same order) closed by the oriented edge
-    b→c. The wedge intermediate is then Σ outdeg(v)² where every
-    out-degree is O(√m) (a node keeps only neighbors "heavier" than
-    itself), versus Σ deg(v)² for id-ordering — on a graph with one
-    degree-d hub that is the difference between d² wedges through the
-    hub and ~0. Same exact count; order by (degree, id) is a total
-    order so each triangle is enumerated exactly once.
-
-    Cost: one extra degree aggregate + broadcast-joined relabel. The
-    id-ordered variant stays the DuckDB-oracle form (ANSI-portable);
-    an equivalence test pins them to each other."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionByName(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("dg"))
-    )
-    da = deg.select(
-        F.col("v").alias("a"), F.struct("dg", F.col("v").alias("id")).alias("oa")
-    )
-    db = deg.select(
-        F.col("v").alias("b"), F.struct("dg", F.col("v").alias("id")).alias("ob")
-    )
-    # orient low (deg, id) -> high (deg, id)
-    oriented = (
-        e.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(F.col("oa") < F.col("ob"), F.col("a"))
-            .otherwise(F.col("b"))
-            .alias("lo"),
-            F.when(F.col("oa") < F.col("ob"), F.col("b"))
-            .otherwise(F.col("a"))
-            .alias("hi"),
-            F.when(F.col("oa") < F.col("ob"), F.col("ob"))
-            .otherwise(F.col("oa"))
-            .alias("ohi"),
-        )
-    )
-    w1 = oriented.select(
-        F.col("lo").alias("x"), F.col("hi").alias("y"), F.col("ohi").alias("oy")
-    )
-    w2 = oriented.select(
-        F.col("lo").alias("x"), F.col("hi").alias("z"), F.col("ohi").alias("oz")
-    )
-    wedges = w1.join(w2, "x").filter(F.col("oy") < F.col("oz"))
-    closer = oriented.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    tri = wedges.join(closer, ["y", "z"])
-    return tri.agg(F.count("*").alias("n_triangles")).crossJoin(
-        F.broadcast(e.agg(F.count("*").alias("n_edges")))
-    ).select("n_edges", "n_triangles")
-
-
 def label_propagation(
     edges: DataFrame,
     src: str = "src",

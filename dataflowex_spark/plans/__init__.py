@@ -67,100 +67,6 @@ def unpartitioned_windows(plan: str) -> int:
     return n
 
 
-def column_lineage(df: DataFrame) -> dict[str, set[tuple[str, str]]]:
-    """COLUMN-LEVEL LINEAGE from the analyzed logical plan: for every
-    output column, the set of (source_table, source_column) leaves it
-    derives from — the impact-analysis/governance surface ("which
-    outputs move if lineitem.l_discount changes semantics?") that a
-    plan-first engine gets for free, because Catalyst's resolved
-    attributes carry stable exprIds end to end.
-
-    Walk: post-order over the operator tree; parquet/file relations
-    seed each leaf attribute with (basename(path), column);
-    Project/Aggregate/Window map each NamedExpression's exprId to the
-    union of its ``references()``' origins (Catalyst computes the
-    reference set — no manual expression-tree walking); Union merges
-    children positionally; everything else (joins, filters, sorts,
-    limits, subquery aliases) passes attributes through unchanged —
-    same exprId, same origin. Non-file leaves (inline/local
-    relations, streaming sources) tag as ``("<local>", col)``;
-    columns whose origin can't be established resolve to
-    ``("<unresolved>", col)`` rather than silently vanishing.
-
-    Driver-side plan analysis only — nothing executes."""
-    import os
-
-    def seq(s):
-        return [s.apply(i) for i in range(s.size())]
-
-    origin: dict[int, set[tuple[str, str]]] = {}
-
-    def named_origin(ne) -> set[tuple[str, str]]:
-        out: set[tuple[str, str]] = set()
-        for r in seq(ne.references().toSeq()):
-            out |= origin.get(
-                r.exprId().id(), {("<unresolved>", r.name())}
-            )
-        return out
-
-    def visit(node) -> None:
-        for ch in seq(node.children()):
-            visit(ch)
-        cls = node.getClass().getSimpleName()
-        if cls == "LogicalRelation":
-            try:
-                paths = seq(node.relation().location().rootPaths())
-                src = ",".join(
-                    os.path.splitext(os.path.basename(str(p)))[0]
-                    for p in paths
-                )
-            except Exception:
-                src = "<local>"
-            for a in seq(node.output()):
-                origin[a.exprId().id()] = {(src, a.name())}
-        elif cls in ("LocalRelation", "OneRowRelation", "Range"):
-            for a in seq(node.output()):
-                origin[a.exprId().id()] = {("<local>", a.name())}
-        elif cls == "Project":
-            for ne in seq(node.projectList()):
-                origin[ne.exprId().id()] = named_origin(ne)
-        elif cls == "Aggregate":
-            for ne in seq(node.aggregateExpressions()):
-                origin[ne.exprId().id()] = named_origin(ne)
-        elif cls == "Window":
-            for ne in seq(node.windowExpressions()):
-                origin[ne.exprId().id()] = named_origin(ne)
-        elif cls == "Generate":
-            gen_refs: set[tuple[str, str]] = set()
-            for r in seq(node.generator().references().toSeq()):
-                gen_refs |= origin.get(
-                    r.exprId().id(), {("<unresolved>", r.name())}
-                )
-            for a in seq(node.generatorOutput()):
-                origin[a.exprId().id()] = set(gen_refs)
-        elif cls == "Union":
-            outs = seq(node.output())
-            kids = [seq(ch.output()) for ch in seq(node.children())]
-            for i, a in enumerate(outs):
-                merged: set[tuple[str, str]] = set()
-                for k in kids:
-                    ka = k[i]
-                    merged |= origin.get(
-                        ka.exprId().id(), {("<unresolved>", ka.name())}
-                    )
-                origin[a.exprId().id()] = merged
-        # all other operators pass attributes through by exprId
-
-    plan = df._jdf.queryExecution().analyzed()
-    visit(plan)
-    return {
-        a.name(): origin.get(
-            a.exprId().id(), {("<unresolved>", a.name())}
-        )
-        for a in seq(plan.output())
-    }
-
-
 def local_rows_df(spark, rows, schema, slices: int = 1) -> DataFrame:
     """Driver-built small DataFrame with a BOUNDED partition count.
 

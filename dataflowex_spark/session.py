@@ -31,11 +31,12 @@ task's ``importlib.invalidate_caches()`` made each of ~16
 task on Python 3.11). When the installed pyspark and py4j are the
 release in those archives, the daemon drops the archives from its path
 first; a warm 4-task ``mapInPandas`` went from ~1.0 s to ~0.2 s of
-Python CPU. The package's parent directory is merged into
-``spark.executorEnv.PYTHONPATH`` so that workers find the daemon module
-whatever the caller's cwd and ``PYTHONPATH``. ``configure`` leaves both
-alone: they are static confs, and a foreign session keeps Spark's
-daemon.
+Python CPU. ``spark.python.daemon.module`` is a static conf, so a
+foreign session keeps Spark's daemon. ``configure`` merges the
+package's parent into ``sparkContext.environment["PYTHONPATH"]``,
+which PySpark ships with every Python function and Spark merges into
+the workers' path: any session's workers find the daemon module and
+the package whatever the caller's cwd and ``PYTHONPATH``.
 
 Query temp state belongs to the session. A query that stages a fixture,
 a table, a checkpoint or a replay writes it under ``scratch_dir(spark,
@@ -55,7 +56,6 @@ import tempfile
 from pyspark.sql import SparkSession
 
 DAEMON_MODULE_CONF = "spark.python.daemon.module"
-EXECUTOR_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
 # the directory that holds this package, for the workers' PYTHONPATH
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -89,7 +89,15 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine confs to an existing session."""
+    """Apply runtime-settable engine confs to an existing session, and
+    make the package importable on its Python workers."""
+    # Spark keys worker pools by this env: set it before any UDF runs
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "").split(os.pathsep)
+    if PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(
+            [p for p in paths if p] + [PACKAGE_PARENT]
+        )
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -177,14 +185,8 @@ def get_spark(
     conf = dict(extra_conf or {})
     if master.startswith("local"):
         # workers import the installed PySpark, not Spark's source-only
-        # pyspark.zip (module docstring); they find the daemon module
-        # by path whatever the caller's cwd and PYTHONPATH
+        # pyspark.zip (module docstring)
         conf.setdefault(DAEMON_MODULE_CONF, "dataflowex_spark.pyworker")
-        paths = conf.get(EXECUTOR_PYTHONPATH_CONF, "").split(os.pathsep)
-        if PACKAGE_PARENT not in paths:
-            conf[EXECUTOR_PYTHONPATH_CONF] = os.pathsep.join(
-                [p for p in paths if p] + [PACKAGE_PARENT]
-            )
 
     b = (
         SparkSession.builder.appName(app_name)

@@ -18,10 +18,6 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 
-def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).parquet(path)
-
-
 def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
     """ORC scan — same pushdown/pruning story as parquet (columnar,
     footer stats); the second first-class at-rest format."""
@@ -599,9 +595,9 @@ def atomic_append(
     and appends only the remainder — convergent, no duplicates. Bare
     ``atomic_append`` (no key) is NOT replay-safe after a torn commit:
     a blind retry would duplicate the already-renamed prefix — route
-    replays through a keyed sink (:func:`incremental_append`,
-    ``streaming.upsert_sink``) or a per-batch overwrite directory
-    (``streaming.asof_join_stream``). The prior direct
+    replays through a keyed sink (:func:`incremental_append`, also as
+    a ``streaming.run_foreach_batch`` handler) or a per-batch overwrite
+    directory (``streaming.asof_join_stream``). The prior direct
     ``mode("append")`` write exposed the whole data-write duration as
     the torn window; this narrows it to the rename loop. (True
     multi-file atomicity needs a manifest table format — out of
@@ -866,81 +862,6 @@ def schema_diff(spark, path_a: str, path_b: str):
     )
 
 
-def partition_fingerprints(
-    df: DataFrame, partition_col: str, hash_cols: list[str]
-) -> DataFrame:
-    """(partition, fp, n) per partition value: an ORDER-INDEPENDENT
-    bit_xor of portable row hashes plus the row count — ~16 bytes of
-    state per partition, map-side combined, no sort (the q203 shape
-    as a reusable operator). ``hash_cols`` should be integer/string
-    columns (quantize doubles first — their string rendering is not
-    engine-portable)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", *hash_cols)), 1, 15), 16, 10
-    ).cast("long")
-    return (
-        df.select(F.col(partition_col).alias("partition"), h.alias("__h"))
-        .groupBy("partition")
-        .agg(F.expr("bit_xor(__h)").alias("fp"), F.count("*").alias("n"))
-    )
-
-
-def sync_changed_partitions(
-    src: DataFrame,
-    dst_path: str,
-    partition_col: str,
-    hash_cols: list[str],
-) -> list:
-    """Idempotent incremental backfill: diff the source against the
-    destination BY PARTITION FINGERPRINT and rewrite only the
-    partitions that actually changed (dynamic partition overwrite —
-    untouched partitions' files are never rewritten, so object-store
-    churn and downstream cache invalidation track the delta, not the
-    table). Returns the list of changed partition values ([] ⇒
-    destination already current; first run rewrites everything).
-
-    Rerun-safe by construction: a crash mid-write leaves some
-    partitions updated — the next run re-diffs and rewrites only the
-    remainder (fingerprints of completed partitions now match)."""
-    spark = src.sparkSession
-    src_fp = partition_fingerprints(src, partition_col, hash_cols)
-    try:
-        dst = spark.read.parquet(dst_path)
-        dst_fp = partition_fingerprints(dst, partition_col, hash_cols)
-        d = dst_fp.select(
-            F.col("partition").alias("__p"),
-            F.col("fp").alias("__fp"),
-            F.col("n").alias("__n"),
-        )
-        changed_df = (
-            src_fp.join(d, src_fp["partition"] == d["__p"], "left")
-            .filter(
-                F.col("__p").isNull()
-                | (F.col("fp") != F.col("__fp"))
-                | (F.col("n") != F.col("__n"))
-            )
-            .select("partition")
-        )
-    except Exception:  # destination not born yet: full backfill
-        changed_df = src_fp.select("partition")
-    changed = [r["partition"] for r in changed_df.collect()]
-    if not changed:
-        return []
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            src.filter(F.col(partition_col).isin(changed))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(dst_path)
-        )
-    finally:
-        if prior is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-    return changed
-
-
 def publish_snapshot(
     tables: dict, root: str, snapshot_id: int | None = None
 ) -> str:
@@ -1036,81 +957,10 @@ def read_csv_audited(
     return good, bad
 
 
-def with_hilbert_key(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    bits: int = 8,
-    out_col: str = "hkey",
-) -> DataFrame:
-    """HILBERT-curve sort key for 2-D clustering — the locality
-    upgrade over :func:`zorder_key`: consecutive Hilbert positions
-    are always spatially ADJACENT cells (Morton takes long diagonal
-    jumps at quadrant boundaries), so equal-size file buckets cover
-    tighter rectangles and range predicates on either dimension skip
-    more files (the layout Delta's OPTIMIZE added after Z-order for
-    exactly this reason).
-
-    Inputs must be pre-normalized to [0, 2**bits). The classic
-    bit-level state machine (quadrant digit + rotate/flip per level)
-    unrolls to ``bits`` chained projections of pure integer CASE/
-    bitwise arithmetic — one narrow stage per level, all inside
-    whole-stage codegen, no UDFs; the SAME unrolled arithmetic is
-    emitted as SQL by the q379 oracle generator, so the key is
-    engine-portable by construction (pinned against an independent
-    Python reference in pytest)."""
-    n = 1 << bits
-    out = (
-        df.withColumn("__hx", F.col(x_col).cast("long"))
-        .withColumn("__hy", F.col(y_col).cast("long"))
-        .withColumn(out_col, F.lit(0).cast("long"))
-    )
-    s = n >> 1
-    while s > 0:
-        rx = F.when(
-            F.col("__hx").bitwiseAND(F.lit(s)) > 0, F.lit(1)
-        ).otherwise(F.lit(0))
-        ry = F.when(
-            F.col("__hy").bitwiseAND(F.lit(s)) > 0, F.lit(1)
-        ).otherwise(F.lit(0))
-        out = out.withColumn("__rx", rx).withColumn("__ry", ry)
-        out = out.withColumn(
-            out_col,
-            F.col(out_col)
-            + F.lit(s * s)
-            * (F.col("__rx") * 3).bitwiseXOR(F.col("__ry")).cast("long"),
-        )
-        flip = (F.col("__ry") == 0) & (F.col("__rx") == 1)
-        swap = F.col("__ry") == 0
-        nx = F.when(
-            swap,
-            F.when(flip, F.lit(n - 1) - F.col("__hy")).otherwise(
-                F.col("__hy")
-            ),
-        ).otherwise(F.col("__hx"))
-        ny = F.when(
-            swap,
-            F.when(flip, F.lit(n - 1) - F.col("__hx")).otherwise(
-                F.col("__hx")
-            ),
-        ).otherwise(F.col("__hy"))
-        out = (
-            out.withColumn("__nx", nx)
-            .withColumn("__ny", ny)
-            .withColumn("__hx", F.col("__nx"))
-            .withColumn("__hy", F.col("__ny"))
-            .drop("__nx", "__ny", "__rx", "__ry")
-        )
-        s >>= 1
-    return out.drop("__hx", "__hy")
-
-
 def hilbert_key_np(hx0, hy0, bits: int = 8):
-    """Vectorized numpy twin of :func:`with_hilbert_key` — the SAME
-    xy2d state machine over int64 arrays, for bounded driver-side
-    replays (q379's cell-space audit). Kept HERE next to the Spark
-    unrolling so the two implementations cannot drift independently;
-    pytest pins both against one independent reference grid."""
+    """HILBERT-curve key (the xy2d state machine) over int64 arrays in
+    [0, 2**bits), for bounded driver-side replays (q379's cell-space
+    audit, whose oracle emits the same machine as SQL CTEs)."""
     import numpy as np
 
     n = 1 << bits

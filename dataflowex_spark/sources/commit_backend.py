@@ -30,9 +30,9 @@ store's primitives — S3 ``If-None-Match: *`` / GCS
 ``ifGenerationMatch=0`` conditional PUT — proving the protocol needs
 NO rename, NO hard link, NO ``O_EXCL``: a real S3/GCS backend
 implements the same two methods against the store API. Swap the
-process-wide default with :func:`set_commit_backend` or the
-:func:`commit_backend` context manager (tests re-run the writer race
-suites under the conditional-put backend this way).
+process-wide default for a scope with the :func:`commit_backend`
+context manager (tests re-run the writer race suites under the
+conditional-put backend this way).
 """
 
 import os
@@ -103,102 +103,13 @@ class ConditionalPutCommitBackend:
             _atomic_write(path, content)
 
 
-class RestCatalogCommitBackend:
-    """Commit backend modeling the Iceberg REST CATALOG's commit
-    shape (the third portability target after POSIX and conditional
-    PUT): the service holds a per-table HEAD VERSION and a commit is
-    a COMPARE-AND-SWAP on that head — the client proposes
-    base-version N-1 → new metadata N, the service atomically checks
-    its recorded head and either advances it (writing the metadata
-    itself) or answers 409 CONFLICT. This differs from ConditionalPut
-    in WHERE exclusivity lives: not per-object existence, but a
-    table-level version counter the service owns — which is exactly
-    why the REST spec lets the catalog garbage-collect losers and
-    reject stale writers without any object-store semantics at all.
-
-    ``put_if_absent`` adapts the path protocol onto the CAS: the
-    version number parses out of the claimed filename
-    (``vN.metadata.json`` / ``N.json`` / ``N.manifest.json``), the
-    table key is the file's directory, and the swap requires
-    head == N-1 (head bootstraps from the directory on first touch,
-    so pre-existing tables adopt cleanly). A racing claim of the
-    same slot — or ANY claim against a stale head — raises
-    ``FileExistsError``, the same signal the writers' replay loops
-    already handle. Advisory ``put`` stays last-writer-wins (the
-    catalog's table-properties shape)."""
-
-    _lock = threading.Lock()
-
-    def __init__(self):
-        self._head: dict[tuple, int] = {}
-
-    @staticmethod
-    def _parse(path: str) -> tuple[tuple, int] | None:
-        import re as _re
-
-        d, fn = os.path.split(path)
-        m = _re.match(
-            r"^(?:v)?(\d+)\.(?:metadata\.json|json|manifest\.json)$",
-            fn,
-        )
-        if not m:
-            return None
-        return (d,), int(m.group(1))
-
-    def put_if_absent(self, path: str, content: str) -> None:
-        parsed = self._parse(path)
-        if parsed is None:
-            # non-versioned claims (rare) fall back to existence
-            with self._lock:
-                if os.path.exists(path):
-                    raise FileExistsError(path)
-                _atomic_write(path, content)
-            return
-        key, v = parsed
-        with self._lock:
-            head = self._head.get(key)
-            if head is None:
-                # bootstrap from the directory: newest version the
-                # store already holds (adopting a pre-existing table)
-                head = 0
-                if os.path.isdir(key[0]):
-                    import re as _re
-
-                    for fn in os.listdir(key[0]):
-                        m = _re.match(
-                            r"^(?:v)?(\d+)\.(?:metadata\.json|json|"
-                            r"manifest\.json)$",
-                            fn,
-                        )
-                        if m:
-                            head = max(head, int(m.group(1)) + 1)
-            # CAS: the proposed slot must be exactly the next head
-            # (a stale writer proposing head-1 or a raced slot both
-            # conflict — the REST catalog's 409)
-            if v < head or os.path.exists(path):
-                self._head[key] = max(head, v)
-                raise FileExistsError(path)
-            _atomic_write(path, content)
-            self._head[key] = v + 1
-
-    def put(self, path: str, content: str) -> None:
-        with self._lock:
-            _atomic_write(path, content)
-
-
-_DEFAULT = PosixCommitBackend()
-_active = _DEFAULT
+_active = PosixCommitBackend()
 
 
 def get_commit_backend():
     """The process-wide backend every Delta/Iceberg commit routes
     through (MTable additionally takes a per-table override)."""
     return _active
-
-
-def set_commit_backend(backend) -> None:
-    global _active
-    _active = backend if backend is not None else _DEFAULT
 
 
 @contextmanager

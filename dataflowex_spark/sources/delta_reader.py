@@ -2278,8 +2278,8 @@ def write_delta(
     )
     if ccols and exists:
         raise ValueError(
-            "cluster_by applies at table creation; use "
-            "alter_delta_clustering to (re)cluster an existing table"
+            "cluster_by applies at table creation; pass it to the "
+            "write_delta call that creates the table"
         )
     lead: list[dict] = []
     if evolved_meta is not None:
@@ -2653,15 +2653,14 @@ def _row_tracking_base_map(
     """Broadcastable (on-disk path → baseRowId,
     defaultRowCommitVersion) frame keyed exactly like the scans'
     ``__fp`` column. Refuses a live file with no baseRowId — an
-    enabled table must have every add assigned (the enablement
-    backfill guarantees it)."""
+    enabled table must have every add assigned."""
     rows = []
     for rel, a in sorted(adds.items()):
         if a.get("baseRowId") is None:
             raise DeltaProtocolError(
                 f"row tracking enabled but live file {rel!r} has no "
-                "baseRowId (enable_delta_row_tracking backfills "
-                "existing files)"
+                "baseRowId (enable it at creation: write_delta "
+                "configuration={'delta.enableRowTracking': 'true'})"
             )
         rows.append(
             (
@@ -3293,16 +3292,7 @@ def _ict_stamp(
     stamped = False
     for a0 in out:
         if "commitInfo" in a0 and a0["commitInfo"] is not None:
-            ci = dict(a0["commitInfo"])
-            # a caller-pinned ICT (the enablement commit pins its
-            # own so the EnablementTimestamp property matches the
-            # commit exactly) survives if still monotone
-            if not (
-                ci.get("inCommitTimestamp")
-                and int(ci["inCommitTimestamp"]) > prior
-            ):
-                ci["inCommitTimestamp"] = ict
-            a0["commitInfo"] = ci
+            a0["commitInfo"] = {**a0["commitInfo"], "inCommitTimestamp": ict}
             stamped = True
     if not stamped:
         out.append(
@@ -3349,273 +3339,6 @@ def _try_claim_commit(
     if interval > 0 and v > 0 and v % interval == 0:
         checkpoint_delta_export(spark, dest)
     return v
-
-
-def enable_delta_in_commit_timestamps(
-    spark: SparkSession, dest: str
-) -> int:
-    """Enable IN-COMMIT TIMESTAMPS on an existing table — the
-    ``ALTER TABLE ... SET TBLPROPERTIES
-    ('delta.enableInCommitTimestamps'='true')`` shape from
-    PROTOCOL.md: the enablement commit upgrades the protocol to
-    writer 7 carrying the ``inCommitTimestamp`` writerFeature
-    (existing features and implied legacy features preserved), sets
-    the property plus the spec's
-    ``delta.inCommitTimestampEnablementVersion`` /
-    ``...EnablementTimestamp`` pair (required when enabled after
-    creation — they tell readers where the monotone clock STARTS, so
-    timestamp-travel before that version falls back to file mtimes),
-    and pins its own commitInfo ICT to exactly the enablement
-    timestamp. Every later commit is stamped monotonically by the
-    claim funnel (:func:`_ict_stamp`). Idempotent. Returns the
-    committed (or current) version."""
-    import time as _time
-
-    while True:
-        base = _latest_version(dest)
-        meta, _adds = _snapshot(spark, dest, base)
-        conf = dict(meta.get("configuration") or {})
-        if (
-            str(conf.get("delta.enableInCommitTimestamps", "")).lower()
-            == "true"
-        ):
-            return base  # idempotent
-        proto = _latest_protocol(dest)
-        wv = proto.get("minWriterVersion", 1)
-        # legacy writer levels imply features that must materialize
-        # when jumping to the features-era list (the checkpoint
-        # upgrade's table, same rule)
-        _implied_w = {
-            2: ["appendOnly", "invariants"],
-            3: ["checkConstraints"],
-            4: ["changeDataFeed", "generatedColumns"],
-            5: ["columnMapping"],
-            6: ["identityColumns"],
-        }
-        wfeats = set(proto.get("writerFeatures") or [])
-        if wv < 7:
-            for lvl, fs in _implied_w.items():
-                if wv >= lvl:
-                    wfeats |= set(fs)
-        proto_new = {
-            "minReaderVersion": proto.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(wfeats | {"inCommitTimestamp"}),
-        }
-        if proto.get("readerFeatures") is not None:
-            proto_new["readerFeatures"] = sorted(
-                set(proto["readerFeatures"])
-            )
-        ict = int(_time.time() * 1000)
-        v_target = base + 1
-        conf["delta.enableInCommitTimestamps"] = "true"
-        conf["delta.inCommitTimestampEnablementVersion"] = str(v_target)
-        conf["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
-        new_meta = dict(meta)
-        new_meta["configuration"] = conf
-        actions = [
-            {"protocol": proto_new},
-            {"metaData": new_meta},
-            {
-                "commitInfo": {
-                    "operation": "SET TBLPROPERTIES",
-                    "inCommitTimestamp": ict,
-                }
-            },
-        ]
-        v = _try_claim_commit(spark, dest, base, actions, conf)
-        if v is None:
-            continue
-        return v
-
-
-def enable_delta_row_tracking(spark: SparkSession, dest: str) -> int:
-    """Enable ROW TRACKING on an existing table with a BACKFILL
-    commit (PROTOCOL.md "Row Tracking"): upgrade the protocol to
-    writer 7 with the ``rowTracking`` + ``domainMetadata``
-    writerFeatures (existing/implied features preserved), set
-    ``delta.enableRowTracking=true`` plus fresh materialized-column
-    names, re-add every live file with an assigned ``baseRowId``
-    and this commit as its ``defaultRowCommitVersion``
-    (``dataChange: false`` — no reader-visible rows change), and
-    write the ``delta.rowTracking`` high-water-mark domain — all in
-    ONE commit, so there is never a version where the table claims
-    tracking but a live file has no id. Idempotent. Returns the
-    committed (or current) version.
-
-    Backfilled rows' row commit version is the enablement commit
-    (their pre-enablement history has no defined row ids to
-    preserve — the same convention delta-spark's backfill uses).
-    Requires per-file ``numRecords`` stats (our writers always
-    record them); columnMapping tables refuse."""
-    import uuid as _uuid
-
-    while True:
-        base = _latest_version(dest)
-        meta, adds = _snapshot(spark, dest, base)
-        if _mapping_mode(meta) != "none":
-            raise DeltaProtocolError(
-                "row tracking with columnMapping is not implemented"
-            )
-        conf = dict(meta.get("configuration") or {})
-        if str(conf.get("delta.enableRowTracking", "")).lower() == "true":
-            return base  # idempotent
-        proto = _latest_protocol(dest)
-        wv = proto.get("minWriterVersion", 1)
-        _implied_w = {
-            2: ["appendOnly", "invariants"],
-            3: ["checkConstraints"],
-            4: ["changeDataFeed", "generatedColumns"],
-            5: ["columnMapping"],
-            6: ["identityColumns"],
-        }
-        wfeats = set(proto.get("writerFeatures") or [])
-        if wv < 7:
-            for lvl, fs in _implied_w.items():
-                if wv >= lvl:
-                    wfeats |= set(fs)
-        proto_new = {
-            "minReaderVersion": proto.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(
-                wfeats | {"rowTracking", "domainMetadata"}
-            ),
-        }
-        if proto.get("readerFeatures") is not None:
-            proto_new["readerFeatures"] = sorted(
-                set(proto["readerFeatures"])
-            )
-        conf["delta.enableRowTracking"] = "true"
-        conf.setdefault(
-            "delta.rowTracking.materializedRowIdColumnName",
-            f"_row-id-col-{_uuid.uuid4().hex[:16]}",
-        )
-        conf.setdefault(
-            "delta.rowTracking.materializedRowCommitVersionColumnName",
-            f"_row-commit-version-col-{_uuid.uuid4().hex[:16]}",
-        )
-        new_meta = dict(meta)
-        new_meta["configuration"] = conf
-        v_target = base + 1
-        readds: list[dict] = []
-        for rel in sorted(adds):
-            old = adds[rel]
-            rm = {"path": rel, "dataChange": False}
-            for carry in ("partitionValues", "size", "deletionVector"):
-                if old.get(carry) is not None:
-                    rm[carry] = old[carry]
-            new_add = dict(old)
-            new_add["dataChange"] = False
-            readds.append({"remove": rm})
-            readds.append({"add": new_add})
-        dm_actions, _hwm = _assign_base_row_ids(
-            [a for a in readds if "add" in a], -1, v_target
-        )
-        actions = (
-            [{"protocol": proto_new}, {"metaData": new_meta}]
-            + readds
-            + dm_actions
-            + [
-                {
-                    "commitInfo": {
-                        "operation": "SET TBLPROPERTIES",
-                        "timestamp": None,
-                        "operationMetrics": {
-                            "numFilesBackfilled": len(adds)
-                        },
-                    }
-                }
-            ]
-        )
-        v = _try_claim_commit(spark, dest, base, actions, conf)
-        if v is None:
-            continue
-        return v
-
-
-def alter_delta_clustering(
-    spark: SparkSession, dest: str, cluster_by: list[str]
-) -> int:
-    """(Re)declare the CLUSTERING COLUMNS of an existing table
-    (``ALTER TABLE ... CLUSTER BY``): upgrades the protocol to
-    writer 7 with ``clusteredTable`` + ``domainMetadata`` (existing
-    and implied features preserved) and writes the
-    ``delta.clustering`` domain. Metadata-only — existing files keep
-    their layout until the next :func:`optimize_delta` reads the new
-    columns and rewrites. Returns the committed version."""
-    if not cluster_by:
-        raise ValueError("alter_delta_clustering: empty cluster_by")
-    while True:
-        base = _latest_version(dest)
-        meta, _adds = _snapshot(spark, dest, base)
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        known = {f.name for f in schema.fields}
-        bad = [c for c in cluster_by if c not in known]
-        if bad:
-            raise ValueError(f"cluster_by columns {bad} not in schema")
-        pcols = set(meta.get("partitionColumns") or [])
-        overlap = sorted(set(cluster_by) & pcols)
-        if overlap:
-            raise ValueError(
-                f"cluster_by overlaps partition columns {overlap}"
-            )
-        proto = _latest_protocol(dest)
-        wv = proto.get("minWriterVersion", 1)
-        _implied_w = {
-            2: ["appendOnly", "invariants"],
-            3: ["checkConstraints"],
-            4: ["changeDataFeed", "generatedColumns"],
-            5: ["columnMapping"],
-            6: ["identityColumns"],
-        }
-        wfeats = set(proto.get("writerFeatures") or [])
-        if wv < 7:
-            for lvl, fs in _implied_w.items():
-                if wv >= lvl:
-                    wfeats |= set(fs)
-        proto_new = {
-            "minReaderVersion": proto.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(
-                wfeats | {"clusteredTable", "domainMetadata"}
-            ),
-        }
-        if proto.get("readerFeatures") is not None:
-            proto_new["readerFeatures"] = sorted(
-                set(proto["readerFeatures"])
-            )
-        actions = [
-            {"protocol": proto_new},
-            {
-                "domainMetadata": {
-                    "domain": _CLUSTERING_DOMAIN,
-                    "configuration": json.dumps(
-                        {
-                            "clusteringColumns": [
-                                [c] for c in cluster_by
-                            ]
-                        }
-                    ),
-                    "removed": False,
-                }
-            },
-            {
-                "commitInfo": {
-                    "operation": "CLUSTER BY",
-                    "timestamp": None,
-                    "operationParameters": {
-                        "clusterBy": list(cluster_by)
-                    },
-                }
-            },
-        ]
-        v = _try_claim_commit(
-            spark, dest, base, actions,
-            meta.get("configuration") or {},
-        )
-        if v is None:
-            continue
-        return v
 
 
 def upgrade_delta_column_mapping(

@@ -3485,8 +3485,8 @@ def _write_iceberg_attempt(
     if exists and sort_by is not None and sort_by != sort_cols:
         raise ValueError(
             f"sort_by {sort_by} != table's default sort order "
-            f"{sort_cols} (declare at creation; use "
-            "alter_iceberg_sort_order to change)"
+            f"{sort_cols} (the order is declared once, by the "
+            "write_iceberg sort_by that creates the table)"
         )
     if sort_cols:
         df = df.sortWithinPartitions(
@@ -4174,53 +4174,6 @@ def _default_sort_columns(
             )
         cols.append(names_by_id[f["source-id"]])
     return cols, int(oid)
-
-
-def alter_iceberg_sort_order(
-    root: str, sort_by: list[str]
-) -> int:
-    """Declare/replace the table's DEFAULT SORT ORDER (``ALTER
-    TABLE ... WRITE ORDERED BY``) — pure metadata: a fresh order-id
-    becomes the default; existing files keep their recorded
-    provenance (their old sort_order_id) and are NOT rewritten;
-    subsequent appends sort by the new order. Returns the new
-    order id."""
-    if not sort_by:
-        raise ValueError("alter_iceberg_sort_order: empty sort_by")
-    while True:
-        meta = load_table_metadata(root)
-        by_name = {
-            f["name"]: f for f in _current_schema_fields(meta)
-        }
-        for c in sort_by:
-            if c not in by_name:
-                raise ValueError(f"sort column {c!r} not in schema")
-            if not isinstance(by_name[c]["type"], str):
-                raise IcebergProtocolError(
-                    f"cannot sort on nested column {c!r}"
-                )
-        orders = list(meta.get("sort-orders") or [])
-        if not any(o.get("order-id") == 0 for o in orders):
-            orders.append({"order-id": 0, "fields": []})
-        new_id = max(o.get("order-id", 0) for o in orders) + 1
-        orders.append(
-            {
-                "order-id": new_id,
-                "fields": [
-                    {
-                        "transform": "identity",
-                        "source-id": by_name[c]["id"],
-                        "direction": "asc",
-                        "null-order": "nulls-first",
-                    }
-                    for c in sort_by
-                ],
-            }
-        )
-        meta["sort-orders"] = orders
-        meta["default-sort-order-id"] = new_id
-        if _try_commit_metadata(root, meta):
-            return new_id
 
 
 def _spec_avro_fields(meta: dict, spec_id: int) -> list[dict]:

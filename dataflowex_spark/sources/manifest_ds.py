@@ -43,10 +43,8 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 
@@ -216,98 +214,6 @@ class TickerDataSource(DataSource):
             int(self.options.get("rowsPerBatch", 100)),
             int(self.options.get("nTypes", 5)),
         )
-
-
-# ---------------------------------------------------------------------
-# writer side: write-final + commit-by-manifest (transactional sink)
-# ---------------------------------------------------------------------
-
-
-class _FileCommit(WriterCommitMessage):
-    def __init__(self, path: str, rows: int):
-        self.path = path
-        self.rows = rows
-
-
-class _ManifestWriter(DataSourceWriter):
-    """Per-task: write one parquet file UNDER ITS FINAL NAME (a fresh
-    uuid — no two attempts ever collide) directly into the target
-    directory, and return that path as the commit message. Driver-side
-    ``commit`` performs NO data movement: it only cuts the manifest
-    over exactly the task-reported files (one atomic ``os.replace`` of
-    the small manifest file). Readers through
-    :class:`ManifestParquetDataSource` read ONLY manifest-listed files,
-    so uncommitted data files are invisible by construction — the
-    manifest cut IS the commit point. This is the protocol every
-    exactly-once object-store sink reduces to (Iceberg/Delta shape:
-    tasks write immutable uniquely-named files to final locations;
-    the metadata swap is the only atomic step), and unlike a
-    driver-side rename of staged files it works when the driver and
-    executors do NOT share a filesystem — the driver never touches a
-    data file. A failed job (``abort``) best-effort deletes the
-    reported files; any orphans it misses are inert garbage outside
-    the manifest, removable by vacuum."""
-
-    def __init__(self, path: str, schema):
-        self.path = path
-        self.schema = schema
-
-    def write(self, iterator):
-        import os
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        os.makedirs(self.path, exist_ok=True)
-        out = os.path.join(self.path, f"part-{uuid.uuid4().hex}.parquet")
-        arrow_schema = to_arrow_schema(self.schema)
-        rows = [tuple(r) for r in iterator]
-        table = pa.Table.from_arrays(
-            [
-                pa.array([r[i] for r in rows], type=arrow_schema.field(i).type)
-                for i in range(len(arrow_schema))
-            ],
-            schema=arrow_schema,
-        )
-        pq.write_table(table, out)
-        return _FileCommit(out, len(rows))
-
-    def commit(self, messages) -> None:
-        import os
-
-        files = [m.path for m in messages if m is not None]
-        write_manifest(sorted(files), os.path.join(self.path, "_MANIFEST"))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages or []:
-            if m is not None and os.path.exists(m.path):
-                os.unlink(m.path)
-
-
-class ManifestParquetWriteSource(DataSource):
-    """``df.write.format("manifest_parquet_write").save(dir)`` —
-    tasks write uniquely-named parquet files to their final location;
-    the job commit atomically cuts ``_MANIFEST`` over them (no
-    driver-side file moves — cluster/object-store safe); read the
-    committed set back with
-    ``spark.read.format("manifest_parquet").load(dir + "/_MANIFEST")``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "manifest_parquet_write"
-
-    def writer(self, schema, overwrite: bool):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError(
-                "manifest_parquet_write: pass the target dir via .save(path)"
-            )
-        return _ManifestWriter(path, schema)
 
 
 # ---------------------------------------------------------------------

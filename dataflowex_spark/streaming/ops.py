@@ -515,37 +515,6 @@ def run_foreach_batch(
     )
 
 
-def upsert_sink(
-    stream_df: DataFrame,
-    path: str,
-    key: str,
-    checkpoint_dir: str | None = None,
-) -> int:
-    """Idempotent keyed streaming sink: each micro-batch lands through
-    :func:`dataflowex_spark.sources.incremental_append` (anti-join on
-    ``key`` against the existing table, probe pruned to the batch's
-    key range), so replayed/overlapping batches — foreachBatch is
-    at-least-once after recovery — cannot duplicate rows. Each batch
-    publishes through the stage-then-rename commit of
-    ``sources.atomic_append``: a crash before commit lands nothing, a
-    torn commit heals on the replayed batch's anti-join. This is the
-    streaming DbBulkInserter-with-merge analog
-    [R: Gridsum.DataflowEx/Databases/DbBulkInserter.cs].
-
-    Runs with availableNow (drain everything, then stop); returns the
-    number of rows appended across all batches.
-    """
-    from dataflowex_spark.sources import incremental_append
-
-    appended = {"n": 0}
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        appended["n"] += incremental_append(batch_df, path, key)
-
-    run_foreach_batch(stream_df, handle, checkpoint_dir)
-    return appended["n"]
-
-
 def stateful_dispatch_counts(
     events: DataFrame,
     key_col: str = "event_type",
@@ -690,67 +659,6 @@ def read_agg_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     if name is None:
         return None
     return spark.read.parquet(os.path.join(pointer.root, name))
-
-
-def enrich_with_dim_parking(
-    stream_df: DataFrame,
-    dim_path: str,
-    on: str,
-    out_path: str,
-    park_path: str,
-    checkpoint: str | None = None,
-):
-    """Stream enrichment with LATE-ARRIVING DIMENSIONS — the parking-
-    lot pattern: each micro-batch joins against the CURRENT dimension
-    snapshot (re-read per trigger, so dim rows that arrive mid-stream
-    are picked up); matched events publish to ``out_path``, unmatched
-    events PARK, and every batch retries the parked rows against the
-    fresh dimension before processing its own. An event is published
-    exactly once — when its dimension row finally exists — instead of
-    being dropped (inner join) or emitted half-empty (left join).
-
-    Commit protocol mirrors :func:`incremental_agg_sink`: the parked
-    set is versioned per batch id with an atomic ``_LATEST`` pointer,
-    and output batches write to batch-id-keyed subdirectories with
-    overwrite — both sides idempotent under at-least-once replays.
-
-    Scale shape: per trigger cost is (batch + parked) ⋈ dim — the
-    parked set stays bounded by genuinely-late keys, and the dim side
-    broadcasts. Drains with availableNow and returns (query, handler);
-    the query has already finished."""
-    pointer = _LatestPointer(park_path)
-    root = pointer.root
-    os.makedirs(root, exist_ok=True)
-    os.makedirs(out_path, exist_ok=True)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_name = pointer.committed()
-        if batch_id <= last_id:
-            return
-        spark = batch_df.sparkSession
-        try:
-            dim = spark.read.parquet(dim_path)
-        except Exception:
-            dim = None  # dimension table not born yet: park everything
-        pending = batch_df
-        if last_name is not None:
-            parked = spark.read.parquet(os.path.join(root, last_name))
-            pending = parked.unionByName(batch_df)
-        if dim is not None:
-            matched = pending.join(F.broadcast(dim), on)
-            unmatched = pending.join(F.broadcast(dim), on, "left_anti")
-        else:
-            matched, unmatched = None, pending
-        if matched is not None:
-            matched.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch_{batch_id}")
-            )
-        vname = f"park_v{batch_id}"
-        unmatched.write.mode("overwrite").parquet(os.path.join(root, vname))
-        pointer.commit(vname)
-
-    query = run_foreach_batch(stream_df, handle, checkpoint or None, "update")
-    return query, handle
 
 
 def drift_monitor_stream(

@@ -17,7 +17,9 @@ class cannot ship again:
   caught all seven r6 leaks before any driver window;
 - the comparator itself flags dtype-class mismatches and nested
   cells (unit-pinned on synthetic frames, so a regression in the
-  lint logic is a test failure, not a silent re-blinding).
+  lint logic is a test failure, not a silent re-blinding);
+- no top-level package definition is reached only from tests unless
+  ``TEST_ONLY`` says why it stays.
 
 The registry-wide NESTED-OUTPUT scan (build all 390 Spark plans,
 assert no array/map/struct output column) costs ~4 min, so it runs
@@ -28,14 +30,18 @@ pytest too.
 
 from __future__ import annotations
 
+import ast
 import os
+import re
 import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from tools.selfcheck import (  # noqa: E402
     compare,
@@ -139,3 +145,142 @@ def test_selfcheck_refuses_unknown_query_names(monkeypatch, capsys):
     assert capsys.readouterr().err.strip() == (
         "unknown query names: q0_no_such"
     )
+
+
+#: Top-level package definitions that only tests reach, each with the
+#: reason it stays. Anything else that nothing outside ``tests/``
+#: reaches is a twin or dead code: delete it, or list it here.
+TEST_ONLY = {
+    "operators.bpe:bpe_decode": "SURVEY §2 row 'BPE decode'; bpe_encode's round-trip reference",
+    "operators.unigram:unigram_decode_pieces": "the unigram tokenizer's round-trip reference",
+    "operators.jpeg:encode_jpeg": "builds the baseline JPEG fixtures the decoder tests read",
+    "operators.jpeg:encode_jpeg_progressive": "builds the progressive JPEG fixtures the decoder tests read",
+    "operators.mp3:mpeg1_scalefactor_bits": "MPEG-1 bit-allocation reference the parser is checked against",
+    "operators.mp3:lsf_scalefactor_bits": "MPEG-2 LSF bit-allocation reference the parser is checked against",
+    "operators.mp3:check_reservoir": "bit-reservoir chain reference the parser is checked against",
+    "operators.mp3:side_info_features": "SURVEY §2 row 'MP3 Layer III bitstream parser'",
+    "operators.mp3:decode_mp3_pcm": "the refused PCM decode: states and tests why it refuses",
+    "operators.multimodal:read_binary_files": "SURVEY §2-B multimodal columns: binaryFile ingest",
+    "operators.multimodal:resize_images": "SURVEY §2-B multimodal columns: image resize",
+    "operators.multimodal:extract_audio_features": "SURVEY §2 row 'Audio columns'",
+    "operators.multimodal:resample_audio": "SURVEY §2 row 'Audio columns'",
+    "operators.multimodal:probe_mp3": "SURVEY §2 row 'MP3 metadata probe'",
+    "operators.validation:enforce": "the hard data-quality gate (COVERAGE.md)",
+    "sources:read_orc": "SURVEY §2-B scans: ORC, the second at-rest format",
+    "sources:read_text": "SURVEY §2-B scans: raw text ingest for corpus pipelines",
+    "sources:read_jdbc": "SURVEY §2-B scans: JDBC read",
+    "sources:write_batch": "SURVEY §2-A A10 bulk DB sink",
+    "sources:write_jdbc": "SURVEY §2-A A10 bulk DB sink",
+    "sources:write_zordered": "SURVEY §2 row 'Z-order layout'",
+    "sources:clean_staging": "sweeps the orphans a crashed atomic_append leaves",
+    "sources:write_time_partitioned": "time-partitioned layout (COVERAGE.md)",
+    "sources:read_kafka_stream": "SURVEY §2 row 'Kafka wire projection'",
+    "sources:schema_diff": "schema drift detection (COVERAGE.md)",
+    "sources:publish_snapshot": "cross-table atomic publish (COVERAGE.md)",
+    "sources:read_snapshot": "reads what publish_snapshot committed",
+    "sources:read_csv_audited": "audited CSV ingest, SURVEY §2-A A5 routing at the source",
+    "sources.delta_reader:drop_delta_constraint": "SURVEY §2 row 'Delta CHECK constraints'",
+    "sources.iceberg_reader:stage_orc_file": "conformance-fixture writer: one ORC file",
+    "sources.roaring:write_dv_file": "conformance-fixture writer: one deletion-vector file",
+    "streaming.ops:state_metadata": "SURVEY §2 row 'State-store introspection'",
+}
+
+_IDENT = re.compile(r"[A-Za-z_][\w.:]*")
+
+
+def _reached_names(node) -> set[str]:
+    """The identifiers a subtree can reach: names, attributes, imported
+    names, and the parts of identifier-shaped strings (lazy-export
+    tables, ``getattr`` by name)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if _IDENT.fullmatch(n.value):
+                out.update(re.split(r"[.:]", n.value))
+    return out
+
+
+def _is_query(node) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "q"
+        for d in node.decorator_list
+    )
+
+
+def _package_reach():
+    """(definitions, names reached from outside ``tests/``) for the
+    top-level package definitions. Seeds: every file outside the
+    package and the tests, every package statement that is not a
+    definition, and every registered query; a reached name then
+    reaches the bodies of all definitions of that name (fixpoint)."""
+    defs: dict[str, list[tuple[str, set[str]]]] = {}
+    seeds: set[str] = set()
+    for path in sorted(REPO.rglob("*.py")):
+        parts = path.relative_to(REPO).parts
+        if any(p.startswith(".") or p == "tests" for p in parts):
+            continue
+        tree = ast.parse(path.read_text())
+        if parts[0] != "dataflowex_spark":
+            seeds |= _reached_names(tree)
+            continue
+        module = ".".join(parts[1:]).removesuffix(".py")
+        module = module.removesuffix("__init__").rstrip(".")
+        for node in tree.body:
+            body = _reached_names(node)
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                seeds |= body
+            elif _is_query(node):
+                seeds |= body
+            elif not node.name.startswith("__"):
+                defs.setdefault(node.name, []).append((module, body))
+
+    def closure(start: set[str]) -> set[str]:
+        seen: set[str] = set()
+        todo = list(start)
+        while todo:
+            name = todo.pop()
+            if name not in seen:
+                seen.add(name)
+                for _module, body in defs.get(name, ()):
+                    todo.extend(body - seen)
+        return seen
+
+    kept = {key.split(":")[1] for key in TEST_ONLY}
+    return defs, closure(seeds), closure(seeds | kept)
+
+
+def test_no_package_definition_is_reached_only_from_tests():
+    """A top-level definition in ``dataflowex_spark`` that no query,
+    tool, example, benchmark or package statement reaches is a twin of
+    a kept path or dead code. It is deleted, or listed in TEST_ONLY
+    with the reason it stays; a TEST_ONLY entry that is reached from
+    outside the tests, or no longer exists, is dropped from it."""
+    defs, live, live_or_kept = _package_reach()
+    keys = {
+        f"{module}:{name}"
+        for name, sites in defs.items()
+        for module, _body in sites
+    }
+    unreached = sorted(
+        f"{module}:{name}"
+        for name, sites in defs.items()
+        for module, _body in sites
+        if name not in live_or_kept
+    )
+    assert unreached == [], (
+        "package definitions nothing outside tests/ reaches (delete "
+        f"them, or list them in TEST_ONLY with a reason): {unreached}"
+    )
+    stale = sorted(
+        key for key in TEST_ONLY
+        if key not in keys or key.split(":")[1] in live
+    )
+    assert stale == [], f"TEST_ONLY entries to drop: {stale}"

@@ -362,57 +362,6 @@ def test_approx_percentiles_within_rank_error(spark, sf_dir):
             assert abs(rank - target * n) <= n / 1000 + 1, (prio, target)
 
 
-def test_sync_changed_partitions_incremental(spark, tmp_path):
-    """Fingerprint-driven backfill: first run writes everything,
-    an unchanged rerun is a no-op, a point change rewrites ONLY its
-    partition, and the destination converges to the source exactly."""
-    import os
-
-    from dataflowex_spark.sources import sync_changed_partitions
-
-    dst = str(tmp_path / "dst")
-    src1 = spark.createDataFrame(
-        [(d, i, f"v{i}") for d in range(5) for i in range(20)],
-        "day int, id int, payload string",
-    )
-    changed = sync_changed_partitions(src1, dst, "day", ["id", "payload"])
-    assert sorted(changed) == [0, 1, 2, 3, 4]
-
-    # no-op rerun
-    assert sync_changed_partitions(src1, dst, "day", ["id", "payload"]) == []
-
-    # record mtimes, then change one row in day=2
-    def mtimes():
-        out = {}
-        for d in range(5):
-            p = os.path.join(dst, f"day={d}")
-            out[d] = max(
-                os.path.getmtime(os.path.join(p, f))
-                for f in os.listdir(p)
-                if f.endswith(".parquet")
-            )
-        return out
-
-    before = mtimes()
-    src2 = src1.withColumn(
-        "payload",
-        F.when((F.col("day") == 2) & (F.col("id") == 7), "CHANGED")
-        .otherwise(F.col("payload")),
-    )
-    changed = sync_changed_partitions(src2, dst, "day", ["id", "payload"])
-    assert changed == [2]
-    after = mtimes()
-    assert after[2] > before[2]
-    assert all(after[d] == before[d] for d in (0, 1, 3, 4))  # untouched
-
-    got = sorted(
-        (r.day, r.id, r.payload)
-        for r in spark.read.parquet(dst).collect()
-    )
-    want = sorted((r.day, r.id, r.payload) for r in src2.collect())
-    assert got == want
-
-
 def test_bpe_train_and_encode(spark):
     """BPE semantics on a corpus with known statistics: 'ab' is the
     most frequent pair, merges are deterministic, and encoding

@@ -2640,14 +2640,12 @@ def test_checkpoint_after_retention_keeps_protocol(spark, tmp_path):
 
 
 def test_in_commit_timestamps_write_path(spark, tmp_path):
-    """ICT WRITE support (r11, VERDICT item 10): enabling
-    delta.enableInCommitTimestamps — at creation via configuration
-    or later via enable_delta_in_commit_timestamps — makes every
-    commit carry a MONOTONE commitInfo.inCommitTimestamp through the
-    claim funnel; the enablement commit records the spec's
-    EnablementVersion/Timestamp pair equal to its own commit; and
-    version_at_timestamp resolves through the ICTs (mtime-proof:
-    backdating the log files does not change resolution)."""
+    """ICT WRITE support (r11, VERDICT item 10): a table created with
+    delta.enableInCommitTimestamps in its configuration stamps every
+    commit with a MONOTONE commitInfo.inCommitTimestamp through the
+    claim funnel, and version_at_timestamp resolves through the ICTs
+    (mtime-proof: backdating the log files does not change
+    resolution)."""
     import json as _json
     import os as _os
 
@@ -2655,7 +2653,6 @@ def test_in_commit_timestamps_write_path(spark, tmp_path):
         _commit_files,
         _latest_protocol,
         delete_from_delta,
-        enable_delta_in_commit_timestamps,
         read_delta,
         version_at_timestamp,
         write_delta,
@@ -2701,31 +2698,6 @@ def test_in_commit_timestamps_write_path(spark, tmp_path):
     assert version_at_timestamp(r1, t1[1]) == 1
     assert version_at_timestamp(r1, t1[2] + 10) == 2
     assert sorted(r.k for r in read_delta(spark, r1).collect()) == [2]
-
-    # --- enabled LATER: pre-enable commits unstamped, enablement
-    # commit pins the property pair to itself, later commits monotone
-    r2 = str(tmp_path / "upg")
-    write_delta(
-        spark,
-        spark.createDataFrame([(1, 1.0)], "k long, x double"),
-        r2,
-    )
-    ev = enable_delta_in_commit_timestamps(spark, r2)
-    assert ev == 1
-    assert enable_delta_in_commit_timestamps(spark, r2) == ev  # idem
-    write_delta(
-        spark,
-        spark.createDataFrame([(3, 3.0)], "k long, x double"),
-        r2, mode="append",
-    )
-    t2 = icts(r2)
-    assert sorted(t2) == [1, 2] and t2[1] < t2[2]
-    from dataflowex_spark.sources.delta_reader import _snapshot
-    meta, _ = _snapshot(spark, r2, None)
-    conf = meta["configuration"]
-    assert conf["delta.inCommitTimestampEnablementVersion"] == "1"
-    assert int(conf["delta.inCommitTimestampEnablementTimestamp"]) == t2[1]
-    assert sorted(r.k for r in read_delta(spark, r2).collect()) == [1, 3]
 
 
 def test_delta_row_tracking_lifecycle(spark, tmp_path):
@@ -2841,12 +2813,41 @@ def test_delta_row_tracking_lifecycle(spark, tmp_path):
 def test_delta_row_tracking_enable_backfill_and_guards(
     spark, tmp_path
 ):
-    """enable_delta_row_tracking backfills every live file in ONE
-    commit (ids assigned, rcv = the enablement commit, protocol
-    gains rowTracking+domainMetadata); rewrite paths that cannot
-    preserve ids refuse by name; untracked/mapped tables refuse."""
+    """Row tracking enabled at creation: every live file gets ids
+    (rcv = the commit that added it; protocol carries
+    rowTracking+domainMetadata), MERGE and OPTIMIZE keep them, an
+    untracked table refuses row-id reads and creation refuses under
+    column mapping."""
     import dataflowex_spark.sources.delta_reader as dr
 
+    plain = str(tmp_path / "plain")
+    dr.write_delta(spark, spark.range(3).selectExpr("id as k"), plain)
+    with pytest.raises(dr.DeltaProtocolError, match="enableRowTracking"):
+        dr.read_delta_row_ids(spark, plain)
+    # another writer enables it later (v1 re-adds the files with
+    # baseRowIds): a restore to v0 would bring back id-less files
+    with open(os.path.join(plain, "_delta_log", f"{0:020d}.json")) as f:
+        v0 = [json.loads(ln) for ln in f if ln.strip()]
+    v1 = [{"metaData": {**a["metaData"], "configuration": {
+        **(a["metaData"].get("configuration") or {}),
+        "delta.enableRowTracking": "true",
+        "delta.rowTracking.materializedRowIdColumnName": "_rid",
+        "delta.rowTracking.materializedRowCommitVersionColumnName": "_rcv",
+    }}} for a in v0 if "metaData" in a]
+    next_id = 0
+    for a in v0:
+        if "add" in a:
+            n = json.loads(a["add"]["stats"])["numRecords"]
+            v1.append({"add": {**a["add"], "dataChange": False,
+                               "baseRowId": next_id,
+                               "defaultRowCommitVersion": 1}})
+            next_id += n
+    with open(os.path.join(plain, "_delta_log", f"{1:020d}.json"), "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in v1))
+    assert sorted(r._row_id for r in dr.read_delta_row_ids(
+        spark, plain).collect()) == [0, 1, 2]
+    with pytest.raises(dr.DeltaProtocolError, match="predates"):
+        dr.restore_delta(spark, plain, 0)
     root = str(tmp_path / "t")
     dr.write_delta(
         spark,
@@ -2854,6 +2855,7 @@ def test_delta_row_tracking_enable_backfill_and_guards(
         .selectExpr("id as k", "cast(id as double) as x")
         .repartition(2),
         root,
+        configuration={"delta.enableRowTracking": "true"},
     )
     dr.write_delta(
         spark,
@@ -2863,17 +2865,13 @@ def test_delta_row_tracking_enable_backfill_and_guards(
         root,
         mode="append",
     )
-    with pytest.raises(dr.DeltaProtocolError, match="enableRowTracking"):
-        dr.read_delta_row_ids(spark, root)
-    v = dr.enable_delta_row_tracking(spark, root)
-    assert dr.enable_delta_row_tracking(spark, root) == v  # idem
     lin = {
         r.k: (r._row_id, r._row_commit_version)
         for r in dr.read_delta_row_ids(spark, root).collect()
     }
     assert len(lin) == 15
     assert len({x[0] for x in lin.values()}) == 15
-    assert all(rcv == v for _, rcv in lin.values())
+    assert all(rcv == (1 if k >= 50 else 0) for k, (_, rcv) in lin.items())
     proto = dr._latest_protocol(root)
     assert set(proto["writerFeatures"]) >= {
         "rowTracking",
@@ -2916,8 +2914,6 @@ def test_delta_row_tracking_enable_backfill_and_guards(
         for r in dr.read_delta_row_ids(spark, root).collect()
     }
     assert lin4 == lin3
-    with pytest.raises(dr.DeltaProtocolError, match="predates"):
-        dr.restore_delta(spark, root, 0)
     # creation refuses under column mapping
     with pytest.raises(dr.DeltaProtocolError, match="columnMapping"):
         dr.write_delta(
@@ -2936,8 +2932,8 @@ def test_delta_clustered_table(spark, tmp_path):
     clustering columns live in the delta.clustering domain +
     clusteredTable writer feature; appends land unclustered and
     OPTIMIZE WITHOUT explicit columns reads the domain (the liquid
-    shape); alter_delta_clustering re-declares metadata-only;
-    cluster/partition overlap refuses."""
+    shape); cluster_by on an existing table and cluster/partition
+    overlap refuse."""
     import dataflowex_spark.sources.delta_reader as dr
 
     root = str(tmp_path / "t")
@@ -2976,12 +2972,13 @@ def test_delta_clustered_table(spark, tmp_path):
         dr.read_delta(spark, root, skip_where=[("a", "=", 5)]).count()
         == 62
     )
-    # alter on a plain table; overlap refuses
+    # clustering is declared at creation only; overlap refuses
     root2 = str(tmp_path / "p")
     dr.write_delta(spark, df, root2)
     assert dr.delta_clustering_columns(root2) == []
-    dr.alter_delta_clustering(spark, root2, ["b"])
-    assert dr.delta_clustering_columns(root2) == ["b"]
+    with pytest.raises(ValueError, match="at table creation"):
+        dr.write_delta(spark, df, root2, mode="append", cluster_by=["b"])
+    assert dr.delta_clustering_columns(root2) == []
     root3 = str(tmp_path / "q")
     with pytest.raises(ValueError, match="overlap"):
         dr.write_delta(

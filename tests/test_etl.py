@@ -841,46 +841,6 @@ def test_manifest_parquet_datasource_reads_exact_file_set(spark, sf_dir, tmp_pat
     assert a == b
 
 
-def test_manifest_writer_two_phase_commit_roundtrip(spark, sf_dir, tmp_path):
-    """The writer DataSource stages per-task files and commits by
-    cutting the manifest atomically: the committed read-back equals
-    the input, staging is drained, and the manifest lists only
-    committed files."""
-    import os
-
-    from dataflowex_spark.sources.manifest_ds import (
-        ManifestParquetDataSource,
-        ManifestParquetWriteSource,
-    )
-
-    for ds in (ManifestParquetDataSource, ManifestParquetWriteSource):
-        try:
-            spark.dataSource.register(ds)
-        except Exception:
-            pass
-
-    src = (
-        spark.read.parquet(f"{sf_dir}/region.parquet")
-        .selectExpr("CAST(r_regionkey AS BIGINT) AS k", "r_name AS name")
-        .repartition(3)
-    )
-    target = str(tmp_path / "mtbl")
-    src.write.format("manifest_parquet_write").mode("overwrite").save(target)
-
-    manifest = os.path.join(target, "_MANIFEST")
-    assert os.path.exists(manifest)
-    listed = [ln.strip() for ln in open(manifest) if ln.strip()]
-    assert all(os.path.exists(p) for p in listed)
-    assert not any("_staging" in p for p in listed)
-    staging = os.path.join(target, "_staging")
-    assert not os.path.isdir(staging) or not os.listdir(staging)
-
-    back = spark.read.format("manifest_parquet").load(manifest)
-    assert {tuple(r) for r in back.collect()} == {
-        tuple(r) for r in src.collect()
-    }
-
-
 def test_mtable_merge_prune_timetravel_vacuum(spark, tmp_path):
     """MTable end-to-end: (1) MERGE applies cdc_merge semantics and
     the new version rewrites ONLY key-range-affected files — every

@@ -3579,101 +3579,6 @@ def test_maintenance_ops_under_conditional_put_backend(spark, tmp_path):
         assert got2 == sorted(i for i in range(30) if i % 5)
 
 
-def test_rest_catalog_commit_backend(spark, tmp_path, monkeypatch):
-    """REST-catalog commit model (r11, VERDICT item 10): the third
-    portability target — exclusivity as a CAS on a service-owned
-    per-table HEAD version (the Iceberg REST catalog's commit
-    endpoint, 409 on conflict) instead of per-object existence. All
-    three formats' writers commit through it unchanged, a simulated
-    lost race replays correctly, and adopting a PRE-EXISTING table
-    bootstraps the head from the directory."""
-    import dataflowex_spark.sources.iceberg_reader as ir
-    from dataflowex_spark.sources.commit_backend import (
-        RestCatalogCommitBackend,
-        commit_backend,
-    )
-    from dataflowex_spark.sources.delta_reader import (
-        delete_from_delta,
-        read_delta,
-        write_delta,
-    )
-    from dataflowex_spark.sources.mtable import MTable
-
-    ice = str(tmp_path / "ice")
-    dl = str(tmp_path / "dl")
-    # pre-existing table created under POSIX — the REST model must
-    # ADOPT it (head bootstraps from the directory listing)
-    ir.write_iceberg(
-        spark,
-        spark.createDataFrame([(0, 0.0)], "k long, x double"),
-        ice,
-    )
-    with commit_backend(RestCatalogCommitBackend()):
-        ir.write_iceberg(
-            spark,
-            spark.createDataFrame(
-                [(i, float(i)) for i in range(1, 10)], "k long, x double"
-            ),
-            ice, mode="append",
-        )
-        ir.delete_from_iceberg(spark, ice, "k % 2 = 1")
-        assert sorted(
-            r.k for r in ir.read_iceberg(spark, ice).collect()
-        ) == [0, 2, 4, 6, 8]
-        write_delta(
-            spark,
-            spark.createDataFrame(
-                [(i, float(i)) for i in range(10)], "k long, x double"
-            ),
-            dl,
-        )
-        delete_from_delta(spark, dl, "k % 2 = 0")
-        assert sorted(
-            r.k for r in read_delta(spark, dl).collect()
-        ) == [1, 3, 5, 7, 9]
-        mt = MTable.create(
-            spark, str(tmp_path / "mt"),
-            spark.createDataFrame([(1, 1.0)], "k long, x double"),
-            key_col="k",
-        )
-        mt.overwrite(
-            spark.createDataFrame(
-                [(1, 1.0), (2, 2.0)], "k long, x double"
-            )
-        )
-        assert mt.read().count() == 2
-        # forced LOST RACE under the REST model: an interleaved
-        # writer advances the head mid-claim; the loser sees the 409
-        # (FileExistsError) and its replay loop lands after
-        real = ir._try_commit_metadata
-        state = {"done": False}
-
-        def racy(root, meta):
-            if not state["done"]:
-                state["done"] = True
-                monkeypatch.setattr(ir, "_try_commit_metadata", real)
-                ir.write_iceberg(
-                    spark,
-                    spark.createDataFrame(
-                        [(777, 7.0)], "k long, x double"
-                    ),
-                    root, mode="append",
-                )
-                monkeypatch.setattr(ir, "_try_commit_metadata", racy)
-                return False
-            return real(root, meta)
-
-        monkeypatch.setattr(ir, "_try_commit_metadata", racy)
-        ir.write_iceberg(
-            spark,
-            spark.createDataFrame([(888, 8.0)], "k long, x double"),
-            ice, mode="append",
-        )
-        monkeypatch.setattr(ir, "_try_commit_metadata", real)
-        got = sorted(r.k for r in ir.read_iceberg(spark, ice).collect())
-        assert got == [0, 2, 4, 6, 8, 777, 888]
-
-
 def test_iceberg_v3_row_lineage_fold(spark, tmp_path):
     """v3 ROW LINEAGE end-to-end (r11): read_iceberg_lineage exposes
     _row_id/_last_updated_sequence_number; ids are assigned once at
@@ -3952,9 +3857,8 @@ def test_iceberg_sort_orders(spark, tmp_path):
     """SORT ORDERS (r11, spec "Sort Orders"): declared at creation
     (sort-orders + default-sort-order-id), appends sort within
     partitions so every data file is internally ordered, entries
-    stamp sort_order_id (carried entries keep provenance),
-    conflicting append sort_by refuses, alter flips the default
-    metadata-only (old files keep their recorded id)."""
+    stamp sort_order_id (carried entries keep provenance), and a
+    conflicting append sort_by refuses."""
     import os
 
     import pyarrow.parquet as pq
@@ -4003,24 +3907,7 @@ def test_iceberg_sort_orders(spark, tmp_path):
         ir.write_iceberg(
             spark, df.limit(1), root, mode="append", sort_by=["x"]
         )
-    # metadata-only re-order: future appends use it, history keeps
-    assert ir.alter_iceberg_sort_order(root, ["x"]) == 2
-    ir.write_iceberg(
-        spark,
-        spark.range(6000, 6100).selectExpr(
-            "id as k",
-            "cast((id * 37) % 997 as long) as a",
-            "cast(id as double) as x",
-        ),
-        root,
-        mode="append",
-    )
-    ids = {
-        r.sort_order_id
-        for r in ir.read_iceberg_meta(spark, root, "files").collect()
-    }
-    assert ids == {1, 2}
-    assert ir.read_iceberg(spark, root).count() == 6100
+    assert ir.read_iceberg(spark, root).count() == 6000
 
 
 def test_table_creations_claim_v1_through_the_backend(spark, tmp_path):

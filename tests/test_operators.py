@@ -1351,29 +1351,6 @@ def test_triangle_count_canonicalizes(spark):
     assert (row0.n_edges, row0.n_triangles) == (0, 0)
 
 
-def test_triangle_degree_ordered_equivalence(spark):
-    """Degree-ordered triangle enumeration returns EXACTLY the
-    id-ordered count on random graphs (including one with a hub node,
-    the case the orientation exists for)."""
-    import random
-
-    from dataflowex_spark.operators.graph import (
-        triangle_count,
-        triangle_count_degree_ordered,
-    )
-
-    rng = random.Random(3)
-    rand_edges = [
-        (rng.randint(1, 40), rng.randint(1, 40)) for _ in range(300)
-    ]
-    hub_edges = [(0, i) for i in range(1, 41)]  # hub connects everyone
-    df = spark.createDataFrame(rand_edges + hub_edges, "src int, dst int")
-    a = triangle_count(df).collect()[0]
-    b = triangle_count_degree_ordered(df).collect()[0]
-    assert (a.n_edges, a.n_triangles) == (b.n_edges, b.n_triangles)
-    assert a.n_triangles > 0
-
-
 def test_chunk_tokens_reconstruction_property(spark):
     """Coverage property: dropping the first `overlap` tokens of every
     chunk after the first reconstructs the document's token stream
@@ -1416,11 +1393,7 @@ def test_bloom_prefilter_no_false_negatives_and_prunes(spark, sf_dir):
     (c) fill ratio stays in the sized-for regime."""
     from pyspark.sql import functions as F
 
-    from dataflowex_spark.operators.bloom import (
-        bloom_build,
-        bloom_prefilter,
-        bloom_prefilter_join,
-    )
+    from dataflowex_spark.operators.bloom import bloom_build, bloom_prefilter
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     hi = (
@@ -1453,16 +1426,6 @@ def test_bloom_prefilter_no_false_negatives_and_prunes(spark, sf_dir):
         hi.withColumnRenamed("o_orderkey", "k"), "k", bf
     ).count()
     assert keys_through == bf.n_items
-
-
-def test_bloom_prefilter_join_rejects_outer(spark):
-    import pytest as _pytest
-
-    from dataflowex_spark.operators.bloom import bloom_prefilter_join
-
-    df = spark.range(5).withColumnRenamed("id", "k")
-    with _pytest.raises(ValueError):
-        bloom_prefilter_join(df, df, "k", how="left")
 
 
 def test_predict_join_rows_exact_all_variants(spark):
@@ -4148,12 +4111,15 @@ def test_merkle_tree_localizes_single_mutation(spark):
     assert diff == {(0, 5), (1, 1), (2, 0)}
 
 
-def test_hilbert_key_matches_reference_and_locality(spark):
-    """with_hilbert_key == the classic xy2d reference for every cell
-    of a 16×16 grid, is a bijection, and beats Morton on locality:
-    consecutive Hilbert positions are always distance-1 neighbors
-    (Morton jumps at quadrant seams)."""
-    from dataflowex_spark.sources import with_hilbert_key
+def test_hilbert_key_matches_reference_and_locality():
+    """hilbert_key_np (q379's key) == the classic xy2d reference for
+    every cell of a 16×16 grid, is a bijection, and beats Morton on
+    locality: consecutive Hilbert positions are always distance-1
+    neighbors (Morton jumps at quadrant seams). morton_key_np is
+    pinned to a plain bit interleave on the same grid."""
+    import numpy as np
+
+    from dataflowex_spark.sources import hilbert_key_np, morton_key_np
 
     bits = 4
     n = 1 << bits
@@ -4172,13 +4138,10 @@ def test_hilbert_key_matches_reference_and_locality(spark):
             s >>= 1
         return d
 
-    grid = spark.createDataFrame(
-        [(x, y) for x in range(n) for y in range(n)], "x long, y long"
-    )
-    got = {
-        (r["x"], r["y"]): r["hkey"]
-        for r in with_hilbert_key(grid, "x", "y", bits=bits).collect()
-    }
+    gx = np.array([x for x in range(n) for _ in range(n)], dtype=np.int64)
+    gy = np.array([y for _ in range(n) for y in range(n)], dtype=np.int64)
+    hk = hilbert_key_np(gx, gy, bits=bits)
+    got = {(int(a), int(b)): int(d) for a, b, d in zip(gx, gy, hk)}
     assert got == {(x, y): xy2d(x, y) for x in range(n) for y in range(n)}
     # bijection over the full grid
     assert sorted(got.values()) == list(range(n * n))
@@ -4187,20 +4150,6 @@ def test_hilbert_key_matches_reference_and_locality(spark):
     for d in range(n * n - 1):
         (x1, y1), (x2, y2) = pos[d], pos[d + 1]
         assert abs(x1 - x2) + abs(y1 - y2) == 1, (d, pos[d], pos[d + 1])
-
-    # the numpy driver-side twins (q379's bounded cell replay) are
-    # pinned against the SAME reference grid, so the Spark unrolling
-    # and the vectorized copy cannot drift independently (r12 ADVICE)
-    import numpy as np
-
-    from dataflowex_spark.sources import hilbert_key_np, morton_key_np
-
-    gx = np.array([x for x in range(n) for _ in range(n)], dtype=np.int64)
-    gy = np.array([y for _ in range(n) for y in range(n)], dtype=np.int64)
-    hk = hilbert_key_np(gx, gy, bits=bits)
-    assert {(int(a), int(b)): int(d) for a, b, d in zip(gx, gy, hk)} == {
-        (x, y): xy2d(x, y) for x in range(n) for y in range(n)
-    }
 
     def interleave(x, y):
         out = 0
@@ -4255,49 +4204,6 @@ def test_reconcile_protocol_end_to_end(spark):
     )
     assert got == want
     assert reconcile(a, a, "k") == []
-
-
-def test_column_lineage(spark, sf_dir):
-    """column_lineage: computed/joined/aggregated/exploded/unioned
-    columns trace to their exact parquet leaf columns; join keys and
-    filters don't pollute value lineage."""
-    from dataflowex_spark.catalog import Catalog
-    from dataflowex_spark.plans import column_lineage
-
-    cat = Catalog(spark, sf_dir)
-    df = (
-        cat["lineitem"]
-        .select(
-            "l_orderkey",
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "net"
-            ),
-        )
-        .join(
-            cat["orders"].select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("net").alias("total"))
-    )
-    lin = column_lineage(df)
-    assert lin["o_custkey"] == {("orders", "o_custkey")}
-    assert lin["total"] == {
-        ("lineitem", "l_extendedprice"),
-        ("lineitem", "l_discount"),
-    }
-
-    # explode + union
-    ex = cat["documents"].select(
-        F.explode(F.split("text", " ")).alias("tok")
-    ).unionByName(
-        cat["customer"].select(F.col("c_name").alias("tok"))
-    )
-    lin2 = column_lineage(ex)
-    assert lin2["tok"] == {
-        ("documents", "text"),
-        ("customer", "c_name"),
-    }
 
 
 def test_multi_source_bfs_path_graph(spark):

@@ -12,6 +12,7 @@ from pathlib import Path
 import pytest
 
 from dataflowex_spark.pyworker import worker_path
+from dataflowex_spark.session import PACKAGE_PARENT, configure
 
 REPO = Path(__file__).resolve().parent.parent
 VERSION = b"__version__: str = '4.1.2'\n"
@@ -151,3 +152,51 @@ def test_workers_find_the_daemon_from_a_foreign_cwd(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert "ROWS [0, 2, 4, 6]" in out.stdout, out.stderr[-3000:]
+
+
+def test_configure_leaves_a_get_spark_sessions_worker_env_as_it_was(spark):
+    """``get_spark`` (through ``configure``) put the package's parent in
+    the workers' env, so a later ``configure`` (every ``Catalog`` makes
+    one) changes nothing there and the session keeps its worker pool
+    (Spark keys a pool by that env)."""
+    env = spark.sparkContext.environment
+    assert PACKAGE_PARENT in env["PYTHONPATH"].split(os.pathsep)
+    before = dict(env)
+    configure(spark)
+    assert spark.sparkContext.environment == before
+
+
+FOREIGN = """
+import sys
+
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+sys.path.insert(0, {repo!r})
+import __spark_entry__ as e
+
+assert e.entry(spark).count() > 0
+print("ROWS", e.queries()["q202_image_phash_dedup"](spark, {sf!r}).count())
+spark.stop()
+"""
+
+
+def test_a_foreign_session_runs_package_udfs_from_a_foreign_cwd(
+    tmp_path, sf_dir
+):
+    """A caller's own session (none of ``get_spark``'s confs), started
+    from a directory that does not hold the package, with no
+    PYTHONPATH: q202's package UDFs unpickle on the workers, because
+    ``configure`` ships the package's parent in the session's Python
+    environment."""
+    script = tmp_path / "job.py"
+    script.write_text(FOREIGN.format(repo=str(REPO), sf=sf_dir))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = [ln for ln in out.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert rows and int(rows[0].split()[1]) > 0, out.stdout[-2000:]

@@ -8,6 +8,7 @@ drop, stateful dedup).
 """
 
 import os
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -232,33 +233,6 @@ def test_stream_static_dim_join(spark, sf_dir):
     total = Catalog(spark, sf_dir)["events"].count()
     assert out.count() == total
     assert out.filter(F.col("user_tag").isNull()).count() == 0
-
-
-def test_upsert_sink_idempotent_across_replay(spark, sf_dir, tmp_path):
-    """foreachBatch + incremental_append: draining the same stream
-    twice (simulated at-least-once redelivery) appends nothing new."""
-    from dataflowex_spark.streaming.ops import file_replay_stream, upsert_sink
-
-    path = str(tmp_path / "upsert")
-    stream = file_replay_stream(spark, f"{sf_dir}/events.parquet", n_chunks=4)
-    n1 = upsert_sink(
-        stream.select("event_id", "user_id", "event_type"),
-        path,
-        key="event_id",
-        checkpoint_dir=str(tmp_path / "ck1"),
-    )
-    total = spark.read.parquet(path).count()
-    assert n1 == total > 0
-    # full replay from a fresh checkpoint → every batch re-delivered
-    stream2 = file_replay_stream(spark, f"{sf_dir}/events.parquet", n_chunks=4)
-    n2 = upsert_sink(
-        stream2.select("event_id", "user_id", "event_type"),
-        path,
-        key="event_id",
-        checkpoint_dir=str(tmp_path / "ck2"),
-    )
-    assert n2 == 0
-    assert spark.read.parquet(path).count() == total
 
 
 def test_interval_join_left_outer_semantics(spark, sf_dir):
@@ -568,65 +542,6 @@ def test_incremental_agg_sink_exactly_once(spark, sf_dir, tmp_path):
         for r in read_agg_state(spark, str(tmp_path / "state")).collect()
     }
     assert again == want
-
-
-def test_enrich_parking_late_dimension(spark, tmp_path):
-    """Parking lot: events whose dim row doesn't exist yet park and
-    publish exactly once after the dimension grows; replayed batches
-    are no-ops."""
-    import os
-
-    from dataflowex_spark.streaming.ops import enrich_with_dim_parking
-
-    dim_path = str(tmp_path / "dim")
-    out_path = str(tmp_path / "out")
-    park_path = str(tmp_path / "park")
-
-    # dimension knows keys 0..4 only; keys 5..9 arrive "late"
-    spark.createDataFrame(
-        [(k, f"seg{k}") for k in range(5)], "k long, seg string"
-    ).write.parquet(dim_path)
-
-    events = spark.createDataFrame(
-        [(i, i % 10) for i in range(100)], "event_id long, k long"
-    )
-    # drive the handler directly (simpler than a real stream and
-    # exercises the identical code path foreachBatch calls)
-    _, handle = None, None
-    stage = tmp_path / "stage"
-    events.write.parquet(str(stage))
-    stream = spark.readStream.schema(events.schema).parquet(str(stage))
-    q, handle = enrich_with_dim_parking(
-        stream, dim_path, "k", out_path, park_path,
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    published = spark.read.parquet(os.path.join(out_path, "*"))
-    assert published.count() == 50  # keys 0..4 matched
-    parked = spark.read.parquet(
-        os.path.join(park_path, open(park_path + "/_LATEST").read().strip())
-    )
-    assert parked.count() == 50  # keys 5..9 waiting
-
-    # dimension catches up; next batch (manual handler call) retries
-    spark.createDataFrame(
-        [(k, f"seg{k}") for k in range(5, 10)], "k long, seg string"
-    ).write.mode("append").parquet(dim_path)
-    empty = spark.createDataFrame([], "event_id long, k long")
-    handle(empty, 10_000)
-
-    published = spark.read.parquet(os.path.join(out_path, "*"))
-    assert published.count() == 100  # everyone enriched exactly once
-    assert published.select("event_id").distinct().count() == 100
-    parked = spark.read.parquet(
-        os.path.join(park_path, open(park_path + "/_LATEST").read().strip())
-    )
-    assert parked.isEmpty()
-
-    # replay of an old batch id: no-op
-    handle(events, 0)
-    assert spark.read.parquet(os.path.join(out_path, "*")).count() == 100
 
 
 def test_drift_monitor_stream_per_batch_equals_batch(spark, sf_dir, tmp_path):
@@ -1880,10 +1795,12 @@ def test_stateful_drain_does_not_fork_per_checkpoint_file(
 
 
 class _StubSession:
-    """Only the ``spark.conf.get/set`` that ``configure`` calls."""
+    """Only the ``spark.conf.get/set`` and the
+    ``spark.sparkContext.environment`` that ``configure`` uses."""
 
     def __init__(self, **values):
         self.conf, self.values = self, dict(values)
+        self.sparkContext = SimpleNamespace(environment={})
 
     def get(self, key, default=None):
         return self.values.get(key, default)

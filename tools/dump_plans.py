@@ -12,7 +12,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from dataflowex_spark.session import get_spark  # noqa: E402
 from dataflowex_spark import queries as _q  # noqa: E402

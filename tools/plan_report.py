@@ -8,9 +8,11 @@ Python in relational paths, filters reaching the scans).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from dataflowex_spark.session import get_spark  # noqa: E402
 from dataflowex_spark import queries as Q  # noqa: E402
@@ -46,7 +48,7 @@ def main() -> None:
             lines.append(
                 f"| {name} | — | — | — | — | — | ({type(e).__name__}) | — |"
             )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(lines)} lines)")
     spark.stop()
